@@ -2,33 +2,101 @@
 
 Spark-first rendition of the reference write engine (GraphLite
 `graphlite/src/exec/write_engine/operations/{insert,match_set,
-match_delete,match_remove}.rs`): mutations compile to joins against the
-matched-id set and produce NEW node/edge DataFrames (copy-on-write),
-which is also what makes transactions cheap — START TRANSACTION simply
-snapshots the table dict, ROLLBACK restores it (optimistic, last-writer
--wins; the reference's interactive isolation levels don't map 1:1 and
-this divergence is documented in README).
+match_delete,match_remove}.rs`), copy-on-write through one path: a
+statement stages the new DataFrame of each table it touches (INSERT
+union, SET/REMOVE rewrite, DELETE anti-join, DETACH's incident edge
+tables); ``commit`` checkpoints each once, cutting its lineage, and
+publishes them together only after all succeeded, so a statement that
+raises changes no table. What it reports (rows_affected, duplicates,
+the incident edges a plain DELETE refuses) are ``observe`` metrics
+riding those checkpoints. START TRANSACTION snapshots the table dict,
+ROLLBACK restores it (optimistic, last-writer-wins; the reference's
+interactive isolation levels don't map 1:1, see README).
 """
 
 from __future__ import annotations
 
+from collections import ChainMap
+from dataclasses import replace
 from typing import Any
 
+from pyspark.sql import DataFrame, Observation
 from pyspark.sql import functions as F
+from pyspark.sql import types as T
 
 from .catalog import content_hash_id
-from .graph import DST, ID, SRC, PropertyGraph
+from .graph import DST, ID, SRC, EdgeType, PropertyGraph
 from .gql import ast as A
-from .gql.compiler import CompileError, ExprCompiler, QueryCompiler, _ncol
+from .gql.compiler import (CompileError, ExprCompiler, Frame, QueryCompiler,
+                           _ncol)
 from .gql.statements import InsertStmt, MatchMutateStmt
+from .operators.common import _ck_cut_stats
+
+# helper columns of staged frames: matched node id and its SET value,
+# matched edge endpoints; none survives into a published table
+_TID, _VAL, _SRC, _DST = "__tid", "__val", "__src", "__dst"
 
 
 class DmlError(ValueError):
     pass
 
 
+class Staged:
+    """One statement's new tables, not yet published: ``nodes``/``edges``
+    read through to the graph's, and a table staged twice composes both
+    rewrites. ``checks`` run on the metrics before anything publishes."""
+
+    def __init__(self, graph: PropertyGraph):
+        self.graph = graph
+        self.nodes = ChainMap({}, graph.nodes)
+        self.edges = ChainMap({}, graph.edges)
+        self.checks: list = []
+        self._observations: list[Observation] = []
+
+    def observe(self, df: DataFrame, metric) -> tuple[DataFrame, str]:
+        """``df`` with ``metric`` attached, and its name in ``commit``'s
+        result. A metric only inside a join's broadcast side may never be
+        computed: the optimizer drops a side it proves empty."""
+        name = f"m{len(self._observations)}"
+        self._observations.append(Observation())
+        return df.observe(self._observations[-1], metric.alias(name)), name
+
+
+def commit(graph: PropertyGraph, staged: Staged) -> dict:
+    """Publish every table ``staged`` holds, or none of them; return the
+    observed metrics by name.
+
+    Each staged table is checkpointed once, eagerly, with Catalyst's
+    size stats reset (``_ck_cut_stats``); the metrics ride those jobs.
+    Uncut, n mutations build an n-deep plan of the MUTATIONS' OWN PLANS
+    that every later statement re-executes while the non-CBO join-stats
+    product compounds per level (11 single-edge inserts once took 430 s;
+    a SET-only history doubled the Person plan with every SET). DML
+    frames are small: the cut costs milliseconds and keeps every
+    statement O(current data), not O(history)."""
+    nodes = {label: _cut(df, graph.nodes.get(label))
+             for label, df in staged.nodes.maps[0].items()}
+    edges = {name: replace(et, df=_cut(et.df, graph.edges[name].df
+                                       if name in graph.edges else None))
+             for name, et in staged.edges.maps[0].items()}
+    metrics = {k: v for o in staged._observations for k, v in o.get.items()}
+    for check in staged.checks:
+        check(metrics)
+    graph.nodes.update(nodes)
+    graph.edges.update(edges)
+    return metrics
+
+
+def _cut(df: DataFrame, old: DataFrame | None) -> DataFrame:
+    # an append adds partitions: hold the table at the count it had, or
+    # a long insert history splits every scan into ever more tiny tasks
+    if old is not None:
+        df = df.coalesce(max(1, old.rdd.getNumPartitions()))
+    return _ck_cut_stats(df)
+
+
 def _literal_props(props: dict[str, A.Expr], params: dict,
-                   spark=None) -> dict[str, Any]:
+                   spark) -> dict[str, Any]:
     """Evaluate INSERT/SET property values: literals and parameters
     directly; any other *constant* expression (function calls, arithmetic
     — function_expression_insert_test.rs allows e.g. upper('x'),
@@ -43,13 +111,9 @@ def _literal_props(props: dict[str, A.Expr], params: dict,
             out[k] = params.get(v.name)
         elif isinstance(v, A.Unary) and v.op == "-" and isinstance(v.operand, A.Literal):
             out[k] = -v.operand.value
-        elif spark is not None:
-            pending[k] = v
         else:
-            raise DmlError("INSERT property values must be literals or parameters")
+            pending[k] = v
     if pending:
-        from .gql.compiler import Frame
-
         frame = Frame(spark.range(1))
         cols = []
         for k, v in pending.items():
@@ -72,46 +136,23 @@ def execute_insert(graph: PropertyGraph, stmt: InsertStmt,
     labels+props (insert.rs:87-135 recipe), which makes identical-content
     inserts idempotent: a duplicate node/edge is skipped with a warning
     and rows_affected 0, the behavior pinned by the reference's
-    duplicate_insert_test.rs / duplicate_edge_warning_test.rs. Appends
-    build new DataFrames (unionByName with missing-column fill) — at
-    scale these become Delta appends; here copy-on-write frames."""
+    duplicate_insert_test.rs / duplicate_edge_warning_test.rs."""
     params = params or {}
-    spark = graph.spark
-    n_affected = 0
-    gt = graph.graph_type
+    stage = Staged(graph)
+    inserted: list[tuple[str, str]] = []  # (metric, duplicate warning)
     for pat in stmt.patterns:
         elems = pat.elements
-        node_ids: list[str] = []
+        node_ids: list = []
         node_labels: list[str] = []
         # nodes first
         for el in elems[::2]:
             if not el.labels:
                 raise DmlError("INSERT node needs a label")
-            label = el.labels[0]
-            props = _literal_props(el.props, params, graph.spark)
-            if gt is not None:
-                gt.validate_node(el.labels, props)
-            nid = content_hash_id(el.labels, props)
-            if label in graph.nodes:
-                nid = _fit_id(graph.nodes[label], nid)
+            nid, n = _stage_node(stage, el, params)
             node_ids.append(nid)
-            node_labels.append(label)
-            row = {"_id": nid, **props}
-            if label in graph.nodes:
-                old = graph.nodes[label]
-                if old.filter(
-                    F.col("_id") == F.lit(nid)
-                ).limit(1).count() > 0:
-                    if warnings is not None:
-                        warnings.append(
-                            f"Duplicate node detected (content hash {nid}); "
-                            "insert skipped"
-                        )
-                    continue
-                graph.nodes[label] = _union_fill(old, spark.createDataFrame([row]))
-            else:
-                graph.add_nodes(label, spark.createDataFrame([row]), "_id")
-            n_affected += 1
+            node_labels.append(el.labels[0])
+            inserted.append((n, f"Duplicate node detected (content hash "
+                                f"{nid}); insert skipped"))
         # then edges
         for i, el in enumerate(elems[1::2]):
             etype = el.types[0] if el.types else None
@@ -119,134 +160,114 @@ def execute_insert(graph: PropertyGraph, stmt: InsertStmt,
                 raise DmlError("INSERT edge needs a type")
             props = _literal_props(el.props, params, graph.spark)
             src_i, dst_i = (i, i + 1) if el.direction != "in" else (i + 1, i)
-            if gt is not None:
-                gt.validate_edge(
-                    etype, node_labels[src_i], node_labels[dst_i], props
-                )
-            row = {"_src": node_ids[src_i], "_dst": node_ids[dst_i], **props}
-            if etype in graph.edges:
-                et = graph.edges[etype]
-                if _row_exists(et.df, row):
-                    if warnings is not None:
-                        warnings.append(
-                            f"Duplicate edge detected "
-                            f"({node_ids[src_i]})-[:{etype}]->"
-                            f"({node_ids[dst_i]}); insert skipped"
-                        )
-                    continue
-                et.df = _union_fill(et.df, spark.createDataFrame([row]))
-            else:
-                graph.add_edges(
-                    etype, spark.createDataFrame([row]), "_src", "_dst",
-                    node_labels[src_i], node_labels[dst_i],
-                )
-            n_affected += 1
-    return n_affected
+            if graph.graph_type is not None:
+                graph.graph_type.validate_edge(
+                    etype, node_labels[src_i], node_labels[dst_i], props)
+            et = stage.edges.get(etype) or EdgeType(
+                etype, None, node_labels[src_i], node_labels[dst_i])
+            row = {SRC: node_ids[src_i], DST: node_ids[dst_i], **props}
+            stage.edges[etype], n = _append(
+                stage, et, graph.spark.createDataFrame([row]),
+                _stored_match(et.df, row))
+            inserted.append((n, f"Duplicate edge detected ({node_ids[src_i]})"
+                                f"-[:{etype}]->({node_ids[dst_i]}); "
+                                "insert skipped"))
+    metrics = commit(graph, stage)
+    if warnings is not None:
+        warnings.extend(w for m, w in inserted if not metrics[m])
+    return sum(metrics[m] for m, _ in inserted)
 
 
-def _fit_id(existing_df, nid: str):
-    """Fit a content-hash id to the target table's _id type: tables
-    registered with a natural numeric key (graphs built from parquet
-    facts) get the hash folded into a positive long (first 60 bits) so
-    the id column stays one type — appending a string hash to a long
-    column is a latent ANSI cast failure at first execution."""
-    if dict(existing_df.dtypes).get("_id") == "string":
-        return nid
-    return int(nid[:15], 16)
+def _stage_node(stage: Staged, el, params) -> tuple[Any, str]:
+    """Stage the literal node element ``el``; return its id and the name
+    of the metric counting it (0: a duplicate). On a table with a
+    natural numeric key the content hash folds into a positive long
+    (first 60 bits): a string id there is a latent ANSI cast failure."""
+    graph = stage.graph
+    props = _literal_props(el.props, params, graph.spark)
+    if graph.graph_type is not None:
+        graph.graph_type.validate_node(el.labels, props)
+    nid = content_hash_id(el.labels, props)
+    old = stage.nodes.get(el.labels[0])
+    if old is not None and dict(old.dtypes).get(ID) != "string":
+        nid = int(nid[:15], 16)
+    stage.nodes[el.labels[0]], n = _append(
+        stage, old, graph.spark.createDataFrame([{ID: nid, **props}]),
+        F.col(ID) == F.lit(nid))
+    return nid, n
 
 
-def _row_exists(df, row: dict) -> bool:
-    """Content-equality probe: a stored row matches iff every column
-    null-safe-equals the inserted value (columns absent from the insert
-    must be NULL — extra non-null props make a different edge). A value
-    whose Python type can't live in the column's Spark type (string hash
-    vs long endpoint column) means no duplicate is possible — comparing
-    would be an ANSI cast error, not a match."""
-    from pyspark.sql.types import BooleanType, NumericType, StringType
-
-    # An insert carrying a property column the table has never seen can't
-    # equal any stored row — its content hash differs even if every shared
-    # column matches (value.rs content identity covers all properties).
-    if set(row) - set(df.columns):
-        return False
-
-    types = {f.name: f.dataType for f in df.schema.fields}
-    cond = None
-    for c in df.columns:
-        v = row.get(c)
-        if v is None:
-            cc = F.col(c).isNull()
-        else:
-            dt = types[c]
-            ok = (
-                isinstance(dt, StringType) if isinstance(v, str)
-                else isinstance(dt, BooleanType) if isinstance(v, bool)
-                else isinstance(dt, NumericType) if isinstance(v, (int, float))
-                else True
-            )
-            if not ok:
-                return False
-            cc = F.col(c).eqNullSafe(F.lit(v))
-        cond = cc if cond is None else cond & cc
-    return df.filter(cond).limit(1).count() > 0
+def _stored_match(df: DataFrame | None, row: dict):
+    """Condition a stored row of ``df`` meets iff every column null-safe
+    equals ``row``'s value (absent: NULL). None when no stored row can:
+    ``row`` has a column ``df`` lacks (value.rs content identity covers
+    all properties), or a value the column's type can't hold (comparing
+    would be an ANSI cast error, not a match)."""
+    if df is None or set(row) - set(df.columns):
+        return None
+    fits = {str: T.StringType, bool: T.BooleanType,
+            int: T.NumericType, float: T.NumericType}
+    cond = F.lit(True)
+    for f in df.schema.fields:
+        v = row.get(f.name)
+        if type(v) in fits and not isinstance(f.dataType, fits[type(v)]):
+            return None
+        cond &= (F.col(f.name).isNull() if v is None
+                 else F.col(f.name).eqNullSafe(F.lit(v)))
+    return cond
 
 
-def _union_fill(old, new):
-    """unionByName with schema union (new props become NULL on old rows),
-    LINEAGE-CUT: without the cut, n sequential mutations build an
-    n-deep union whose branches are the MUTATIONS' OWN PLANS (a
-    MATCH-INSERT appends its join subtree), so every later statement
-    re-executes all prior mutations and the non-CBO join-stats product
-    compounds per level — measured 11 single-edge inserts taking 430s
-    (~40s each, growing) before the cut, sub-second after. DML frames
-    are small by nature, so the eager checkpoint costs milliseconds
-    and keeps every mutation O(current data), not O(history)."""
-    from .operators.paths import _ck_cut_stats
-
-    return _ck_cut_stats(old.unionByName(new, allowMissingColumns=True))
-
-
-def _compile_matches(graph: PropertyGraph, matches, params):
-    qc = QueryCompiler(graph, params)
-    qc._referenced = {"*"}  # mutations touch entities: no join elision
-    frame = None
-    for m in matches:
-        frame = qc._compile_match(frame, m)
-    if frame is None:
-        raise DmlError("mutation requires a MATCH")
-    return qc, frame
+def _append(stage: Staged, old, new: DataFrame, dup=None):
+    """``old`` (node table, EdgeType or None) plus ``new`` (new props are
+    NULL on old rows), and the name of the metric counting the rows
+    appended. A one-row ``new`` is a duplicate, dropped, if a stored row
+    (the statement's own included; few: broadcast) meets ``dup``."""
+    df = old.df if isinstance(old, EdgeType) else old
+    if df is not None and dup is not None:
+        stored = F.broadcast(df.where(dup).select(F.lit(1).alias("__dup")))
+        new = new.join(stored, how="left_anti")
+    new, n = stage.observe(new, F.count(F.lit(1)))
+    if df is not None:
+        new = df.unionByName(new, allowMissingColumns=True)
+    return (replace(old, df=new) if isinstance(old, EdgeType) else new), n
 
 
 def execute_mutate(graph: PropertyGraph, stmt: MatchMutateStmt,
                    params: dict | None = None) -> int:
     params = params or {}
-    qc, frame = _compile_matches(graph, stmt.matches, params)
-
+    qc = QueryCompiler(graph, params)
+    qc._referenced = {"*"}  # mutations touch entities: no join elision
+    frame = None
+    for m in stmt.matches:
+        frame = qc._compile_match(frame, m)
+    if frame is None:
+        raise DmlError("mutation requires a MATCH")
+    stage = Staged(graph)
     if stmt.action == "SET":
-        total = 0
-        for item in stmt.set_items:
-            total += _apply_set(graph, frame, item, params)
-        return total
-    if stmt.action == "REMOVE":
-        total = 0
-        for var, prop in stmt.remove_items:
-            total += _apply_remove(graph, frame, var, prop)
-        return total
-    if stmt.action in ("DELETE", "DETACH_DELETE"):
-        total = 0
-        for var in stmt.delete_vars:
-            total += _apply_delete(graph, frame, var, detach=stmt.action == "DETACH_DELETE")
-        return total
-    if stmt.action == "INSERT":
-        return _apply_match_insert(graph, frame, stmt.insert_patterns, params)
-    raise DmlError(f"unknown action {stmt.action}")
+        counted = [_stage_set(stage, frame, stmt.matches, item, params)
+                   for item in stmt.set_items]
+    elif stmt.action == "REMOVE":
+        counted = [_stage_remove(stage, frame, stmt.matches, var, prop)
+                   for var, prop in stmt.remove_items]
+    elif stmt.action in ("DELETE", "DETACH_DELETE"):
+        counted = [_stage_delete(stage, frame, var,
+                                 detach=stmt.action == "DETACH_DELETE")
+                   for var in stmt.delete_vars]
+    elif stmt.action == "INSERT":
+        counted = _stage_match_insert(stage, frame, stmt.insert_patterns,
+                                      params)
+    else:
+        raise DmlError(f"unknown action {stmt.action}")
+    metrics = commit(graph, stage)
+    return sum(metrics[m] for m in counted if m is not None)
 
 
-def _apply_match_insert(graph: PropertyGraph, frame, patterns, params) -> int:
+def _stage_match_insert(stage: Staged, frame, patterns, params) -> list:
     """MATCH ... INSERT (a)-[:T {..}]->(b): connect matched nodes
     (match_insert.rs). Node elements must be bound match variables or
-    literal-only new nodes; edges append per distinct endpoint pair."""
-    total = 0
+    literal-only new nodes, staged like INSERT's; edges append per
+    distinct endpoint pair. Returns the names of the counting metrics."""
+    counted = []
     for pat in patterns:
         elems = pat.elements
         id_exprs = []
@@ -261,40 +282,25 @@ def _apply_match_insert(graph: PropertyGraph, frame, patterns, params) -> int:
             else:
                 if not el.labels:
                     raise DmlError("INSERT node needs a label or bound variable")
-                props = _literal_props(el.props, params, graph.spark)
-                nid = content_hash_id(el.labels, props)
-                label = el.labels[0]
-                if label in graph.nodes:
-                    nid = _fit_id(graph.nodes[label], nid)
-                row = {"_id": nid, **props}
-                new_df = graph.spark.createDataFrame([row])
-                if label in graph.nodes:
-                    graph.nodes[label] = _union_fill(graph.nodes[label], new_df)
-                else:
-                    graph.add_nodes(label, new_df, "_id")
+                nid, n = _stage_node(stage, el, params)
+                counted.append(n)
                 id_exprs.append(F.lit(nid))
-                labels.append(label)
-                total += 1
+                labels.append(el.labels[0])
         for i, el in enumerate(elems[1::2]):
             if not el.types:
                 raise DmlError("INSERT edge needs a type")
             etype = el.types[0]
-            props = _literal_props(el.props, params, graph.spark)
+            props = _literal_props(el.props, params, stage.graph.spark)
             src_i, dst_i = (i, i + 1) if el.direction != "in" else (i + 1, i)
-            new_edges = frame.df.select(
+            et = stage.edges.get(etype) or EdgeType(
+                etype, None, labels[src_i], labels[dst_i])
+            stage.edges[etype], n = _append(stage, et, frame.df.select(
                 id_exprs[src_i].alias(SRC),
                 id_exprs[dst_i].alias(DST),
                 *[F.lit(v).alias(k) for k, v in props.items()],
-            ).dropDuplicates([SRC, DST])
-            total += new_edges.count()
-            if etype in graph.edges:
-                et = graph.edges[etype]
-                et.df = _union_fill(et.df, new_edges)
-            else:
-                graph.add_edges(
-                    etype, new_edges, SRC, DST, labels[src_i], labels[dst_i]
-                )
-    return total
+            ).dropDuplicates([SRC, DST]))
+            counted.append(n)
+    return counted
 
 
 def _binding(frame, var):
@@ -304,98 +310,94 @@ def _binding(frame, var):
     return b
 
 
-def _apply_set(graph: PropertyGraph, frame, item, params) -> int:
+def _stage_set(stage: Staged, frame, matches, item, params) -> str:
     b = _binding(frame, item.var)
     if b.kind != "node":
         raise DmlError("SET supports node properties (edge SET: planned)")
     if item.label is not None:
         raise DmlError("SET label is not supported yet")
-    label = b.label
-    if label is None:
+    if b.label is None:
         raise DmlError("SET target must have a known label")
-    ec = ExprCompiler(frame, params)
-    new_vals = (
-        frame.df.select(
-            F.col(_ncol(item.var, ID)).alias("__tid"),
-            ec.compile(item.value).alias("__newval"),
-        )
-        .dropDuplicates(["__tid"])
-    )
-    nodes = graph.nodes[label]
-    joined = nodes.join(new_vals, nodes[ID] == F.col("__tid"), "left")
-    if item.prop in nodes.columns:
-        updated = joined.withColumn(
-            item.prop,
-            F.when(F.col("__tid").isNotNull(), F.col("__newval")).otherwise(
-                F.col(item.prop)
-            ),
-        )
-    else:
-        updated = joined.withColumn(
-            item.prop,
-            F.when(F.col("__tid").isNotNull(), F.col("__newval")),
-        )
-    graph.nodes[label] = updated.drop("__tid", "__newval")
-    return new_vals.count()
+    value = ExprCompiler(frame, params).compile(item.value)
+    return _rewrite_prop(stage, frame, matches, item.var, item.prop, value)
 
 
-def _apply_remove(graph: PropertyGraph, frame, var, prop) -> int:
+def _stage_remove(stage: Staged, frame, matches, var, prop) -> str | None:
     b = _binding(frame, var)
     if b.kind != "node" or b.label is None:
         raise DmlError("REMOVE supports labeled node properties")
-    nodes = graph.nodes[b.label]
-    if prop not in nodes.columns:
-        return 0
-    ids = frame.df.select(F.col(_ncol(var, ID)).alias("__tid")).distinct()
-    joined = nodes.join(ids, nodes[ID] == F.col("__tid"), "left")
-    updated = joined.withColumn(
-        prop, F.when(F.col("__tid").isNotNull(), F.lit(None)).otherwise(F.col(prop))
-    )
-    graph.nodes[b.label] = updated.drop("__tid")
-    return ids.count()
+    if prop in stage.nodes[b.label].columns:
+        return _rewrite_prop(stage, frame, matches, var, prop, F.lit(None))
+    return None
 
 
-def _apply_delete(graph: PropertyGraph, frame, var, detach: bool) -> int:
+def _rewrite_prop(stage: Staged, frame, matches, var, prop, value) -> str:
+    """Stage ``var``'s node table with ``prop`` (new column if need be)
+    set to ``value`` on the matched nodes, whose ids are few (broadcast);
+    return the name of the metric counting them. A match of the lone
+    node ``var`` has one row per node (ids are unique per label), any
+    longer pattern can repeat ``var``: only then are the ids deduped."""
+    label = frame.bindings[var].label
+    nodes = stage.nodes[label]
+    new_vals = frame.df.select(F.col(_ncol(var, ID)).alias(_TID),
+                               value.alias(_VAL))
+    if any(len(p.elements) > 1 or p.elements[0].var != var
+           for m in matches for p in m.patterns):
+        new_vals = new_vals.dropDuplicates([_TID])
+    joined, n = stage.observe(nodes.join(
+        F.broadcast(new_vals), nodes[ID] == F.col(_TID), "left"),
+        F.count(_TID))
+    new = F.when(F.col(_TID).isNotNull(), F.col(_VAL))
+    if prop in nodes.columns:
+        new = new.otherwise(F.col(prop))
+    stage.nodes[label] = joined.withColumn(prop, new).drop(_TID, _VAL)
+    return n
+
+
+def _drop_matched(stage: Staged, df: DataFrame, keys: DataFrame, on):
+    """``df`` without its rows that join ``keys`` (broadcast, may repeat)
+    ``on``, and the name of the metric counting the distinct keys that
+    matched, taken before the filter drops the matched rows."""
+    joined = df.join(F.broadcast(keys), on, "left")
+    hit = F.col(keys.columns[0]).isNotNull()
+    joined, n = stage.observe(joined, F.size(F.collect_set(
+        F.when(hit, F.struct(*keys.columns)))))
+    return joined.filter(~hit).drop(*keys.columns), n
+
+
+def _stage_delete(stage: Staged, frame, var, detach: bool) -> str:
     b = _binding(frame, var)
     if b.kind == "edge":
         # delete matched edges of this type by (src,dst) pair
         if b.label is None:
             raise DmlError("DELETE edge requires a single edge type")
-        et = graph.edges[b.label]
-        pairs = frame.df.select(
-            F.col(_ncol(var, SRC)).alias("__s"), F.col(_ncol(var, DST)).alias("__d")
-        ).distinct()
-        n = pairs.count()
-        et.df = et.df.join(
-            pairs, (et.df[SRC] == F.col("__s")) & (et.df[DST] == F.col("__d")),
-            "left_anti",
-        )
+        et = stage.edges[b.label]
+        pairs = frame.df.select(F.col(_ncol(var, SRC)).alias(_SRC),
+                                F.col(_ncol(var, DST)).alias(_DST))
+        df, n = _drop_matched(
+            stage, et.df, pairs,
+            (F.col(SRC) == F.col(_SRC)) & (F.col(DST) == F.col(_DST)))
+        stage.edges[b.label] = replace(et, df=df)
         return n
     if b.label is None:
         raise DmlError("DELETE target must have a known label")
-    ids = frame.df.select(F.col(_ncol(var, ID)).alias("__tid")).distinct()
-    n = ids.count()
-    label = b.label
-    incident = []
-    for ename, et in graph.edges.items():
-        if et.src_label == label or et.dst_label == label:
-            cond_cols = []
-            if et.src_label == label:
-                cond_cols.append(SRC)
-            if et.dst_label == label:
-                cond_cols.append(DST)
-            for c in cond_cols:
-                cnt = et.df.join(ids, et.df[c] == F.col("__tid"), "left_semi")
-                if not cnt.isEmpty():
-                    incident.append((ename, c))
-    if incident and not detach:
-        raise DmlError(
-            f"cannot DELETE {var}: incident edges exist "
-            f"({sorted(set(e for e, _ in incident))}); use DETACH DELETE"
-        )
-    for ename, c in incident:
-        et = graph.edges[ename]
-        et.df = et.df.join(ids, et.df[c] == F.col("__tid"), "left_anti")
-    nodes = graph.nodes[label]
-    graph.nodes[label] = nodes.join(ids, nodes[ID] == F.col("__tid"), "left_anti")
+    ids = frame.df.select(F.col(_ncol(var, ID)).alias(_TID))
+    incident = {}  # metric name -> edge type
+    for ename, et in list(stage.edges.items()):
+        df = et.df
+        for c, end in ((SRC, et.src_label), (DST, et.dst_label)):
+            if end == b.label:
+                df, m = _drop_matched(stage, df, ids, F.col(c) == F.col(_TID))
+                incident[m] = ename
+        if df is not et.df:
+            stage.edges[ename] = replace(et, df=df)
+
+    def refuse_incident(metrics):
+        if hit := sorted({e for m, e in incident.items() if metrics[m]}):
+            raise DmlError(f"cannot DELETE {var}: incident edges exist "
+                           f"({hit}); use DETACH DELETE")
+    if not detach:
+        stage.checks.append(refuse_incident)
+    stage.nodes[b.label], n = _drop_matched(
+        stage, stage.nodes[b.label], ids, F.col(ID) == F.col(_TID))
     return n

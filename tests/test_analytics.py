@@ -110,6 +110,7 @@ def test_stats_aggregates_gql(simple_db):
     assert r.sd == pytest.approx(59.160798, abs=1e-6)
 
 
+@pytest.mark.full_tier
 def test_weighted_sssp(spark):
     """Hand-checked Bellman-Ford: the 2-hop detour beats the direct edge."""
     from graphlite_spark.operators.paths import weighted_sssp
@@ -232,6 +233,7 @@ def test_closeness_centrality_chain(spark):
     assert harm[3] == 0.0
 
 
+@pytest.mark.full_tier
 def test_betweenness_brute_force_parity(spark):
     # Brandes via two hop-batched passes must equal a per-source
     # python BFS + dependency accumulation on every structural shape:
@@ -353,6 +355,7 @@ def test_random_walks_replica_parity(spark):
         random_walks(edf, length=0)
 
 
+@pytest.mark.full_tier
 def test_k_truss_brute_force_parity(spark):
     # distributed peeling must equal the sequential fixpoint on every
     # structural shape: clique+pendant path, triangles sharing an
@@ -406,6 +409,7 @@ def test_k_truss_brute_force_parity(spark):
                 4, max_iters=1)
 
 
+@pytest.mark.full_tier
 def test_truss_decomposition_brute_force_parity(spark):
     import itertools
     import random
@@ -469,6 +473,7 @@ def test_truss_decomposition_brute_force_parity(spark):
     assert g2 == {(0, 1): 2, (1, 2): 2, (2, 3): 2}
 
 
+@pytest.mark.full_tier
 def test_betweenness_sampled_estimator(spark):
     # Brandes-Pich sampled estimate: deterministic Knuth-hash source
     # sample, |V|/|S| scaling, and a pinned relative error vs the
@@ -525,6 +530,7 @@ def test_betweenness_sampled_estimator(spark):
     assert bout.count() > 0
 
 
+@pytest.mark.full_tier
 def test_shortest_path_pair_bidirectional(spark):
     from graphlite_spark.operators.paths import bfs_distances, shortest_path_pair
 

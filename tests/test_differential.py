@@ -142,6 +142,7 @@ def _eq(a, b) -> bool:
     return a == b
 
 
+@pytest.mark.full_tier
 @settings(
     max_examples=60,
     deadline=None,
@@ -259,6 +260,7 @@ _node_pred = st.sampled_from(
 _edge_pred = st.sampled_from(["{v}.w >= 1", "{v}.w < 3", "{v}.w <> 2"])
 
 
+@pytest.mark.full_tier
 @settings(
     max_examples=50,
     deadline=None,

@@ -443,6 +443,7 @@ def test_call_graph_analytics(db):
     assert ranks[-1] > ranks[0]
 
 
+@pytest.mark.full_tier
 def test_call_truss_and_core_procedures(db):
     # a 4-clique of Persons plus a pendant edge: the truss/core/
     # sampled-betweenness surface reachable from GQL (CALL gql.*)
@@ -755,6 +756,7 @@ def test_graph_stats_reports_empty_labels(spark):
         ("node", "Empty", 0), ("node", "Full", 2)]
 
 
+@pytest.mark.full_tier
 def test_call_linkpred_clustering_hits_procedures(db):
     # 4-clique P1..P4 plus pendant P4-P5: closed-form clustering /
     # transitivity / link-prediction values reachable from GQL
@@ -823,6 +825,7 @@ def test_call_procedures_mixed_id_domains(spark):
     assert len(ht) == 5
 
 
+@pytest.mark.full_tier
 def test_call_sketch_procedures(db):
     # 40 Persons with distinct ages: HLL at p=12 resolves small
     # cardinalities exactly (linear counting), DDSketch medians are

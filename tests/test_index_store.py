@@ -198,6 +198,7 @@ _FAMILIES = {
 }
 
 
+@pytest.mark.full_tier
 @pytest.mark.parametrize("family", sorted(_FAMILIES))
 def test_compaction_crash_injection_every_cut_point(
         spark, tmp_path, family):
@@ -309,6 +310,7 @@ def test_replay_below_compaction_floor_raises(spark, tmp_path):
         dedup_index_ingest_batch(ep2, path, batch_id=2)
 
 
+@pytest.mark.full_tier
 def test_epoch_crash_before_commit_replays_as_run(spark, tmp_path):
     """Crash an ingest epoch between its delta writes and its manifest
     commit: the partitions sit above hwm (invisible to readers), and
@@ -379,6 +381,7 @@ def test_fencing_applies_to_all_families(spark, tmp_path, family):
     assert index_store.read_manifest(spark, path)["hwm"] == 2
 
 
+@pytest.mark.full_tier
 def test_streaming_ingest_with_scheduled_compaction(spark, tmp_path):
     """compact_every=N inside the exactly-once maintenance stream:
     >= 2 compactions across 6 epochs, survivors and against-index
@@ -461,6 +464,7 @@ def test_streaming_ingest_with_scheduled_compaction(spark, tmp_path):
     assert index_store.read_manifest(spark, idx_c)["hwm"] == 5
 
 
+@pytest.mark.full_tier
 def test_reader_racing_compaction_never_sees_torn_layout(
         spark, tmp_path):
     """The r9 hazard, tested literally: a reader thread hammers
@@ -535,6 +539,7 @@ def test_manifest_log_stays_bounded(spark, tmp_path):
     assert m["hwm"] == index_store.RETAIN_MANIFESTS + 28
 
 
+@pytest.mark.full_tier
 def test_ingest_loop_co_maintains_bm25_search_index(spark, tmp_path):
     """streaming_ingest_loop(bm25_index_path=): each exactly-once
     epoch appends its dedup SURVIVORS' postings to the persisted

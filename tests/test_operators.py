@@ -1034,6 +1034,7 @@ def test_scc_long_cycle_color_bound(spark):
         empty_edges, empty_nodes).count() == 0
 
 
+@pytest.mark.full_tier
 def test_dag_layers(spark):
     # longest-path layering: diamond + long arm, isolated node, cycle
     # raises, deep chain exceeds one batch (batching still exact)
@@ -1065,6 +1066,7 @@ def test_dag_layers(spark):
         run([(1, 2)], [1, 2], max_iter=0)
 
 
+@pytest.mark.full_tier
 def test_scc_deep_cycle_hop_batched_probes(spark):
     # r7: COLOR and CONFIRM are hop-batched (adaptive growth like
     # bfs_distances) — a depth-100 cycle needs ~99 propagation hops
@@ -1410,6 +1412,7 @@ def test_lm_bigram_score(spark):
     assert bi[99] < bi[0] - 0.5                 # transitions collapse
 
 
+@pytest.mark.full_tier
 def test_scc_descending_id_chain_trims_across_rounds(spark):
     # r7 review regression guard: a DAG chain whose ids DESCEND along
     # edges is color-deep (the max-id head floods the whole chain, so
@@ -1912,6 +1915,7 @@ def test_kmeans_iters_knob_and_quantizer_equivalence(spark):
     assert fp3 == i83
 
 
+@pytest.mark.full_tier
 def test_semantic_dedup_int8_identical_to_fp(spark, tmp_path):
     import numpy as np
     import pytest
@@ -2106,6 +2110,7 @@ def test_semantic_dedup_empty_input(spark):
     assert out.count() == 0
 
 
+@pytest.mark.full_tier
 def test_modularity_weighted_edges(spark):
     from graphlite_spark.operators.paths import (
         louvain_communities,
@@ -2150,6 +2155,7 @@ def test_modularity_weighted_edges(spark):
     assert got_many == got_one
 
 
+@pytest.mark.full_tier
 def test_pagerank_weighted_personalized_numpy_parity(spark):
     import numpy as np
 
@@ -2272,6 +2278,7 @@ def test_pagerank_reset_validation(spark):
         pagerank(edges, nodes, reset=bad)
 
 
+@pytest.mark.full_tier
 def test_core_decomposition(spark):
     import random
 
@@ -2925,6 +2932,7 @@ def test_bm25_indexed_bit_identical(spark, tmp_path):
         bm25_search_indexed(spark, idx, [])
 
 
+@pytest.mark.full_tier
 def test_train_quality_lr_replica_separation_and_raise(spark):
     """Distributed logistic regression (VERDICT r8 ask #5): the full
     GD trajectory matches a pure-python replica (same per-iteration
@@ -3340,6 +3348,7 @@ def test_semantic_contamination_lsh_catches_near_copies(spark):
         semantic_contamination(corpus, bench, method="ann")
 
 
+@pytest.mark.full_tier
 def test_leiden_resolution_monotone(spark):
     """The resolution knob: gamma=1 reproduces the default exactly;
     a high gamma splits the two-scale graph's coarse groups back into
@@ -3394,6 +3403,7 @@ def test_leiden_resolution_monotone(spark):
         leiden_communities(edges, nodes, resolution=0.0)
 
 
+@pytest.mark.full_tier
 def test_bm25_index_maintenance_equals_union_rebuild(spark, tmp_path):
     """The BM25 maintenance loop: after ingesting an epoch, indexed
     search equals bm25_search over the UNION corpus (df summed across

@@ -2066,6 +2066,7 @@ def test_warc_parse_and_ingest(spark, tmp_path):
     assert 1 <= len(kept) <= 2
 
 
+@pytest.mark.full_tier
 def test_streaming_curation_stream_matches_batch(spark, tmp_path):
     # the composed ingest chain html -> extract -> gopher -> minhash
     # dedup, run identically as one batch and as two micro-batches:
@@ -2547,6 +2548,7 @@ def test_streaming_attribution_state_across_batches(spark, tmp_path):
     assert got[3] == (2, 10)
 
 
+@pytest.mark.full_tier
 def test_dedup_index_maintenance_replay_and_rebuild(spark, tmp_path):
     """The persisted-index maintenance loop (VERDICT r8 ask #3):
     epoch survivors extend the index exactly-once; a crash-replayed
