@@ -273,9 +273,8 @@ class GraphLiteSpark:
                 df._sc._jvm.org.apache.spark.sql.execution.ExplainMode.fromString(stmt.mode)
             )
         if isinstance(stmt, S.QueryStmt):
-            from .gql.compiler import QueryCompiler
-
-            return QueryCompiler(self.graph(), params).compile(stmt.ast)
+            # one read path: honours SELECT ... FROM <graph> and the plan cache
+            return self.query(gql, params)
         if isinstance(stmt, S.InsertStmt):
             self._check_writable()
             warnings: list[str] = []

@@ -14,6 +14,13 @@ columns are namespaced per bound variable: property ``p`` of variable
 property (column ``n___id``). WITH/UNWIND re-bind the namespace exactly
 like the reference's WITH-clause processor
 (read_engine/processors/with_clause_processor.rs:42-231).
+
+Each table enters a frame through one ``select`` (``_enter``): it renames
+the columns into the variable's namespace, keeps only the properties the
+query reads (``_projected``; all of them when the footprint is unknown)
+and computes the elided anchor/target ids and derived keys from the edge
+endpoints. Each DataFrame op is an eager Catalyst analysis plus JVM round
+trips, so the number of ops, not the size of each, sets compile time.
 """
 
 from __future__ import annotations
@@ -57,6 +64,13 @@ class Frame:
 
 def _ncol(var: str, prop: str) -> str:
     return f"{var}__{prop}"
+
+
+def _enter(df: DataFrame, var: str, props: list[str], *derived: Column) -> DataFrame:
+    """The one select through which a table enters a frame: ``props``
+    renamed into ``var``'s namespace, plus columns computed from the
+    table's own columns (elided endpoint ids, derived keys)."""
+    return df.select(*[F.col(p).alias(_ncol(var, p)) for p in props], *derived)
 
 
 _anon_counter = itertools.count()
@@ -633,6 +647,23 @@ class QueryCompiler:
             return None
         return der
 
+    def _projected(self, var: Optional[str], columns: list[str],
+                   inline=()) -> list[str]:
+        """The columns of a table that enter the frame for ``var``: the
+        identity columns, the inline-constrained keys and the query's
+        footprint of ``var`` (the ``_refprops`` that ``_derivable``
+        trusts). Every column when the footprint is unknown: no footprint
+        (``RETURN *``, path variables, DML), or ``var`` used as a whole
+        entity. A property outside the footprint is never read, so its
+        absence cannot turn a value into the missing-property NULL."""
+        if self._refprops is None:
+            return list(columns)
+        fp = self._refprops.get(var, set()) if var is not None else set()
+        if fp is None:
+            return list(columns)
+        keep = fp | set(inline) | {ID, SRC, DST}
+        return [c for c in columns if c in keep]
+
     # ---- public -----------------------------------------------------------
     def compile_subgraph(self, q) -> dict[str, DataFrame]:
         """CREATE GRAPH .. AS <query>: run the pipeline and return
@@ -1201,38 +1232,31 @@ class QueryCompiler:
             # var is bound outside this pattern: reuse its label so the
             # rescan stays a single pruned table scan (joined on _id later)
             labels = [outer[np.var].label]
-        np = A.NodePattern(np.var, labels, np.props)
-        if np.labels:
-            dfs = []
-            labels = np.labels
-            for lbl in labels:
-                ndf = self.graph.nodes_for_label(lbl)
-                dfs.append((lbl, ndf))
-            if len(dfs) == 1:
-                lbl, ndf = dfs[0]
-                props = list(ndf.columns)
-                df = ndf.select(*[F.col(c).alias(_ncol(var, c)) for c in props])
-                b = Binding("node", lbl, props)
-            else:
-                # multi-label alternation: union on common columns; each
-                # part carries its source label so LABELS()/IS :Label
-                # resolve per row after the union
-                common = set(dfs[0][1].columns)
-                for _, d in dfs[1:]:
-                    common &= set(d.columns)
-                common = sorted(common)
-                df = None
-                for lbl, d in dfs:
-                    sel = d.select(
-                        *[F.col(c).alias(_ncol(var, c)) for c in common],
-                        F.lit(lbl).alias(_ncol(var, "_label")),
-                    )
-                    df = sel if df is None else df.unionByName(sel)
-                b = Binding("node", None, [*common, "_label"])
+        if len(labels) == 1:
+            ndf = self.graph.nodes_for_label(labels[0])
+            props = self._projected(np.var, ndf.columns, np.props)
+            df = _enter(ndf, var, props)
+            b = Binding("node", labels[0], props)
+        elif labels:
+            # multi-label alternation: union on common columns; each
+            # part carries its source label so LABELS()/IS :Label
+            # resolve per row after the union
+            dfs = [(lbl, self.graph.nodes_for_label(lbl)) for lbl in labels]
+            common = set(dfs[0][1].columns)
+            for _, d in dfs[1:]:
+                common &= set(d.columns)
+            props = self._projected(np.var, [*sorted(common), "_label"], np.props)
+            cols = [p for p in props if p != "_label"]
+            df = None
+            for lbl, d in dfs:
+                tag = [F.lit(lbl).alias(_ncol(var, "_label"))] if "_label" in props else []
+                sel = _enter(d, var, cols, *tag)
+                df = sel if df is None else df.unionByName(sel)
+            b = Binding("node", None, props)
         else:
             adf = self.graph.all_nodes()
-            props = [c for c in adf.columns]
-            df = adf.select(*[F.col(c).alias(_ncol(var, c)) for c in props])
+            props = self._projected(np.var, adf.columns, np.props)
+            df = _enter(adf, var, props)
             b = Binding("node", None, props)
         frame = Frame(df, {var: b})
         return self._inline_props(frame, var, np.props)
@@ -1295,8 +1319,15 @@ class QueryCompiler:
             )
 
         directions = [edge.direction] if edge.direction in ("out", "in") else ["out", "in"]
+        rebound = node.var is not None and (
+            (frame is not None and node.var in frame.bindings
+             and frame.bindings[node.var].kind == "node")
+            or (frame is None and node.var == prev_var)
+        )
         parts: list[DataFrame] = []
         used_et: list = []
+        eprops_parts: list[list[str]] = []
+        aprops_parts: list[list[str]] = []
         nprops_all: Optional[list[str]] = None
         for dirn in directions:
             src_lbl = prev_b.label if dirn == "out" else (node.labels[0] if node.labels else None)
@@ -1314,17 +1345,15 @@ class QueryCompiler:
                 tgt_label = et.dst_label if dirn == "out" else et.src_label
                 if node.labels and tgt_label not in node.labels:
                     continue
-                eprops = et.properties
-                edf = et.df.select(
-                    F.col(SRC).alias(_ncol(evar, SRC)),
-                    F.col(DST).alias(_ncol(evar, DST)),
-                    *[F.col(p).alias(_ncol(evar, p)) for p in eprops],
-                )
-                join_key = _ncol(evar, SRC) if dirn == "out" else _ncol(evar, DST)
-                other_key = _ncol(evar, DST) if dirn == "out" else _ncol(evar, SRC)
+                near, far = (SRC, DST) if dirn == "out" else (DST, SRC)
+                # the edge table's one select also computes the elided
+                # anchor's and target's ids and derived keys from its
+                # endpoint columns
+                derived: list[Column] = []
+                aprops: list[str] = []
                 if frame is None:
                     # anchor elided: the edge table is the row source
-                    joined = edf.withColumn(_ncol(prev_var, ID), F.col(join_key))
+                    derived.append(F.col(near).alias(_ncol(prev_var, ID)))
                     anchor_lbl = et.src_label if dirn == "out" else et.dst_label
                     d0 = (
                         self._derivable(prev_node, anchor_lbl, allow_inline=False)
@@ -1334,18 +1363,32 @@ class QueryCompiler:
                     if d0 is not None and not self._node_elidable(prev_node, anchor_lbl):
                         # anchor referenced only via its derivable key:
                         # compute it from the edge endpoint id
-                        joined = joined.withColumn(
-                            _ncol(prev_var, d0[0]), d0[1](F.col(join_key))
+                        derived.append(
+                            d0[1](F.col(near)).alias(_ncol(prev_var, d0[0]))
                         )
+                        aprops.append(d0[0])
+                elided = not rebound and self._node_elidable(node, tgt_label)
+                d = None if rebound or elided else self._derivable(node, tgt_label)
+                skip_join = elided or d is not None
+                if skip_join:
+                    # skip the target node-table join; identity comes from
+                    # the edge's endpoint column, and a target referenced
+                    # only via its derivable key decodes it from there
+                    derived.append(F.col(far).alias(_ncol(nvar, ID)))
+                    nprops = [ID]
+                    if d is not None:
+                        derived.append(d[1](F.col(far)).alias(_ncol(nvar, d[0])))
+                        nprops = [ID, d[0]]
+                eprops = self._projected(edge.var, et.properties, edge.props)
+                edf = _enter(et.df, evar, [SRC, DST, *eprops], *derived)
+                join_key, other_key = _ncol(evar, near), _ncol(evar, far)
+                if frame is None:
+                    joined = edf
                 else:
                     joined = frame.df.join(
                         edf, F.col(_ncol(prev_var, ID)) == F.col(join_key), "inner"
                     )
-                if node.var is not None and (
-                    (frame is not None and node.var in frame.bindings
-                     and frame.bindings[node.var].kind == "node")
-                    or (frame is None and node.var == prev_var)
-                ):
+                if rebound:
                     # target var already bound (cycle / self-loop /
                     # within-pattern reuse): enforce identity with an
                     # id-equality filter — rebinding would silently drop
@@ -1368,42 +1411,23 @@ class QueryCompiler:
                                 f"{nvar!r} needs a label"
                             )
                         re_id = f"__rebind_{nvar}_id"
-                        ndf = self.graph.nodes_for_label(lbl).select(
-                            F.col(ID).alias(re_id),
-                            *[F.col(k).alias(_ncol(nvar, k)) for k in missing],
-                        )
+                        ndf = _enter(self.graph.nodes_for_label(lbl), nvar, missing,
+                                     F.col(ID).alias(re_id))
                         joined = joined.join(
                             ndf, F.col(other_key) == F.col(re_id), "inner"
                         ).drop(re_id)
                     nprops = sorted(set(exist_b.props) | set(missing))
-                    parts.append(joined)
-                    used_et.append(et)
-                    nprops_all = nprops if nprops_all is None else sorted(
-                        set(nprops_all) & set(nprops)
-                    )
-                    continue
-                d = self._derivable(node, tgt_label)
-                if self._node_elidable(node, tgt_label):
-                    # skip the target node-table join; identity comes from
-                    # the edge's endpoint column
-                    joined = joined.withColumn(_ncol(nvar, ID), F.col(other_key))
-                    nprops = [ID]
-                elif d is not None:
-                    # target referenced only via _id / derivable key: skip
-                    # the node-table join, decode the key from the endpoint
-                    joined = joined.withColumn(
-                        _ncol(nvar, ID), F.col(other_key)
-                    ).withColumn(_ncol(nvar, d[0]), d[1](F.col(other_key)))
-                    nprops = [ID, d[0]]
-                else:
+                elif not skip_join:
                     ndf = self.graph.nodes_for_label(tgt_label)
-                    nprops = list(ndf.columns)
-                    ndf2 = ndf.select(*[F.col(c).alias(_ncol(nvar, c)) for c in nprops])
+                    nprops = self._projected(node.var, ndf.columns, node.props)
                     joined = joined.join(
-                        ndf2, F.col(other_key) == F.col(_ncol(nvar, ID)), "inner"
+                        _enter(ndf, nvar, nprops),
+                        F.col(other_key) == F.col(_ncol(nvar, ID)), "inner",
                     )
                 parts.append(joined)
                 used_et.append(et)
+                eprops_parts.append(eprops)
+                aprops_parts.append(aprops)
                 nprops_all = nprops if nprops_all is None else sorted(
                     set(nprops_all) & set(nprops)
                 )
@@ -1415,7 +1439,8 @@ class QueryCompiler:
         if len(parts) == 1:
             df = parts[0]
             eb_label = used_et[0].name
-            eprops = used_et[0].properties
+            eprops = eprops_parts[0]
+            aprops = aprops_parts[0]
             nb_label = (
                 used_et[0].dst_label if edge.direction != "in" else used_et[0].src_label
             )
@@ -1431,22 +1456,16 @@ class QueryCompiler:
             for p in parts[1:]:
                 df = df.unionByName(p.select(*cols))
             eb_label = None
-            eprops = sorted(
-                set.intersection(*[set(et.properties) for et in used_et])
-            )
+            eprops = sorted(set.intersection(*map(set, eprops_parts)))
+            # anchor derivation: only derived-key columns every
+            # alternative computes survive the union
+            aprops = sorted(set.intersection(*map(set, aprops_parts)))
             nb_label = node.labels[0] if node.labels else None
 
         if frame is None:
-            # anchor derivation: expose whichever derived-key columns
-            # survived the union (column intersection may drop them)
-            extra = [
-                c[len(prev_var) + 2:]
-                for c in df.columns
-                if c.startswith(f"{prev_var}__") and c != _ncol(prev_var, ID)
-            ]
-            if extra:
-                prev_b = Binding(prev_b.kind, prev_b.label, [*prev_b.props, *extra])
-            bindings = {prev_var: prev_b}
+            bindings = {
+                prev_var: Binding(prev_b.kind, prev_b.label, [*prev_b.props, *aprops])
+            }
         else:
             bindings = dict(frame.bindings)
         bindings[evar] = Binding("edge", eb_label, [SRC, DST, *eprops])
@@ -1513,7 +1532,7 @@ class QueryCompiler:
         if node.labels:
             tgt_label = node.labels[0]
         ndf = self.graph.nodes_for_label(tgt_label)
-        nprops = list(ndf.columns)
+        nprops = self._projected(node.var, ndf.columns, node.props)
 
         base = frame.df.withColumn("__frontier", F.col(_ncol(prev_var, ID))).withColumn(
             "__visited", F.array(F.col(_ncol(prev_var, ID)))
@@ -1578,8 +1597,9 @@ class QueryCompiler:
             fr = Frame(joined, dict(frame.bindings))
             fr = self._inline_props(fr, nvar, node.props)
             return fr, nvar
-        ndf2 = ndf.select(*[F.col(c).alias(_ncol(nvar, c)) for c in nprops])
-        joined = out.join(ndf2, F.col("__frontier") == F.col(_ncol(nvar, ID)), "inner")
+        joined = out.join(
+            _enter(ndf, nvar, nprops), F.col("__frontier") == F.col(_ncol(nvar, ID)), "inner"
+        )
         joined = joined.drop("__frontier", "__visited", "__visited_e")
         bindings = dict(frame.bindings)
         bindings[nvar] = Binding("node", tgt_label, nprops)
@@ -1630,10 +1650,9 @@ class QueryCompiler:
             fr = self._inline_props(fr, nvar, node.props)
             return fr, nvar
         ndf = self.graph.nodes_for_label(tgt_label)
-        nprops = list(ndf.columns)
-        ndf2 = ndf.select(*[F.col(c).alias(_ncol(nvar, c)) for c in nprops])
+        nprops = self._projected(node.var, ndf.columns, node.props)
         joined = joined.join(
-            ndf2, F.col("__tgt") == F.col(_ncol(nvar, ID)), "inner"
+            _enter(ndf, nvar, nprops), F.col("__tgt") == F.col(_ncol(nvar, ID)), "inner"
         ).drop("__tgt")
         bindings = dict(frame.bindings)
         bindings[nvar] = Binding("node", tgt_label, nprops)
@@ -1818,6 +1837,7 @@ class QueryCompiler:
         if agg:
             key_cols: list[Column] = []
             agg_cols: list[Column] = []
+            names_gk: list[str] = []  # group keys the output leaves out
             group_reprs = {repr(g) for g in r.group_by}
             for it in r.items:
                 name = it.alias or _expr_name(it.expr)
@@ -1834,7 +1854,8 @@ class QueryCompiler:
                 if not any(
                     repr(g) == repr(it.expr) for it in r.items if not has_aggregate(it.expr)
                 ):
-                    key_cols.append(ec.compile(g).alias(f"__gk{len(key_cols)}"))
+                    names_gk.append(f"__gk{len(key_cols)}")
+                    key_cols.append(ec.compile(g).alias(names_gk[-1]))
             having_col = None
             if r.having is not None:
                 having_col = ec.compile(r.having).alias("__having")
@@ -1856,7 +1877,10 @@ class QueryCompiler:
                 out_df = grouped.agg(*agg_cols)
             if r.having is not None:
                 out_df = out_df.filter(F.col("__having")).drop("__having")
-            out_df = out_df.select(*[c for c in out_df.columns if not c.startswith("__gk")])
+            if any(n.startswith("__gk") for n in names + names_gk):
+                out_df = out_df.select(
+                    *[c for c in out_df.columns if not c.startswith("__gk")]
+                )
             post = Frame(out_df, {n: Binding("value") for n in names})
         else:
             sel = []
@@ -2010,9 +2034,10 @@ def _expr_vars(e, out: dict, props: dict | None = None) -> None:
     """Count variable references; when ``props`` is given, also record HOW
     each variable is referenced: ``props[var]`` is the set of property
     names accessed, or None once the variable is used as a whole entity
-    (which forces full materialization)."""
-    if e is None:
-        return
+    (which forces full materialization). Every expression node is walked
+    through its fields, so a new node type cannot hide a reference from
+    join elision or projection pruning; subquery bodies (not expressions)
+    are self-contained and skipped."""
     if isinstance(e, A.Var):
         out[e.name] = out.get(e.name, 0) + 2
         if props is not None:
@@ -2025,41 +2050,15 @@ def _expr_vars(e, out: dict, props: dict | None = None) -> None:
                 props[base] = None  # nested access: treat as entity use
             elif props.get(base, set()) is not None:
                 props.setdefault(base, set()).add(e.key)
-    elif isinstance(e, A.Binary):
-        _expr_vars(e.left, out, props)
-        _expr_vars(e.right, out, props)
-    elif isinstance(e, A.Unary):
-        _expr_vars(e.operand, out, props)
-    elif isinstance(e, A.IsPredicate):
-        _expr_vars(e.operand, out, props)
-        _expr_vars(e.target, out, props)
-    elif isinstance(e, A.Case):
-        _expr_vars(e.operand, out, props)
-        for c, r in e.whens:
-            _expr_vars(c, out, props)
-            _expr_vars(r, out, props)
-        _expr_vars(e.else_, out, props)
-    elif isinstance(e, A.Cast):
-        _expr_vars(e.operand, out, props)
-    elif isinstance(e, A.Index):
-        _expr_vars(e.operand, out, props)
-        _expr_vars(e.index, out, props)
-    elif isinstance(e, A.ListLiteral):
-        for i in e.items:
-            _expr_vars(i, out, props)
-    elif isinstance(e, A.FuncCall):
-        for a in e.args:
-            _expr_vars(a, out, props)
-    elif isinstance(e, A.ExistsSubquery):
-        for p in e.patterns:
-            _pattern_vars(p, out, props)
-        _expr_vars(e.where, out, props)
-    elif isinstance(e, A.InSubquery):
-        # the subquery body is self-contained; only the probe expr uses
-        # outer bindings
-        _expr_vars(e.expr, out, props)
-    elif isinstance(e, A.QuantifiedSubquery):
-        _expr_vars(e.left, out, props)
+    elif isinstance(e, (list, tuple)):  # arguments, items, CASE branches
+        for x in e:
+            _expr_vars(x, out, props)
+    elif isinstance(e, A.Expr):
+        if isinstance(e, A.ExistsSubquery):
+            for p in e.patterns:
+                _pattern_vars(p, out, props)
+        for v in vars(e).values():
+            _expr_vars(v, out, props)
 
 
 def _pattern_vars(p: A.PathPattern, out: dict, props: dict | None = None) -> None:

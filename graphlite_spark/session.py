@@ -24,6 +24,12 @@ def get_spark(
     - Arrow enabled for the few pandas-UDF operators (similarity, multimodal).
     - Broadcast threshold left at default; dimension tables in the graph
       catalog are broadcast explicitly where we know cardinality.
+    - PySpark call-site capture off: with it on, every Column and
+      DataFrame call walks the Python stack and makes extra JVM round
+      trips to record a call site that always points into the GQL
+      compiler, which tells a GQL user nothing. Spark error messages keep
+      their text. PySpark reads the flag once per process, at the first
+      Column built with an active session.
     """
     cpus = os.environ.get("SPARK_GRAFT_CPUS", "32")
     master = master or f"local[{cpus}]"
@@ -43,6 +49,7 @@ def get_spark(
         .config("spark.sql.legacy.parquet.nanosAsLong", "true")
         .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "8g"))
         .config("spark.ui.enabled", "false")
+        .config("spark.python.sql.dataFrameDebugging.enabled", "false")
     )
     for k, v in (extra_conf or {}).items():
         b = b.config(k, v)

@@ -572,6 +572,24 @@ def test_shortest_path_pair_bidirectional(spark):
         assert got == ref.get(t), (t, got, ref.get(t))
 
 
+def test_shortest_path_pair_chain_branch(spark):
+    """Default-tier slice of the bidirectional test's chain-plus-branch
+    cases: directed, undirected, beyond the horizon, and s == t."""
+    from graphlite_spark.operators.paths import shortest_path_pair
+
+    chain = [(i, i + 1) for i in range(11)] + [(3, 20), (20, 21)]
+    e = spark.createDataFrame(chain, "_src: long, _dst: long")
+
+    def d(s, t, **kw):
+        rows = shortest_path_pair(e, s, t, **kw).collect()
+        return rows[0]["dist"] if rows else None
+
+    assert d(0, 21, max_hops=15) == 5          # directed, via the branch
+    assert d(21, 9, directed=False) == 8       # 21-20-3-4..9
+    assert d(0, 11, max_hops=5) is None        # beyond horizon
+    assert d(5, 5) == 0
+
+
 def test_maximal_independent_set(spark):
     from graphlite_spark.operators.paths import maximal_independent_set
 

@@ -273,23 +273,33 @@ _edge_pred = st.sampled_from(["{v}.w >= 1", "{v}.w < 3", "{v}.w <> 2"])
     st.lists(st.tuples(st.integers(0, 2), _edge_pred), max_size=1),
 )
 def test_patterns_match_duckdb(pattern_env, dirs, npreds, epreds):
+    _check_pattern(pattern_env, dirs, npreds, epreds)
+
+
+def _check_pattern(pattern_env, dirs, npreds, epreds, typed=True, close=False):
+    """One chain pattern of the grammar above against its DuckDB join.
+    ``typed=False`` leaves the edge labels off (the compiler then picks
+    every edge type between the endpoints); ``close`` re-binds the last
+    node to ``n0``, a cycle."""
     db, con = pattern_env
     k = len(dirs)
+    node = [f"n{i}" for i in range(k)] + ["n0" if close else f"n{k}"]
 
     pat = "(n0:Person)"
     for i, d in enumerate(dirs):
-        arrow = {"->": f"-[e{i}:KNOWS]->", "<-": f"<-[e{i}:KNOWS]-", "-": f"-[e{i}:KNOWS]-"}[d]
-        pat += f"{arrow}(n{i + 1}:Person)"
-    conds_gql = [p.format(v=f"n{min(i, k)}") for i, p in npreds]
+        t = ":KNOWS" if typed else ""
+        arrow = {"->": f"-[e{i}{t}]->", "<-": f"<-[e{i}{t}]-", "-": f"-[e{i}{t}]-"}[d]
+        pat += f"{arrow}({node[i + 1] if close and i == k - 1 else f'n{i + 1}:Person'})"
+    conds_gql = [p.format(v=node[min(i, k)]) for i, p in npreds]
     conds_gql += [p.format(v=f"e{min(i, k - 1)}") for i, p in epreds]
     where = f" WHERE {' AND '.join(conds_gql)}" if conds_gql else ""
     gql = (
         f"MATCH {pat}{where} "
-        f"RETURN n0.id AS a, n{k}.id AS b ORDER BY a, b"
+        f"RETURN n0.id AS a, {node[k]}.id AS b ORDER BY a, b"
     )
 
     frm = ["person p0"]
-    conds_sql = []
+    conds_sql = [f"p{k}.id = p0.id"] if close else []
     for i, d in enumerate(dirs):
         frm += [f"knows k{i}", f"person p{i + 1}"]
         if d == "->":
@@ -311,6 +321,23 @@ def test_patterns_match_duckdb(pattern_env, dirs, npreds, epreds):
     ours = sorted((r.a, r.b) for r in db.query(gql).collect())
     theirs = sorted((a, b) for a, b in con.execute(sql).fetchall())
     assert ours == theirs, f"pattern diverged\nGQL: {gql}\nSQL: {sql}\nspark={ours[:20]}\nduck={theirs[:20]}"
+
+
+# fixed shapes from the sweep's grammar, run in the default tier: each
+# hop direction, 2 and 3 hops, node and edge predicates, a re-bound
+# target (cycle) and unlabelled edges
+@pytest.mark.parametrize("dirs,npreds,epreds,typed,close", [
+    (["->"], [], [], True, False),
+    (["<-"], [(1, "{v}.val > 2")], [], True, False),
+    (["-"], [], [(0, "{v}.w >= 1")], True, False),
+    (["->", "<-"], [(0, "{v}.grp = 1")], [(1, "{v}.w < 3")], True, False),
+    (["->", "->", "-"], [(3, "{v}.id < 9"), (1, "{v}.grp <> 0")], [(2, "{v}.w <> 2")], True, False),
+    (["->", "->"], [(1, "{v}.val <= 4")], [], True, True),
+    (["-"], [(1, "{v}.grp = 1")], [], False, False),
+    (["->", "<-"], [], [(0, "{v}.w < 3")], False, False),
+])
+def test_pattern_shapes_match_duckdb(pattern_env, dirs, npreds, epreds, typed, close):
+    _check_pattern(pattern_env, dirs, npreds, epreds, typed, close)
 
 
 # --- WITH-pipeline differential ----------------------------------------------

@@ -213,6 +213,31 @@ def test_select_from_graph(spark):
     assert [(r.sku, r.price) for r in got] == [("a", 10), ("b", 20)]
 
 
+def test_execute_read_takes_query_path(spark):
+    """execute() on a read is query(): it reuses the plan cache and honours
+    SELECT ... FROM <graph> over the session graph."""
+    from graphlite_spark import GraphLiteSpark
+
+    db = GraphLiteSpark(spark)
+    db.execute("CREATE GRAPH /default/reads_a")
+    db.execute("SESSION SET GRAPH /default/reads_a")
+    db.execute("INSERT (:Item {sku: 'a'})")
+    db.execute("CREATE GRAPH /default/reads_z")
+    db.execute("SESSION SET GRAPH /default/reads_z")
+    db.execute("INSERT (:Item {sku: 'z'})")
+
+    q = "MATCH (i:Item) RETURN i.sku AS sku"
+    first = db.execute(q)
+    assert db.execute(q) is first
+    stats = {r.cache_type: r for r in db.execute("CALL gql.cache_stats()").collect()}
+    assert stats["plan_cache"].entries == 1
+    assert stats["plan_cache"].hit_rate == 0.5  # one miss, then one hit
+
+    q = "SELECT i.sku AS sku FROM /default/reads_a MATCH (i:Item)"
+    assert [r.sku for r in db.query(q).collect()] == ["a"]
+    assert [r.sku for r in db.execute(q).collect()] == ["a"]
+
+
 def test_select_from_match_extension(db):
     """Reference extension (parser.rs:1024-1032, dql_tests.rs:236):
     FROM MATCH ... runs against the session graph; SELECT without any

@@ -66,6 +66,20 @@ def test_missing_property_is_null(simple_db):
     assert got == (True,)
 
 
+def test_quantified_comparison_reads_its_properties(simple_db):
+    """A property read only inside `> ALL([...])` is part of the query's
+    footprint: the scan keeps it, and the target's node-table join is
+    not elided."""
+    got = rows(simple_db.query(
+        "MATCH (n:TestNode) WHERE n.value > ALL([100, 150]) "
+        "RETURN n.name AS name ORDER BY name"))
+    assert got == [("node16",), ("node17",), ("node18",), ("node19",)]
+    got = rows(simple_db.query(
+        "MATCH (a:TestNode)-[:CONNECTS_TO]->(b:TestNode) "
+        "WHERE b.value > ALL([50]) RETURN a.name AS name ORDER BY name"))
+    assert got == [("node5",), ("node6",), ("node7",), ("node8",)]
+
+
 def test_order_by_desc_limit_offset(simple_db):
     got = rows(simple_db.query(
         "MATCH (n:TestNode) RETURN n.id AS id ORDER BY id DESC LIMIT 3 OFFSET 2"))
