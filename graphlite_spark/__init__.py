@@ -22,6 +22,7 @@ from pyspark.sql import DataFrame, SparkSession
 
 from .catalog import CatalogError, GraphCatalog
 from .graph import EdgeType, PropertyGraph
+from .operators.common import local_frame
 from .session import get_spark
 
 __all__ = [
@@ -599,13 +600,15 @@ class GraphLiteSpark:
             rows = [Row(name=d["name"], kind=d["kind"], target=str(d["target"]))
                     for d in idx.values()]
             if not rows:
-                return self.spark.createDataFrame([], "name string, kind string, target string")
+                return local_frame(
+                    self.spark, [], "name string, kind string, target string")
         elif name == "gql.list_graph_types":
             rows = [Row(graph_type_name=n, schema_name="default")
                     for n in sorted(self._graph_types)]
             if not rows:
-                return self.spark.createDataFrame(
-                    [], "graph_type_name string, schema_name string")
+                return local_frame(
+                    self.spark, [],
+                    "graph_type_name string, schema_name string")
         elif name == "gql.list_users":
             rows = [Row(user_name=u, roles=",".join(d["roles"]))
                     for u, d in sorted(self._users.items())]
@@ -678,13 +681,14 @@ class GraphLiteSpark:
                 for et in g.edges.values()
             ]
             if not rows:
-                return self.spark.createDataFrame(
-                    [], "kind string, label string, properties string")
+                return local_frame(
+                    self.spark, [],
+                    "kind string, label string, properties string")
         elif name == "gql.list_node_types":
             g = self.graph()
             rows = [Row(node_type=lbl) for lbl in g.node_labels()]
             if not rows:
-                return self.spark.createDataFrame([], "node_type string")
+                return local_frame(self.spark, [], "node_type string")
         elif name == "gql.describe_node_type":
             g = self.graph()
             lbl = stmt.args[0].value if stmt.args else ""
@@ -692,8 +696,9 @@ class GraphLiteSpark:
             rows = [Row(node_type=lbl, property=c, dtype=t)
                     for c, t in ndf.dtypes if c != "_id"]
             if not rows:
-                return self.spark.createDataFrame(
-                    [], "node_type string, property string, dtype string")
+                return local_frame(
+                    self.spark, [],
+                    "node_type string, property string, dtype string")
         elif name == "gql.list_edge_types":
             # introspection/queries.rs:94 ListEdgeTypes (roadmap-stubbed
             # there; answered from the live graph here)
@@ -704,8 +709,9 @@ class GraphLiteSpark:
                 for t in g.edge_labels()
             ]
             if not rows:
-                return self.spark.createDataFrame(
-                    [], "edge_type string, src_label string, dst_label string")
+                return local_frame(
+                    self.spark, [],
+                    "edge_type string, src_label string, dst_label string")
         elif name == "gql.describe_edge_type":
             g = self.graph()
             t = stmt.args[0].value if stmt.args else ""
@@ -713,8 +719,9 @@ class GraphLiteSpark:
             rows = [Row(edge_type=t, property=c, dtype=ty)
                     for c, ty in et.df.dtypes if c not in ("_src", "_dst")]
             if not rows:
-                return self.spark.createDataFrame(
-                    [], "edge_type string, property string, dtype string")
+                return local_frame(
+                    self.spark, [],
+                    "edge_type string, property string, dtype string")
         elif name == "gql.describe_graph_type":
             # introspection/queries.rs:89 DescribeGraphType: one row per
             # declared element with its endpoint labels and property list
@@ -734,9 +741,10 @@ class GraphLiteSpark:
                 for t, es in sorted(spec.edges.items())
             ]
             if not rows:
-                return self.spark.createDataFrame(
-                    [], "graph_type string, kind string, label string, "
-                        "src_label string, dst_label string, properties string")
+                return local_frame(
+                    self.spark, [],
+                    "graph_type string, kind string, label string, "
+                    "src_label string, dst_label string, properties string")
         elif name == "gql.graph_stats":
             # ONE Spark job: union every label table projected to two
             # literal columns (the scans are column-pruned to nothing),
@@ -753,15 +761,16 @@ class GraphLiteSpark:
                 for t, et in sorted(g.edges.items())
             ]
             if not parts:
-                return self.spark.createDataFrame(
-                    [], "kind string, label string, n long")
+                return local_frame(
+                    self.spark, [], "kind string, label string, n long")
             u = parts[0]
             for part in parts[1:]:
                 u = u.unionByName(part)
             counts = u.groupBy("kind", "label").agg(F.count(F.lit(1)).alias("n"))
             # left-join against the catalog's label list so EMPTY tables
             # still report n=0 (a groupBy emits no group for them)
-            labels = self.spark.createDataFrame(
+            labels = local_frame(
+                self.spark,
                 [("node", lbl) for lbl in sorted(g.nodes)]
                 + [("edge", t) for t in sorted(g.edges)],
                 "kind string, label string",
@@ -790,7 +799,8 @@ class GraphLiteSpark:
             rows = [Row(name=d["name"], target=str(d["target"]))
                     for d in idx.values() if d["kind"] == "TEXT"]
             if not rows:
-                return self.spark.createDataFrame([], "name string, target string")
+                return local_frame(
+                    self.spark, [], "name string, target string")
         elif name == "gql.describe_text_index":
             idx = getattr(self, "_indexes", {})
             tgt = stmt.args[0].value if stmt.args else None
@@ -798,8 +808,8 @@ class GraphLiteSpark:
                     for d in idx.values()
                     if d["kind"] == "TEXT" and (tgt is None or d["name"] == tgt)]
             if not rows:
-                return self.spark.createDataFrame(
-                    [], "name string, kind string, target string")
+                return local_frame(
+                    self.spark, [], "name string, kind string, target string")
         elif name == "gql.register_model":
             mname = stmt.args[0].value
             uri = stmt.args[1].value if len(stmt.args) > 1 else ""
@@ -820,8 +830,8 @@ class GraphLiteSpark:
             rows = [Row(model=m, uri=d["uri"], loaded=d["loaded"])
                     for m, d in sorted(self._models.items())]
             if not rows:
-                return self.spark.createDataFrame(
-                    [], "model string, uri string, loaded boolean")
+                return local_frame(
+                    self.spark, [], "model string, uri string, loaded boolean")
         elif name in ("gql.describe_model", "gql.model_stats"):
             mname = stmt.args[0].value if stmt.args else ""
             if mname not in self._models:
@@ -919,7 +929,8 @@ class GraphLiteSpark:
             from .operators.index_store import versions
 
             rows = versions(self.spark, str(stmt.args[0].value))
-            df = self.spark.createDataFrame(
+            df = local_frame(
+                self.spark,
                 [(int(r["seq"]),
                   int(r["version"]) if r["version"] is not None else None,
                   int(r["hwm"]) if r["hwm"] is not None else None,
@@ -936,7 +947,8 @@ class GraphLiteSpark:
             from .operators.index_store import describe_index
 
             d = describe_index(self.spark, str(stmt.args[0].value))
-            df = self.spark.createDataFrame(
+            df = local_frame(
+                self.spark,
                 [(t,
                   info.get("base_dir"),
                   info.get("base_bytes"),
@@ -977,7 +989,8 @@ class GraphLiteSpark:
 
             out = sync_index(self.spark, str(stmt.args[0].value),
                              str(stmt.args[1].value))
-            df = self.spark.createDataFrame(
+            df = local_frame(
+                self.spark,
                 [(bool(out["bootstrapped"]),
                   len(out["applied"]),
                   int(out["hwm"]) if out["hwm"] is not None else None)],
@@ -993,7 +1006,7 @@ class GraphLiteSpark:
             weight_prop = stmt.args[1].value
             source = stmt.args[2].value
             et = self.graph().edge_type(edge_label)
-            src_df = self.spark.createDataFrame([(int(source),)], "node: long")
+            src_df = local_frame(self.spark, [(int(source),)], "node: long")
             df = weighted_sssp(et.df, src_df, weight_col=weight_prop)
             if stmt.yield_cols:
                 df = df.select(*stmt.yield_cols)
@@ -1099,9 +1112,9 @@ class GraphLiteSpark:
             for part in n_parts:
                 n = part if n is None else n.unionByName(part)
             if e is None:
-                e = self.spark.createDataFrame([], "_src long, _dst long")
+                e = local_frame(self.spark, [], "_src long, _dst long")
             if n is None:
-                n = self.spark.createDataFrame([], "_id long")
+                n = local_frame(self.spark, [], "_id long")
             if name == "gql.pagerank":
                 iters = int(stmt.args[0].value) if stmt.args else 10
                 df = P.pagerank(e, n, num_iter=iters)
@@ -1187,16 +1200,11 @@ class GraphLiteSpark:
                         else 20)
                 src_v, dst_v = stmt.args[0].value, stmt.args[1].value
                 if len(id_types) > 1 or "string" in id_types:
-                    src_v, dst_v = str(src_v), str(dst_v)
-                    src_df = self.spark.createDataFrame(
-                        [(src_v,)], "node: string")
-                    dst_df = self.spark.createDataFrame(
-                        [(dst_v,)], "node: string")
+                    src_v, dst_v, id_t = str(src_v), str(dst_v), "string"
                 else:
-                    src_df = self.spark.createDataFrame(
-                        [(int(src_v),)], "node: long")
-                    dst_df = self.spark.createDataFrame(
-                        [(int(dst_v),)], "node: long")
+                    src_v, dst_v, id_t = int(src_v), int(dst_v), "long"
+                src_df = local_frame(self.spark, [(src_v,)], f"node: {id_t}")
+                dst_df = local_frame(self.spark, [(dst_v,)], f"node: {id_t}")
                 df = P.shortest_path_pair(e, src_df, dst_df,
                                           max_hops=hops)
             else:
@@ -1211,7 +1219,7 @@ class GraphLiteSpark:
             return df
         else:
             raise NotImplementedError(f"procedure {stmt.proc}")
-        df = self.spark.createDataFrame(rows)
+        df = local_frame(self.spark, rows)
         if stmt.yield_cols:
             df = df.select(*stmt.yield_cols)
         if stmt.where is not None:

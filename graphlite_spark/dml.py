@@ -9,9 +9,15 @@ tables); ``commit`` checkpoints each once, cutting its lineage, and
 publishes them together only after all succeeded, so a statement that
 raises changes no table. What it reports (rows_affected, duplicates,
 the incident edges a plain DELETE refuses) are ``observe`` metrics
-riding those checkpoints. START TRANSACTION snapshots the table dict,
-ROLLBACK restores it (optimistic, last-writer-wins; the reference's
-interactive isolation levels don't map 1:1, see README).
+riding those checkpoints. An INSERTed property whose value is NULL is
+absent, as everywhere else in the engine (REMOVE, reads, the duplicate
+match): it does not enter the content hash, the row or the table's
+columns, and a read returns NULL for it. A value no column type can
+hold (an empty list) is refused with the property's name. The rows an
+INSERT adds enter Spark as local relations (``local_frame``). START
+TRANSACTION snapshots the table dict, ROLLBACK restores it (optimistic,
+last-writer-wins; the reference's interactive isolation levels don't
+map 1:1, see README).
 """
 
 from __future__ import annotations
@@ -23,6 +29,7 @@ from typing import Any
 from pyspark.sql import DataFrame, Observation
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
+from pyspark.sql.types import _has_nulltype, _infer_type
 
 from .catalog import content_hash_id
 from .graph import DST, ID, SRC, EdgeType, PropertyGraph
@@ -30,7 +37,7 @@ from .gql import ast as A
 from .gql.compiler import (CompileError, ExprCompiler, Frame, QueryCompiler,
                            _ncol)
 from .gql.statements import InsertStmt, MatchMutateStmt
-from .operators.common import _ck_cut_stats
+from .operators.common import _ck_cut_stats, local_frame
 
 # helper columns of staged frames: matched node id and its SET value,
 # matched edge endpoints; none survives into a published table
@@ -101,7 +108,8 @@ def _literal_props(props: dict[str, A.Expr], params: dict,
     directly; any other *constant* expression (function calls, arithmetic
     — function_expression_insert_test.rs allows e.g. upper('x'),
     abs(-5)) through the expression compiler over a single row. Variable
-    references are rejected (nothing is bound in INSERT patterns)."""
+    references are rejected (nothing is bound in INSERT patterns). A
+    NULL value is dropped: the property is absent."""
     out = {}
     pending: dict[str, A.Expr] = {}
     for k, v in props.items():
@@ -126,6 +134,11 @@ def _literal_props(props: dict[str, A.Expr], params: dict,
         row = frame.df.select(*cols).collect()[0]
         for k in pending:
             out[k] = row[k]
+    out = {k: v for k, v in out.items() if v is not None}
+    for k, v in out.items():
+        if _has_nulltype(_infer_type(v)):
+            raise DmlError(f"INSERT property {k!r}: no column type holds "
+                           f"{v!r} (an empty or all-NULL collection)")
     return out
 
 
@@ -167,7 +180,7 @@ def execute_insert(graph: PropertyGraph, stmt: InsertStmt,
                 etype, None, node_labels[src_i], node_labels[dst_i])
             row = {SRC: node_ids[src_i], DST: node_ids[dst_i], **props}
             stage.edges[etype], n = _append(
-                stage, et, graph.spark.createDataFrame([row]),
+                stage, et, local_frame(graph.spark, [row]),
                 _stored_match(et.df, row))
             inserted.append((n, f"Duplicate edge detected ({node_ids[src_i]})"
                                 f"-[:{etype}]->({node_ids[dst_i]}); "
@@ -192,7 +205,7 @@ def _stage_node(stage: Staged, el, params) -> tuple[Any, str]:
     if old is not None and dict(old.dtypes).get(ID) != "string":
         nid = int(nid[:15], 16)
     stage.nodes[el.labels[0]], n = _append(
-        stage, old, graph.spark.createDataFrame([{ID: nid, **props}]),
+        stage, old, local_frame(graph.spark, [{ID: nid, **props}]),
         F.col(ID) == F.lit(nid))
     return nid, n
 

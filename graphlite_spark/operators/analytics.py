@@ -34,6 +34,8 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame, Window, WindowSpec
 from pyspark.sql import functions as F
 
+from .common import local_frame
+
 __all__ = [
     "top_n_per_group",
     "running_total",
@@ -230,7 +232,8 @@ def table_profile(
         numeric = isinstance(schema[c], NumericType)
         n = int(row["_n"])
         nulls = int(row[f"_null_{c}"] or 0)
-        stats = spark.createDataFrame(
+        stats = local_frame(
+            spark,
             [(
                 c, n, nulls,
                 round(nulls / n, 6) if n else 0.0,

@@ -49,6 +49,36 @@ def fits_broadcast(
     return n_rows <= max_rows and n_rows * est_row_bytes(schema) <= max_bytes
 
 
+def local_frame(spark, rows, schema=None) -> DataFrame:
+    """Driver rows (dicts, tuples or ``Row``s) as a Spark ``LocalRelation``.
+
+    ``spark.createDataFrame(<list>)`` parallelizes the rows as a Python
+    RDD, so every job that scans them (a broadcast, a checkpoint, the
+    final collect) starts a Python worker: hundreds of ms per job for
+    one row. Shipped as an Arrow table they plan as ``LocalTableScan``
+    and no worker runs. Types and values are those ``createDataFrame(
+    rows, schema)`` gives: ``schema`` (a ``StructType`` or DDL string)
+    or else PySpark's own list inference fixes the types, and PySpark's
+    own converters turn each row into its internal values (dates as
+    days, timestamps as UTC microseconds), which Arrow takes as is."""
+    import pyarrow as pa
+    from pyspark.sql.pandas.types import to_arrow_schema
+    from pyspark.sql.types import _create_converter, _parse_datatype_string
+
+    rows = list(rows)
+    if schema is None:
+        schema = spark._inferSchemaFromList(rows)
+    elif isinstance(schema, str):
+        schema = _parse_datatype_string(schema)
+    to_tuple = _create_converter(schema)
+    cols = list(zip(*(schema.toInternal(to_tuple(r)) for r in rows)))
+    arrow = to_arrow_schema(schema)
+    table = pa.Table.from_arrays(
+        [pa.array(cols[i] if cols else [], type=f.type)
+         for i, f in enumerate(arrow)], schema=arrow)
+    return spark.createDataFrame(table, schema)
+
+
 def _ck_cut_stats(df: DataFrame) -> DataFrame:
     """Eager localCheckpoint that also RESETS Catalyst's size stats.
 

@@ -24,6 +24,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from .common import local_frame
+
 
 def exact_dedup(df: DataFrame, text_col: str = "text", id_col: str = "doc_id",
                 normalize: bool = True) -> DataFrame:
@@ -1096,7 +1098,8 @@ def build_dedup_index(
                         range_by=["band", "bucket"])
     n_docs = corpus.count()
     spark = corpus.sparkSession
-    meta = spark.createDataFrame(
+    meta = local_frame(
+        spark,
         [(n, num_hashes, bands, bool(words), bool(normalize), n_docs)],
         "n int, num_hashes int, bands int, words boolean, "
         "normalize boolean, n_docs long",

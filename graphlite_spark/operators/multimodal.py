@@ -42,6 +42,8 @@ from pyspark.sql.types import (
     StructType,
 )
 
+from .common import local_frame
+
 # Exceptions that mean "this asset's bytes are corrupt/truncated/
 # unsupported" — the ONLY kinds on_error='null'/'skip' may swallow.
 # IndexError/KeyError/OverflowError arise from the hand-rolled bit
@@ -3091,7 +3093,7 @@ def make_fake_assets(spark, n: int = 8, modality: str = "image") -> DataFrame:
                 (640, 480, 5000 + 1000 * i, "fake"),
             )
         )
-    return spark.createDataFrame(rows, ASSET_SCHEMA)
+    return local_frame(spark, rows, ASSET_SCHEMA)
 
 
 PROBE_SCHEMA = StructType(

@@ -19,7 +19,8 @@ from pyspark.sql import functions as F
 
 from ..graph import DST, SRC, PropertyGraph
 from .common import (_ck_cut_stats, _ck_observe, _ck_observe_keep_stats,
-                     _parse_bytes, est_row_bytes, fits_broadcast)
+                     _parse_bytes, est_row_bytes, fits_broadcast,
+                     local_frame)
 
 _CHECKPOINT_EVERY = 4
 
@@ -257,7 +258,7 @@ def shortest_path_pair(
             # over a full table) would re-execute each time
             return v.select(F.col(c).alias("node")).limit(1) \
                 .localCheckpoint(eager=False)
-        return spark.createDataFrame([(v,)], "node: long")
+        return local_frame(spark, [(v,)], "node: long")
 
     sides = {
         "f": {"visited": _one(source).withColumn("dist", F.lit(0)),
@@ -284,11 +285,11 @@ def shortest_path_pair(
     while best is None:
         live = [s for s in sides.values() if s["alive"]]
         if not live:
-            return spark.createDataFrame([], "dist: long")
+            return local_frame(spark, [], "dist: long")
         side = min(live, key=lambda s: s["n"])
         other = sides["b"] if side is sides["f"] else sides["f"]
         if side["radius"] + other["radius"] >= max_hops:
-            return spark.createDataFrame([], "dist: long")
+            return local_frame(spark, [], "dist: long")
         lvl = side["frontier"]
         levels = []
         steps = min(side["batch"],
@@ -337,7 +338,7 @@ def shortest_path_pair(
         if side["n"] == 0:
             side["alive"] = False
             # an exhausted ball with no meeting means unreachable
-            return spark.createDataFrame([], "dist: long")
+            return local_frame(spark, [], "dist: long")
         side["visited"] = side["visited"].unionByName(nxt)
         side["frontier"] = nxt
         # sparse frontier = round-count-bound regime (long chains):
@@ -348,8 +349,8 @@ def shortest_path_pair(
         if probe["meet"] is not None:
             best = int(probe["meet"])
     if best > max_hops:
-        return spark.createDataFrame([], "dist: long")
-    return spark.createDataFrame([(best,)], "dist: long")
+        return local_frame(spark, [], "dist: long")
+    return local_frame(spark, [(best,)], "dist: long")
 
 
 def closeness_centrality(
@@ -2361,8 +2362,8 @@ def greedy_coloring(
             f"greedy_coloring: not done after {max_colors} colors —"
             f" raise max_colors")
     if colored is None:
-        return nodes.sparkSession.createDataFrame(
-            [], f"node: {id_dtype}, color: int")
+        return local_frame(
+            nodes.sparkSession, [], f"node: {id_dtype}, color: int")
     return colored
 
 
@@ -2474,8 +2475,8 @@ def maximal_matching(
     if not rounds:
         schema_t = dict(canon.dtypes)["_lo"]
         extra = ", weight: double" if weight_col is not None else ""
-        return spark.createDataFrame(
-            [], f"node_u: {schema_t}, node_v: {schema_t}{extra}")
+        return local_frame(
+            spark, [], f"node_u: {schema_t}, node_v: {schema_t}{extra}")
     # matched edges appear on both directed rows; keep the canonical
     # orientation (_u < _v)
     matched = rounds[0].where(F.col("_m") & (F.col("_u") < F.col("_v")))

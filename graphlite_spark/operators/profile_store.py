@@ -45,6 +45,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from .common import local_frame
+
 TIERS = ("scalars", "hll", "dd")
 
 # one fixed quantile set so the profile schema is stable and the
@@ -134,7 +136,8 @@ def build_profile_index(
     if id_col is not None:  # alias kept for call-site symmetry
         key_col = id_col
     reset_manifest(spark, path, list(TIERS))
-    meta = spark.createDataFrame(
+    meta = local_frame(
+        spark,
         [(by or "", text_col, key_col, int(p), int(salt), float(alpha))],
         "by string, text_col string, key_col string, p int, salt int, "
         "alpha double")

@@ -23,6 +23,8 @@ import pandas as pd  # module-level: pandas_udf type hints resolve against globa
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
+from .common import local_frame
+
 
 def _dot(a, b):
     return F.aggregate(
@@ -969,7 +971,7 @@ def ann_index_ingest_batch(
     codes = _encode_int_codes(it, int(meta["bits"]),
                               batch.schema[id_col].dataType)
     n = batch.count()
-    counts = spark.createDataFrame([(int(n),)], "n_items long")
+    counts = local_frame(spark, [(int(n),)], "n_items long")
     if mode == "replay":
         verify_replay(
             read_delta(spark, path, "codes", manifest,
@@ -1051,7 +1053,8 @@ def compact_ann_index(spark, path: str, target_mb: int = 256) -> int:
                                      "_inorm"),
                         f"{path}/codes_v{v}", target_mb=target_mb)
     _fault_point("compact:write:meta")
-    spark.createDataFrame(
+    local_frame(
+        spark,
         [(int(meta["bits"]), int(meta["dim"]), int(n_items))],
         "bits: int, dim: int, n_items: long",
     ).coalesce(1).write.mode("overwrite").parquet(f"{path}/meta_v{v}")
@@ -1097,7 +1100,8 @@ def build_rescore_index(
     meta = spark.read.parquet(path + "/codes")
     n_items = meta.count()
     dim = meta.select(F.size("_codes").alias("d")).limit(1).collect()[0]["d"]
-    spark.createDataFrame(
+    local_frame(
+        spark,
         [(int(bits), int(dim), int(n_items))],
         "bits: int, dim: int, n_items: long",
     ).coalesce(1).write.mode("overwrite").parquet(path + "/meta")
@@ -1700,8 +1704,8 @@ def semantic_dedup_band_audit(
     )
     cents, make_assign = _coarse_kmeans(it, n_lists, kmeans_iters)
     if cents is None:
-        return items.sparkSession.createDataFrame(
-            [(0, 0, 0, 0, 0.0)],
+        return local_frame(
+            items.sparkSession, [(0, 0, 0, 0, 0.0)],
             "n_pairs: long, n_auto_accept: long, n_auto_reject: long, "
             "n_band: long, band_fraction: double")
     qdf = _int8_assign_encode(
@@ -2253,8 +2257,8 @@ def pq_topk(
                                    StructType)
 
     qid_t = queries.schema[query_id_col].dataType
-    qt = spark.createDataFrame(
-        tabs, StructType([
+    qt = local_frame(
+        spark, tabs, StructType([
             StructField(query_id_col, qid_t, True),
             StructField("_tab", ArrayType(ArrayType(DoubleType())),
                         True)]))
@@ -2364,8 +2368,8 @@ def ivfpq_topk(
                                    StructType)
 
     qid_t = queries.schema[query_id_col].dataType
-    qt = spark.createDataFrame(
-        tabs, StructType([
+    qt = local_frame(
+        spark, tabs, StructType([
             StructField("_qid", qid_t, True),
             StructField("_tab", ArrayType(ArrayType(DoubleType())),
                         True)]))

@@ -16,6 +16,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from .common import local_frame
+
 _WS = r"\s+"
 
 # minimal stopword lexicons for the heuristic language scorer
@@ -1653,8 +1655,8 @@ def train_quality_lr(
         # bias rides in the broadcast row (not as a literal) so the
         # per-iteration plan is byte-identical and whole-stage-codegen
         # compilation caches across iterations
-        wmap = spark.createDataFrame([(weights, float(bias))],
-                                     "_wm map<string,double>, _b double")
+        wmap = local_frame(spark, [(weights, float(bias))],
+                           "_wm map<string,double>, _b double")
         z_expr = F.aggregate(
             F.transform(
                 "_gs",
@@ -1700,7 +1702,7 @@ def train_quality_lr(
             f"train_quality_lr: max |gradient| {max_grad} > tol={tol} "
             f"after num_iter={num_iter}; raise num_iter or lr")
     rows = [(f, w) for f, w in weights.items()] + [(None, float(bias))]
-    return spark.createDataFrame(rows, "feature string, weight double")
+    return local_frame(spark, rows, "feature string, weight double")
 
 
 def lr_quality_score(

@@ -195,6 +195,46 @@ def test_match_insert_connects_matched_nodes(db):
     assert [(r.a, r.b, r.s) for r in got] == [("Ada", "Bob", 1840)]
 
 
+def test_insert_null_property_is_absent(db):
+    from graphlite_spark.catalog import content_hash_id
+
+    db.execute("INSERT (:P {name: 'a', age: 3})")
+    assert db.execute("INSERT (:P {name: 'b', age: NULL})")[
+        "rows_affected"] == 1
+    got = db.query("MATCH (p:P) RETURN p.name AS n, p.age AS a "
+                   "ORDER BY n").collect()
+    assert [(r.n, r.a) for r in got] == [("a", 3), ("b", None)]
+    # same content as the property left out: one node, same id
+    b_id = content_hash_id(["P"], {"name": "b"})
+    assert db.graph().nodes_for_label("P").where(
+        f"_id = '{b_id}'").count() == 1
+    assert db.execute("INSERT (:P {name: 'b'})")["rows_affected"] == 0
+    # a label whose only property is NULL
+    assert db.execute("INSERT (:Q {name: NULL})")["rows_affected"] == 1
+    assert db.query("MATCH (q:Q) RETURN q.name AS n").collect()[0].n is None
+
+
+def test_insert_edge_and_match_insert_null_property(db):
+    n = db.execute("INSERT (:P {name: 'f'})-[:R {w: NULL}]->(:P {name: 'g'})")
+    assert n["rows_affected"] == 3
+    n = db.execute("MATCH (a:P {name: 'g'}) "
+                   "INSERT (a)-[:R {w: 2}]->(:P {name: 'h', age: NULL})")
+    assert n["rows_affected"] == 2
+    got = db.query("MATCH (a:P)-[r:R]->(b:P) "
+                   "RETURN a.name AS a, r.w AS w, b.name AS b, b.age AS age "
+                   "ORDER BY a").collect()
+    assert [tuple(r) for r in got] == [("f", None, "g", None),
+                                      ("g", 2, "h", None)]
+
+
+def test_insert_empty_list_property_is_refused(db):
+    from graphlite_spark.dml import DmlError
+
+    with pytest.raises(DmlError, match="'tags'"):
+        db.execute("INSERT (:P {name: 'x', tags: []})")
+    assert "P" not in db.graph().nodes
+
+
 def test_select_from_graph(spark):
     from graphlite_spark import GraphLiteSpark
 
