@@ -16,6 +16,7 @@ Queries compile to lazy DataFrames; Catalyst owns physical execution.
 
 from __future__ import annotations
 
+from dataclasses import replace
 from typing import Any, Optional
 
 from pyspark.sql import DataFrame, SparkSession
@@ -531,7 +532,7 @@ class GraphLiteSpark:
             self._txn_snapshot = {
                 path: (
                     dict(self.catalog.get_graph(path).nodes),
-                    {k: (v.df, v.src_label, v.dst_label) for k, v in
+                    {k: replace(v) for k, v in
                      self.catalog.get_graph(path).edges.items()},
                 )
                 for path in self.catalog.list_graphs()
@@ -548,16 +549,12 @@ class GraphLiteSpark:
         if kind == "ROLLBACK":
             if self._txn_snapshot is None:
                 return {"status": "no transaction", "rows_affected": 0}
-            from .graph import EdgeType as ET
-
             for path, (nodes, edges) in self._txn_snapshot.items():
                 if not self.catalog.has_graph(path):
                     continue
                 g = self.catalog.get_graph(path)
                 g.nodes = dict(nodes)
-                g.edges = {
-                    k: ET(k, df, s, d) for k, (df, s, d) in edges.items()
-                }
+                g.edges = dict(edges)
             self._txn_snapshot = None
             self._txn_readonly = False
             return {"status": "rolled back", "rows_affected": 0}
@@ -568,6 +565,7 @@ class GraphLiteSpark:
         from pyspark.sql import Row
 
         name = stmt.proc.lower()
+        schema = None  # of ``rows``; inferred from them when None
         if name in self._procedures:
             out = self.execute(self._procedures[name], params)
             if stmt.yield_cols and hasattr(out, "select"):
@@ -660,10 +658,11 @@ class GraphLiteSpark:
             target = (stmt.args[0].value if stmt.args
                       else self.catalog.split_path(self._current_graph or "/default/")[0])
             rows = [
-                Row(schema=target, graph=g.split("/")[-1])
+                (target, g.split("/")[-1])
                 for g in self.catalog.list_graphs()
                 if self.catalog.split_path(g)[0] == target
-            ] or [Row(schema=target, graph=None)]
+            ] or [(target, None)]
+            schema = "schema string, graph string"
         elif name == "gql.get_schema_statistics":
             from collections import Counter
 
@@ -1219,7 +1218,7 @@ class GraphLiteSpark:
             return df
         else:
             raise NotImplementedError(f"procedure {stmt.proc}")
-        df = local_frame(self.spark, rows)
+        df = local_frame(self.spark, rows, schema)
         if stmt.yield_cols:
             df = df.select(*stmt.yield_cols)
         if stmt.where is not None:

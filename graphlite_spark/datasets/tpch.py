@@ -13,9 +13,13 @@ Graph schema:
     (Supplier)-[:IN_NATION]->(Nation)
     (Nation)-[:IN_REGION]->(Region)
 
-Node ids are made globally unique by namespacing: each label table's
-``_id`` is ``label_prefix * 10^12 + natural_key`` — cheap, collision
-free at any realistic scale, and keeps ids as longs for fast joins.
+Node ids are made globally unique by namespacing: each label declares
+its natural key, and its ``_id`` is ``label_prefix * 10^12 + key`` —
+cheap, collision free at any realistic scale, and keeps ids as longs
+for fast joins. Every edge is declared over the raw key columns of its
+table (``by_key``), so a key predicate reaches the parquet scan and
+PLACED, PERFORMED, FROM_NATION, IN_NATION and IN_REGION read their
+Order/Event/Customer/Supplier/Nation endpoint from their own row.
 """
 
 from __future__ import annotations
@@ -36,11 +40,6 @@ _LABEL_NS = {
     "User": 8,
     "Document": 9,
 }
-_NS = 10**12
-
-
-def _nid(label: str, col) -> object:
-    return (F.lit(_LABEL_NS[label] * _NS) + col.cast("long")).alias("_id")
 
 
 def _ns_timestamp_cols(path: str) -> list[str]:
@@ -115,15 +114,11 @@ def tpch_graph(spark: SparkSession, sf_dir: str) -> PropertyGraph:
     g = PropertyGraph(spark, name="tpch")
 
     def nodes(label: str, df: DataFrame, key: str) -> None:
-        g.add_nodes(label, df.withColumn("_id", _nid(label, F.col(key))), "_id")
-        # the namespaced id is invertible: key = _id - ns. Declaring that
-        # lets the compiler answer `n.<key>` straight from edge endpoints
-        # (cast back so derived values keep the source column's type)
-        ns = _LABEL_NS[label] * _NS
-        ktype = dict(df.dtypes)[key]
-        g.set_key_derivation(
-            label, key, lambda c, _ns=ns, _kt=ktype: (c - F.lit(_ns)).cast(_kt)
-        )
+        g.add_nodes(label, df, key=key, ns=_LABEL_NS[label])
+
+    def edge(name, df, src_key, dst_key, src_label, dst_label, props=()):
+        g.add_edges(name, df, src_key, dst_key, src_label, dst_label,
+                    by_key=True, properties=list(props))
 
     nodes("Region", t["region"], "r_regionkey")
     nodes("Nation", t["nation"], "n_nationkey")
@@ -132,65 +127,18 @@ def tpch_graph(spark: SparkSession, sf_dir: str) -> PropertyGraph:
     nodes("Part", t["part"], "p_partkey")
     nodes("Order", t["orders"], "o_orderkey")
 
-    def edge(name, df, src_expr, dst_expr, src_label, dst_label, props=()):
-        edf = df.select(
-            src_expr.alias("_src"),
-            dst_expr.alias("_dst"),
-            *[F.col(p) for p in props],
-        )
-        g.add_edges(name, edf, "_src", "_dst", src_label, dst_label)
-
-    edge(
-        "PLACED",
-        t["orders"],
-        _nid("Customer", F.col("o_custkey")),
-        _nid("Order", F.col("o_orderkey")),
-        "Customer",
-        "Order",
-    )
-    li_props = [c for c in t["lineitem"].columns]
-    edge(
-        "LINE",
-        t["lineitem"],
-        _nid("Order", F.col("l_orderkey")),
-        _nid("Part", F.col("l_partkey")),
-        "Order",
-        "Part",
-        li_props,
-    )
-    edge(
-        "SUPPLIES",
-        t["lineitem"],
-        _nid("Supplier", F.col("l_suppkey")),
-        _nid("Part", F.col("l_partkey")),
-        "Supplier",
-        "Part",
-        li_props,
-    )
-    edge(
-        "FROM_NATION",
-        t["customer"],
-        _nid("Customer", F.col("c_custkey")),
-        _nid("Nation", F.col("c_nationkey")),
-        "Customer",
-        "Nation",
-    )
-    edge(
-        "IN_NATION",
-        t["supplier"],
-        _nid("Supplier", F.col("s_suppkey")),
-        _nid("Nation", F.col("s_nationkey")),
-        "Supplier",
-        "Nation",
-    )
-    edge(
-        "IN_REGION",
-        t["nation"],
-        _nid("Nation", F.col("n_nationkey")),
-        _nid("Region", F.col("n_regionkey")),
-        "Nation",
-        "Region",
-    )
+    edge("PLACED", t["orders"], "o_custkey", "o_orderkey", "Customer", "Order")
+    li_props = t["lineitem"].columns
+    edge("LINE", t["lineitem"], "l_orderkey", "l_partkey", "Order", "Part",
+         li_props)
+    edge("SUPPLIES", t["lineitem"], "l_suppkey", "l_partkey", "Supplier",
+         "Part", li_props)
+    edge("FROM_NATION", t["customer"], "c_custkey", "c_nationkey",
+         "Customer", "Nation")
+    edge("IN_NATION", t["supplier"], "s_suppkey", "s_nationkey",
+         "Supplier", "Nation")
+    edge("IN_REGION", t["nation"], "n_nationkey", "n_regionkey",
+         "Nation", "Region")
 
     # Event/User subgraph from the events table — gives the graph a
     # self-referencing edge type (Event-FOLLOWS->Event: each user's events
@@ -199,32 +147,14 @@ def tpch_graph(spark: SparkSession, sf_dir: str) -> PropertyGraph:
 
     ev = t["events"]
     nodes("Event", ev, "event_id")
-    users = ev.select(F.col("user_id").alias("user_id")).distinct()
-    nodes("User", users, "user_id")
+    nodes("User", ev.select("user_id").distinct(), "user_id")
     w = Window.partitionBy("user_id").orderBy("ts", "event_id")
     follows = (
         ev.withColumn("_next", F.lead("event_id").over(w))
         .filter(F.col("_next").isNotNull())
-        .select(
-            _nid("Event", F.col("event_id")).alias("_src_raw"),
-            _nid("Event", F.col("_next")).alias("_dst_raw"),
-        )
+        .select("event_id", "_next")
     )
-    g.add_edges(
-        "FOLLOWS",
-        follows.select(F.col("_src_raw").alias("_src"), F.col("_dst_raw").alias("_dst")),
-        "_src",
-        "_dst",
-        "Event",
-        "Event",
-    )
+    edge("FOLLOWS", follows, "event_id", "_next", "Event", "Event")
     nodes("Document", t["documents"], "doc_id")
-    edge(
-        "PERFORMED",
-        ev,
-        _nid("User", F.col("user_id")),
-        _nid("Event", F.col("event_id")),
-        "User",
-        "Event",
-    )
+    edge("PERFORMED", ev, "user_id", "event_id", "User", "Event")
     return g

@@ -15,11 +15,13 @@ property (column ``n___id``). WITH/UNWIND re-bind the namespace exactly
 like the reference's WITH-clause processor
 (read_engine/processors/with_clause_processor.rs:42-231).
 
-Each table enters a frame through one ``select`` (``_enter``): it renames
-the columns into the variable's namespace, keeps only the properties the
-query reads (``_projected``; all of them when the footprint is unknown)
-and computes the elided anchor/target ids and derived keys from the edge
-endpoints. Each DataFrame op is an eager Catalyst analysis plus JVM round
+Each table enters a frame through one ``select`` (``_enter``, and the
+edge select in ``_expand``): it renames the columns into the variable's
+namespace, keeps only the properties the query reads (``_projected``;
+all of them when the footprint is unknown) and computes the elided
+anchor's and target's ids, keys and same-row properties from the edge
+row (``_endpoint``). Where the graph declares keys (``graph.py``), joins
+and key predicates use the raw key columns, so they reach the scan. Each DataFrame op is an eager Catalyst analysis plus JVM round
 trips, so the number of ops, not the size of each, sets compile time.
 """
 
@@ -69,7 +71,7 @@ def _ncol(var: str, prop: str) -> str:
 def _enter(df: DataFrame, var: str, props: list[str], *derived: Column) -> DataFrame:
     """The one select through which a table enters a frame: ``props``
     renamed into ``var``'s namespace, plus columns computed from the
-    table's own columns (elided endpoint ids, derived keys)."""
+    table's own columns."""
     return df.select(*[F.col(p).alias(_ncol(var, p)) for p in props], *derived)
 
 
@@ -617,51 +619,63 @@ class QueryCompiler:
             return False
         return True
 
-    def _derivable(self, np: A.NodePattern, implied_label: Optional[str],
-                   allow_inline: bool = True):
-        """Key-derivation elision (beyond _node_elidable): the variable IS
-        referenced, but only via ``_id`` and/or the label's declared natural
-        key — which ``PropertyGraph.set_key_derivation`` says is computable
-        from the graph id. The edge endpoint already carries the id, so the
-        node-table scan+join contributes nothing; returns (key_prop, decode)
-        when elidable this way, else None."""
+    def _endpoint(self, np: A.NodePattern, label: Optional[str], et,
+                  side: str) -> Optional[str]:
+        """How the row of edge ``et`` stands in for node ``np`` at its
+        ``side`` endpoint, with no join to ``label``'s table: "id" when the
+        node is never read (the endpoint id is its identity); "row" when
+        the edge is drawn from the node's own table on its key, so the
+        node's properties are in the row; "key" when the node is read only
+        through ``_id`` and its key, which the edge's raw key column
+        holds. None when the node table must be joined."""
+        if self._node_elidable(np, label):
+            return "id"
+        ep = self.graph.endpoint_key(et, side)
+        if ep is None or (np.labels and np.labels != [label]):
+            return None
+        nk, col = ep
+        if nk.table is et.keys.table and col == nk.column:
+            return "row"
         if self._refprops is None or np.var is None:
             return None
-        label = implied_label
-        if np.labels:
-            if len(np.labels) != 1 or (implied_label and np.labels[0] != implied_label):
-                return None
-            label = np.labels[0]
-        if label is None or (np.labels and implied_label is None):
-            return None
-        der = self.graph.key_derivations.get(label)
-        if der is None:
-            return None
-        key_prop, _decode = der
-        footprint = self._refprops.get(np.var, set())
-        if footprint is None or not footprint <= {key_prop, ID}:
-            return None
-        if np.props and (
-            not allow_inline or any(k not in (key_prop, ID) for k in np.props)
-        ):
-            return None
-        return der
+        fp = self._refprops.get(np.var, set())
+        if fp is not None and fp | set(np.props) <= {nk.column, ID}:
+            return "key"
+        return None
+
+    def _from_edge_row(self, mode: Optional[str], var: str,
+                       np: A.NodePattern, ep, end: Column):
+        """What an endpoint read from its edge row (``_endpoint``'s
+        ``mode``) adds to the edge's select: the columns, the props they
+        bind ``var`` to, and the node table to read the edge rows from
+        when the node's properties are in them."""
+        if mode == "row":
+            nk = ep[0]
+            props = self._projected(np.var, nk.df.columns, np.props, nk.column)
+            return [F.col(p).alias(_ncol(var, p)) for p in props], props, nk.df
+        cols = [end.alias(_ncol(var, ID))]
+        if mode != "key":
+            return cols, [ID], None
+        nk, col = ep
+        cols.append(F.col(col).cast(nk.dtype).alias(_ncol(var, nk.column)))
+        return cols, [ID, nk.column], None
 
     def _projected(self, var: Optional[str], columns: list[str],
-                   inline=()) -> list[str]:
+                   inline=(), key: Optional[str] = None) -> list[str]:
         """The columns of a table that enter the frame for ``var``: the
-        identity columns, the inline-constrained keys and the query's
-        footprint of ``var`` (the ``_refprops`` that ``_derivable``
-        trusts). Every column when the footprint is unknown: no footprint
-        (``RETURN *``, path variables, DML), or ``var`` used as a whole
-        entity. A property outside the footprint is never read, so its
-        absence cannot turn a value into the missing-property NULL."""
+        identity columns (a declared ``key`` among them), the
+        inline-constrained keys and the query's footprint of ``var`` (the
+        ``_refprops`` that ``_endpoint`` trusts). Every column when the
+        footprint is unknown: no footprint (``RETURN *``, path variables,
+        DML), or ``var`` used as a whole entity. A property outside the
+        footprint is never read, so its absence cannot turn a value into
+        the missing-property NULL."""
         if self._refprops is None:
             return list(columns)
         fp = self._refprops.get(var, set()) if var is not None else set()
         if fp is None:
             return list(columns)
-        keep = fp | set(inline) | {ID, SRC, DST}
+        keep = fp | set(inline) | {ID, SRC, DST, key}
         return [c for c in columns if c in keep]
 
     # ---- public -----------------------------------------------------------
@@ -1128,46 +1142,30 @@ class QueryCompiler:
             return self._compile_path_with_var(pat, outer)
         if pending is None:
             pending = []
-        # anchor elision: when the first node is an unreferenced structural
-        # placeholder and the pattern continues with a typed edge, start the
-        # plan at the edge table (one scan instead of scan+join)
+        # anchor elision: when the first node needs nothing its edge row
+        # does not give (an unreferenced placeholder, a node read through
+        # the edge's raw key, or one whose table the edge is drawn from),
+        # start the plan at the edge table (one scan instead of scan+join)
         if (
             len(elems) > 1
             and elems[1].quant is None
             and not (outer and node0.var in (outer or {}))
-            and (
-                self._node_elidable(node0, self._anchor_implied(elems[1], node0))
-                or self._derivable(
-                    node0, self._anchor_implied(elems[1], node0), allow_inline=False
-                )
-                is not None
-            )
+            and self._anchor_on_edge(node0, elems[1])
         ):
             frame, prev_var = self._expand(
                 None, node0.var or _anon(), elems[1], elems[2], prev_node=node0
             )
             i = 3
-            while i < len(elems):
-                edge: A.EdgePattern = elems[i]
-                node: A.NodePattern = elems[i + 1]
-                if edge.quant is not None:
-                    frame, prev_var = self._expand_varlen(frame, prev_var, edge, node)
-                else:
-                    frame, prev_var = self._expand(frame, prev_var, edge, node)
-                i += 2
-            return frame
-        if (
-            not node0.labels
-            and not (outer and node0.var in (outer or {}))
-            and len(elems) > 1
-        ):
-            implied = self._anchor_implied(elems[1], node0)
-            if implied is not None:
-                node0 = A.NodePattern(node0.var, [implied], node0.props)
-        frame = self._scan_node(node0, outer)
-        prev_var = node0.var or self._last_anon
+        else:
+            if not node0.labels and not (outer and node0.var in (outer or {})) \
+                    and len(elems) > 1:
+                implied = self._anchor_implied(elems[1], node0)
+                if implied is not None:
+                    node0 = A.NodePattern(node0.var, [implied], node0.props)
+            frame = self._scan_node(node0, outer)
+            prev_var = node0.var or self._last_anon
+            i = 1
         frame, pending[:] = self._apply_pushable(frame, pending)
-        i = 1
         while i < len(elems):
             edge: A.EdgePattern = elems[i]
             node: A.NodePattern = elems[i + 1]
@@ -1178,6 +1176,17 @@ class QueryCompiler:
             frame, pending[:] = self._apply_pushable(frame, pending)
             i += 2
         return frame
+
+    def _anchor_on_edge(self, np: A.NodePattern, edge: A.EdgePattern) -> bool:
+        implied = self._anchor_implied(edge, np)
+        if self._node_elidable(np, implied):
+            return True
+        if implied is None:
+            return False
+        side = SRC if edge.direction == "out" else DST
+        return self._endpoint(
+            np, implied, self.graph.edge_type(edge.types[0]), side
+        ) is not None
 
     def _compile_path_with_var(
         self, pat: A.PathPattern, outer: Optional[dict] = None
@@ -1234,7 +1243,9 @@ class QueryCompiler:
             labels = [outer[np.var].label]
         if len(labels) == 1:
             ndf = self.graph.nodes_for_label(labels[0])
-            props = self._projected(np.var, ndf.columns, np.props)
+            nk = self.graph.node_key(labels[0])
+            props = self._projected(np.var, ndf.columns, np.props,
+                                    nk and nk.column)
             df = _enter(ndf, var, props)
             b = Binding("node", labels[0], props)
         elif labels:
@@ -1300,9 +1311,12 @@ class QueryCompiler:
 
         frame=None means the anchor node was elided: the edge table itself
         is the row source (its src/dst provide the anchor's identity).
-        Target-node joins are likewise elided when the node variable is an
-        unreferenced placeholder — the graph invariant (edges reference
-        existing unique node ids) makes those joins cardinality-neutral.
+        Target-node joins are likewise elided when the edge row gives all
+        the node needs (``_endpoint``) — the graph invariant (edges
+        reference existing unique node ids) makes those joins
+        cardinality-neutral. Where the graph declares keys, joins and the
+        keys read from the edge use its raw key columns, and a node whose
+        table the edge is drawn from is read from the edge row.
         """
         evar = edge.var or _anon()
         nvar = node.var or _anon()
@@ -1313,9 +1327,9 @@ class QueryCompiler:
             prev_b = Binding(
                 "node",
                 prev_node.labels[0]
-                if prev_node and prev_node.labels
+                if prev_node.labels
                 else self._anchor_implied(edge, prev_node),
-                [ID],
+                [],
             )
 
         directions = [edge.direction] if edge.direction in ("out", "in") else ["out", "in"]
@@ -1346,48 +1360,61 @@ class QueryCompiler:
                 if node.labels and tgt_label not in node.labels:
                     continue
                 near, far = (SRC, DST) if dirn == "out" else (DST, SRC)
+                near_lbl = et.src_label if dirn == "out" else et.dst_label
+                # the rows the edge is read from, and its endpoint ids:
+                # encoded from the raw keys while its declaration stands
+                ek = self.graph.edge_keys(et)
+                if ek is None:
+                    table, ends = et.df, {SRC: F.col(SRC), DST: F.col(DST)}
+                else:
+                    table = ek.table
+                    ends = {SRC: ek.source.encode(F.col(ek.src)),
+                            DST: ek.destination.encode(F.col(ek.dst))}
+                near_key = self.graph.endpoint_key(et, near)
+                far_key = self.graph.endpoint_key(et, far)
+                eprops = self._projected(edge.var, et.properties, edge.props)
                 # the edge table's one select also computes the elided
-                # anchor's and target's ids and derived keys from its
-                # endpoint columns
+                # anchor's and target's ids, keys and same-row properties
                 derived: list[Column] = []
+                raws: list[str] = []  # raw key columns joined on
+                amode = tmode = None
                 aprops: list[str] = []
                 if frame is None:
-                    # anchor elided: the edge table is the row source
-                    derived.append(F.col(near).alias(_ncol(prev_var, ID)))
-                    anchor_lbl = et.src_label if dirn == "out" else et.dst_label
-                    d0 = (
-                        self._derivable(prev_node, anchor_lbl, allow_inline=False)
-                        if prev_node is not None
-                        else None
-                    )
-                    if d0 is not None and not self._node_elidable(prev_node, anchor_lbl):
-                        # anchor referenced only via its derivable key:
-                        # compute it from the edge endpoint id
-                        derived.append(
-                            d0[1](F.col(near)).alias(_ncol(prev_var, d0[0]))
-                        )
-                        aprops.append(d0[0])
-                elided = not rebound and self._node_elidable(node, tgt_label)
-                d = None if rebound or elided else self._derivable(node, tgt_label)
-                skip_join = elided or d is not None
-                if skip_join:
-                    # skip the target node-table join; identity comes from
-                    # the edge's endpoint column, and a target referenced
-                    # only via its derivable key decodes it from there
-                    derived.append(F.col(far).alias(_ncol(nvar, ID)))
-                    nprops = [ID]
-                    if d is not None:
-                        derived.append(d[1](F.col(far)).alias(_ncol(nvar, d[0])))
-                        nprops = [ID, d[0]]
-                eprops = self._projected(edge.var, et.properties, edge.props)
-                edf = _enter(et.df, evar, [SRC, DST, *eprops], *derived)
-                join_key, other_key = _ncol(evar, near), _ncol(evar, far)
+                    amode = self._endpoint(prev_node, near_lbl, et, near)
+                    cols, aprops, rows = self._from_edge_row(
+                        amode, prev_var, prev_node, near_key, ends[near])
+                    derived += cols
+                    table = rows if rows is not None else table
+                if not rebound:
+                    tmode = self._endpoint(node, tgt_label, et, far)
+                    if tmode == "row" and amode == "row" \
+                            and far_key[0].df is not table:
+                        tmode = None  # one row, two node tables: join one
+                    if tmode is not None:
+                        cols, nprops, rows = self._from_edge_row(
+                            tmode, nvar, node, far_key, ends[far])
+                        derived += cols
+                        table = rows if rows is not None else table
+                    elif far_key is not None:
+                        raws.append(far_key[1])
                 if frame is None:
-                    joined = edf
+                    on = None
+                elif near_key is not None and prev_b.label == near_lbl \
+                        and near_key[0].column in prev_b.props:
+                    raws.append(near_key[1])
+                    on = (F.col(_ncol(prev_var, near_key[0].column))
+                          == F.col(_ncol(evar, near_key[1])))
                 else:
-                    joined = frame.df.join(
-                        edf, F.col(_ncol(prev_var, ID)) == F.col(join_key), "inner"
-                    )
+                    on = F.col(_ncol(prev_var, ID)) == F.col(_ncol(evar, near))
+                edf = table.select(
+                    *[ends[s].alias(_ncol(evar, s)) for s in (SRC, DST)],
+                    *[F.col(p).alias(_ncol(evar, p)) for p in eprops],
+                    *derived,
+                    *[F.col(c).alias(_ncol(evar, c))
+                      for c in dict.fromkeys(raws) if c not in eprops],
+                )
+                other_key = _ncol(evar, far)
+                joined = edf if on is None else frame.df.join(edf, on, "inner")
                 if rebound:
                     # target var already bound (cycle / self-loop /
                     # within-pattern reuse): enforce identity with an
@@ -1417,13 +1444,16 @@ class QueryCompiler:
                             ndf, F.col(other_key) == F.col(re_id), "inner"
                         ).drop(re_id)
                     nprops = sorted(set(exist_b.props) | set(missing))
-                elif not skip_join:
+                elif tmode is None:
                     ndf = self.graph.nodes_for_label(tgt_label)
-                    nprops = self._projected(node.var, ndf.columns, node.props)
-                    joined = joined.join(
-                        _enter(ndf, nvar, nprops),
-                        F.col(other_key) == F.col(_ncol(nvar, ID)), "inner",
-                    )
+                    if far_key is not None:
+                        key = far_key[0].column
+                        cond = (F.col(_ncol(evar, far_key[1]))
+                                == F.col(_ncol(nvar, key)))
+                    else:
+                        key, cond = None, F.col(other_key) == F.col(_ncol(nvar, ID))
+                    nprops = self._projected(node.var, ndf.columns, node.props, key)
+                    joined = joined.join(_enter(ndf, nvar, nprops), cond, "inner")
                 parts.append(joined)
                 used_et.append(et)
                 eprops_parts.append(eprops)
@@ -1457,14 +1487,14 @@ class QueryCompiler:
                 df = df.unionByName(p.select(*cols))
             eb_label = None
             eprops = sorted(set.intersection(*map(set, eprops_parts)))
-            # anchor derivation: only derived-key columns every
-            # alternative computes survive the union
+            # elided anchor: only the columns every alternative reads
+            # from its edge row survive the union
             aprops = sorted(set.intersection(*map(set, aprops_parts)))
             nb_label = node.labels[0] if node.labels else None
 
         if frame is None:
             bindings = {
-                prev_var: Binding(prev_b.kind, prev_b.label, [*prev_b.props, *aprops])
+                prev_var: Binding(prev_b.kind, prev_b.label, aprops)
             }
         else:
             bindings = dict(frame.bindings)
@@ -1483,6 +1513,8 @@ class QueryCompiler:
         else:
             bindings[nvar] = Binding("node", nb_label, nprops_all or [])
         out = Frame(df, bindings)
+        if frame is None:
+            out = self._inline_props(out, prev_var, prev_node.props)
         out = self._inline_props(out, evar, edge.props)
         out = self._inline_props(out, nvar, node.props)
         return out, nvar
@@ -1711,17 +1743,18 @@ class QueryCompiler:
                 else None
             )
         # restore names for non-shared right columns
+        # (an entity's whole namespace: a raw key column an expansion
+        # joined on sits there too, outside its binding's props)
         shared_cols = set()
+        prefixes = []
         for v in shared:
-            b = left.bindings[v]
-            if b.kind in ("node", "edge"):
-                shared_cols.update(_ncol(v, p) for p in b.props)
-                shared_cols.add(_ncol(v, ID))
+            if left.bindings[v].kind in ("node", "edge"):
+                prefixes.append(_ncol(v, ""))
             else:
                 shared_cols.add(v)
         out_cols = [F.col(c) for c in left.df.columns]
         for c in right.df.columns:
-            if c not in shared_cols:
+            if c not in shared_cols and not c.startswith(tuple(prefixes)):
                 out_cols.append(F.col(ren[c]).alias(c))
         df = df.select(*out_cols)
         return Frame(df, bindings)

@@ -319,21 +319,6 @@ class Parser:
             rc.select_where = where  # type: ignore[attr-defined]
         return mc, rc, from_graph
 
-    def _parse_return_like_select(self) -> ReturnClause:
-        distinct = self.try_kw("DISTINCT")
-        items = self._parse_items()
-        where = self.parse_expr() if self.try_kw("WHERE") else None
-        group_by, group_mode = self._parse_group_by()
-        having = None
-        if self.try_kw("HAVING"):
-            having = self.parse_expr()
-        order_by, skip, limit = self._parse_order_skip_limit()
-        rc = ReturnClause(
-            items, distinct, order_by, skip, limit, group_by, having, group_mode
-        )
-        rc.select_where = where  # type: ignore[attr-defined]
-        return rc
-
     # -- patterns ------------------------------------------------------------
     def parse_path_pattern(self) -> PathPattern:
         pvar = None

@@ -17,18 +17,68 @@ whatever strategy Catalyst picks (broadcast / shuffled-hash / SMJ).
 Nodes with multiple labels appear in each label's table with the same
 ``_id``; ids must be unique graph-wide so entity-identity semantics
 (DISTINCT / set ops, SURVEY §2.7) hold.
+
+Declared keys, in the SQL/PGQ vocabulary (SQL:2023 Part 16). A node
+label may name its ``KEY`` column and the encoding of its ids,
+``_id = ns·10¹² + key`` (``add_nodes(label, df, key=, ns=)``); like
+``_id``, the key is unique and non-null. An edge may be declared over
+raw key columns of a table (``add_edges(..., by_key=True)``): ``SOURCE
+KEY (src_col) REFERENCES`` the source label's key and ``DESTINATION KEY
+(dst_col) REFERENCES`` the destination's; ``_src``/``_dst`` are encoded
+from them. The compiler then filters and joins on the raw keys, so a key
+predicate reaches the parquet scan, and where an edge is drawn from its
+endpoint's own table on that node's key (TPC-H's PLACED rows are the
+Order rows) it reads the node's properties from the edge row, no join.
+
+A declaration holds only for the table it was declared on. A write
+that publishes a new table for the label or the edge (``dml.commit``)
+drops every raw-key and same-row use that depends on it, and reads fall
+back to ``_id`` joins: ``node_key``/``edge_keys`` compare the current
+table with the declared one by identity. A graph that declares no keys
+compiles on ``_id`` alone.
 """
 
 from __future__ import annotations
 
-from dataclasses import dataclass, field
+from dataclasses import dataclass, field, replace
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 ID = "_id"
 SRC = "_src"
 DST = "_dst"
+NS = 10**12  # a keyed label's ids are ns * NS + key
+
+
+@dataclass(frozen=True, eq=False)
+class NodeKey:
+    """``KEY (column)`` of a label whose ids encode it: ``_id = ns·NS +
+    column``. ``table`` is the table as declared; ``df``, the node table
+    (``table`` plus ``_id``) the declaration holds for."""
+
+    column: str
+    ns: int
+    dtype: str
+    table: DataFrame
+    df: DataFrame | None = None
+
+    def encode(self, key: Column) -> Column:
+        return F.lit(self.ns * NS) + key.cast("long")
+
+
+@dataclass(frozen=True, eq=False)
+class EdgeKeys:
+    """``SOURCE KEY (src) REFERENCES source`` and ``DESTINATION KEY (dst)
+    REFERENCES destination``: raw key columns of ``table``, from which
+    the edge table ``df`` the declaration holds for was encoded."""
+
+    table: DataFrame
+    src: str
+    dst: str
+    source: NodeKey
+    destination: NodeKey
+    df: DataFrame | None = None
 
 
 @dataclass
@@ -37,12 +87,14 @@ class EdgeType:
 
     ``src_label``/``dst_label`` give the compiler the endpoint node tables
     (GraphLite edges carry exactly one label, storage/types.rs:128-134).
+    ``keys`` is set when the edge was declared over raw key columns.
     """
 
     name: str
     df: DataFrame
     src_label: str
     dst_label: str
+    keys: EdgeKeys | None = None
 
     @property
     def properties(self) -> list[str]:
@@ -58,17 +110,24 @@ class PropertyGraph:
     edges: dict[str, EdgeType] = field(default_factory=dict)
     name: str = "graph"
     graph_type: object | None = None  # GraphTypeSpec when typed (ast.rs:749-812)
-    # {label: (key_prop, decode)} where decode(Column[_id]) -> Column[key]:
-    # declares that a label's natural key is recoverable from its graph id
-    # (e.g. namespaced ids). Lets the compiler answer `n.key` from an edge
-    # endpoint without scanning/joining the node table at all.
-    key_derivations: dict[str, tuple] = field(default_factory=dict)
+    node_keys: dict[str, NodeKey] = field(default_factory=dict)
 
     # -- construction -----------------------------------------------------
-    def add_nodes(self, label: str, df: DataFrame, id_col: str) -> "PropertyGraph":
+    def add_nodes(self, label: str, df: DataFrame, id_col: str | None = None,
+                  *, key: str | None = None,
+                  ns: int | None = None) -> "PropertyGraph":
         """Register a node table. ``id_col`` is renamed to ``_id`` (kept as a
-        property too, so GQL can reference it by its natural name)."""
-        if id_col != ID:
+        property too, so GQL can reference it by its natural name). Or
+        declare the label's ``key`` and id namespace ``ns``: ``_id`` is
+        then ``ns·NS + key``."""
+        if (id_col is None) == (key is None) or (key is None) != (ns is None):
+            raise ValueError("add_nodes takes id_col, or key and ns")
+        self.node_keys.pop(label, None)
+        if key is not None:
+            nk = NodeKey(key, ns, dict(df.dtypes)[key], df)
+            df = df.withColumn(ID, nk.encode(F.col(key)))
+            self.node_keys[label] = replace(nk, df=df)
+        elif id_col != ID:
             df = df.withColumn(ID, F.col(id_col))
         self.nodes[label] = df
         return self
@@ -81,26 +140,50 @@ class PropertyGraph:
         dst_col: str,
         src_label: str,
         dst_label: str,
+        *,
+        by_key: bool = False,
+        properties: list[str] | None = None,
     ) -> "PropertyGraph":
-        if src_col != SRC:
-            df = df.withColumn(SRC, F.col(src_col))
-        if dst_col != DST:
-            df = df.withColumn(DST, F.col(dst_col))
-        self.edges[name] = EdgeType(name, df, src_label, dst_label)
+        """Register an edge table whose ``src_col``/``dst_col`` hold its
+        endpoint ids. With ``by_key`` they are raw keys referencing the
+        endpoint labels' declared keys, and the edge keeps ``properties``
+        (default: every column of ``df``)."""
+        keys = None
+        if by_key:
+            keys = EdgeKeys(df, src_col, dst_col, self.node_keys[src_label],
+                            self.node_keys[dst_label])
+            df = df.select(
+                keys.source.encode(F.col(src_col)).alias(SRC),
+                keys.destination.encode(F.col(dst_col)).alias(DST),
+                *(df.columns if properties is None else properties))
+            keys = replace(keys, df=df)
+        else:
+            if src_col != SRC:
+                df = df.withColumn(SRC, F.col(src_col))
+            if dst_col != DST:
+                df = df.withColumn(DST, F.col(dst_col))
+        self.edges[name] = EdgeType(name, df, src_label, dst_label, keys)
         return self
 
-    def set_key_derivation(self, label: str, key_prop: str, decode) -> "PropertyGraph":
-        """Declare that ``label``'s ``key_prop`` equals ``decode(_id)``.
+    # -- declared keys, while the tables they were declared on stand ------
+    def node_key(self, label: str | None) -> NodeKey | None:
+        k = self.node_keys.get(label)
+        return k if k is not None and self.nodes.get(label) is k.df else None
 
-        ``decode`` is Column -> Column and must be exact on every id of the
-        label (the datasets here use ``_id = label_ns + key``, so the
-        inverse is a subtraction). The compiler then elides node-table
-        joins for variables whose only referenced properties are the key
-        and/or ``_id`` — at scale that removes a full table scan plus a
-        shuffle join per such variable.
-        """
-        self.key_derivations[label] = (key_prop, decode)
-        return self
+    @staticmethod
+    def edge_keys(et: EdgeType) -> EdgeKeys | None:
+        k = et.keys
+        return k if k is not None and et.df is k.df else None
+
+    def endpoint_key(self, et: EdgeType, side: str) -> tuple[NodeKey, str] | None:
+        """The ``side`` (``_src``/``_dst``) endpoint's key and the column of
+        the edge's table that holds it, while both declarations stand."""
+        k = self.edge_keys(et)
+        if k is None:
+            return None
+        label, nk, col = ((et.src_label, k.source, k.src) if side == SRC
+                          else (et.dst_label, k.destination, k.dst))
+        return (nk, col) if self.node_key(label) is nk else None
 
     # -- lookups used by the compiler -------------------------------------
     def node_labels(self) -> list[str]:

@@ -72,15 +72,3 @@ def summarize(df: DataFrame) -> PlanSummary:
         s.scans.append(scan)
     return s
 
-
-def assert_pruned(df: DataFrame, max_scan_columns: int) -> PlanSummary:
-    """Raise if any parquet scan reads more columns than expected —
-    catches projection-pruning regressions in the compiler."""
-    s = summarize(df)
-    for scan in s.scans:
-        if len(scan["columns"]) > max_scan_columns:
-            raise AssertionError(
-                f"scan reads {len(scan['columns'])} columns "
-                f"(> {max_scan_columns}): {scan['columns']}\n{s.text}"
-            )
-    return s

@@ -2,7 +2,7 @@
 
 The reference engine has no streaming operators (SURVEY §2.10); its
 `events`-style workloads run as batch scans. Here the same event schema
-gets first-class streaming treatment: watermarked tumbling / sliding /
+gets first-class streaming treatment: watermarked tumbling and
 session windows, streaming dedup, and stateful counting — each usable
 both on a stream (readStream) and on a batch DataFrame (identical
 expressions), which is how the oracle checks them.
@@ -44,25 +44,6 @@ def tumbling_counts(
             F.col(key_col),
             F.col("n"),
         )
-    )
-
-
-def sliding_mean(
-    events: DataFrame,
-    window: str = "10 minutes",
-    slide: str = "5 minutes",
-    ts_col: str = "ts",
-    value_col: str = "value",
-    watermark: str | None = "10 minutes",
-) -> DataFrame:
-    df = _prep(events, ts_col, watermark)
-    return (
-        df.groupBy(F.window(F.col(ts_col), window, slide).alias("w"))
-        .agg(
-            F.count("*").alias("n"),
-            F.round(F.avg(value_col), 6).alias("mean_value"),
-        )
-        .select(F.col("w.start").alias("window_start"), "n", "mean_value")
     )
 
 

@@ -146,6 +146,19 @@ def test_call_catalog_and_model_procedures(db):
     assert db.execute("CALL gql.list_text_indexes()").count() == 0
 
 
+def test_describe_schema_answers_on_an_empty_schema(spark):
+    from graphlite_spark import GraphLiteSpark
+
+    db = GraphLiteSpark(spark)
+    df = db.execute("CALL gql.describe_schema('nothing_here')")
+    assert df.dtypes == [("schema", "string"), ("graph", "string")]
+    assert [tuple(r) for r in df.collect()] == [("nothing_here", None)]
+    db.execute("CREATE GRAPH /default/one")
+    assert [tuple(r) for r in db.execute(
+        "CALL gql.describe_schema('default') YIELD graph").collect()] == \
+        [("one",)]
+
+
 def test_transaction_rollback(db):
     db.execute("INSERT (:Person {name: 'Ada'})")
     db.execute("START TRANSACTION")

@@ -116,3 +116,52 @@ def test_mutations_through_repeating_matches_touch_each_row_once(spark):
     assert _rows(db.query("MATCH (p:P) RETURN p.k AS k, p.x AS x")) == \
         [(3, None)]
     assert _rows(db.query("MATCH ()-[r:R]->() RETURN count(*) AS n")) == [(0,)]
+
+
+def _tpch_db(spark):
+    from graphlite_spark import GraphLiteSpark
+    from graphlite_spark.datasets.tpch import tpch_graph
+
+    from tests.test_cli import DATA
+
+    db = GraphLiteSpark(spark)
+    db.register_graph(tpch_graph(spark, DATA))
+    return db
+
+
+_ORDERS_OF_85 = ("MATCH (c:Customer)-[:PLACED]->(o:Order) "
+                 "WHERE c.c_custkey = 85 RETURN o.o_orderkey AS k")
+
+
+def test_set_key_drops_its_declaration(spark):
+    # order 0 belongs to customer 85. A SET publishes a new Order table,
+    # so Order's declared key no longer holds: the key is read from the
+    # Order table, not from PLACED's raw o_orderkey, with or without
+    # another Order property in the RETURN
+    db = _tpch_db(spark)
+    before = sorted(_rows(db.query(_ORDERS_OF_85)))
+    assert (0,) in before
+    db.execute("MATCH (o:Order {o_orderkey: 0}) SET o.o_orderkey = 424242")
+    want = sorted([k for k in before if k != (0,)] + [(424242,)])
+    assert sorted(_rows(db.query(_ORDERS_OF_85))) == want
+    with_price = _rows(db.query(_ORDERS_OF_85 + ", o.o_totalprice AS t"))
+    assert sorted((k,) for k, _t in with_price) == want
+
+
+def test_inserted_nodes_and_edges_fall_back_to_ids(spark):
+    # an INSERTed customer gets a content-hash id, and a MATCH-INSERTed
+    # PLACED edge points at it: neither table is the declared one, so
+    # reads join on _id and find both customers of the order
+    db = _tpch_db(spark)
+    db.execute("MATCH (o:Order {o_orderkey: 0}) SET o.o_orderkey = 424242")
+    db.execute("INSERT (:Customer {c_custkey: 999999, c_name: 'new'})")
+    db.execute("MATCH (c:Customer {c_custkey: 999999}), "
+               "(o:Order {o_orderkey: 424242}) INSERT (c)-[:PLACED]->(o)")
+    assert sorted(_rows(db.query(
+        "MATCH (c:Customer)-[:PLACED]->(o:Order) "
+        "WHERE o.o_orderkey = 424242 RETURN c.c_custkey AS k"))) == \
+        [(85,), (999999,)]
+    assert sorted(_rows(db.query(
+        "MATCH (c:Customer)-[:PLACED]->(o:Order) "
+        "WHERE c.c_custkey = 999999 RETURN o.o_orderkey AS k"))) == \
+        [(424242,)]

@@ -2,6 +2,10 @@
 
 from __future__ import annotations
 
+import pytest
+
+from tests.test_cli import DATA
+
 
 def test_q1_plan_is_single_pruned_scan(spark):
     """The elision + pushdown contract: an edge-only aggregation reads one
@@ -42,7 +46,8 @@ def test_expand_pushes_node_filter_to_scan(spark):
 
 def test_key_derivation_elides_node_scan(spark):
     """A var referenced only via its natural key joins no node table: the
-    key decodes from the edge endpoint id (graph.set_key_derivation)."""
+    edge declares the raw key columns of its table (``add_edges(...,
+    by_key=True)``) and the key is read from the edge row."""
     from graphlite_spark import GraphLiteSpark
     from graphlite_spark.datasets.tpch import tpch_graph
     from graphlite_spark.plans.inspect import summarize
@@ -65,13 +70,15 @@ def test_key_derivation_elides_node_scan(spark):
     assert set(sup[0]["columns"]) <= {"s_suppkey", "s_nationkey"}, sup
     rows = df.collect()
     assert [r.sk for r in rows] == [0, 1, 2, 3, 4]
-    # derived key keeps the source column type (int64 here)
+    # the key read from the edge keeps its column type (int64 here)
     assert dict(df.dtypes)["sk"] == "bigint"
 
 
 def test_key_derivation_entity_use_still_materializes(spark):
-    """RETURN s (entity) must keep the node-table join — derivation only
-    applies to key/_id property footprints."""
+    """A var read beyond its key is read from its own table. IN_NATION is
+    drawn from the supplier table on the supplier key, so s_name comes
+    from the edge row: one supplier scan, and only the Nation join is
+    left (it joined the supplier node table before keys were declared)."""
     from graphlite_spark import GraphLiteSpark
     from graphlite_spark.datasets.tpch import tpch_graph
     from graphlite_spark.plans.inspect import summarize
@@ -83,9 +90,128 @@ def test_key_derivation_entity_use_still_materializes(spark):
         "WHERE n.n_name IS NOT NULL RETURN s.s_name AS name ORDER BY name LIMIT 3"
     )
     s = summarize(df)
-    # two physical joins (supplier + nation), each listed twice
-    assert s.joins == 4, s.text
-    assert df.count() > 0
+    # one physical join (nation), listed twice
+    assert s.joins == 2, s.text
+    sup = [x for x in s.scans if "supplier" in (x["location"] or "")]
+    assert len(sup) == 1, s.text
+    want = sorted(r.s_name for r in spark.read.parquet(
+        f"{DATA}/supplier.parquet").collect())[:3]
+    assert [r.name for r in df.collect()] == want
+
+
+@pytest.fixture(scope="module")
+def tpch_db(spark):
+    from graphlite_spark import GraphLiteSpark
+    from graphlite_spark.datasets.tpch import tpch_graph
+
+    db = GraphLiteSpark(spark)
+    db.register_graph(tpch_graph(spark, DATA))
+    return db
+
+
+def _duck_rows(sql, params):
+    from perfbench.oracles import DuckOracle
+
+    duck = DuckOracle(DATA)
+    try:
+        return duck.rows(sql, params)
+    finally:
+        duck.close()
+
+
+def _pushes(scan, pred):
+    # summarize() splits PushedFilters on commas, inside filters too
+    return pred in ",".join(scan["pushed_filters"])
+
+
+_HOP1_REVERSED = (
+    "MATCH (o:Order)<-[:PLACED]-(c:Customer) WHERE c.c_custkey = $k "
+    "RETURN o.o_orderkey AS orderkey, o.o_totalprice AS totalprice"
+)
+
+
+@pytest.mark.parametrize("gql", ["hop1", "reversed"])
+def test_hop1_key_reaches_the_single_orders_scan(tpch_db, gql):
+    """PLACED is drawn from the orders table on the Order key: hop1 reads
+    Order from the PLACED row (no join back, no broadcast), and the
+    customer key becomes ``o_custkey = k`` in the parquet scan."""
+    from perfbench.oracles import rows_match
+    from perfbench.workloads import READ_SHAPES
+    from graphlite_spark.plans.inspect import summarize
+
+    text, sql = READ_SHAPES["hop1"]
+    df = tpch_db.query(_HOP1_REVERSED if gql == "reversed" else text,
+                       {"k": 7})
+    s = summarize(df)
+    assert len(s.scans) == 1 and "orders" in s.scans[0]["location"], s.text
+    assert _pushes(s.scans[0], "EqualTo(o_custkey,7)"), s.text
+    assert s.joins == 0 and "BroadcastExchange" not in s.text, s.text
+    want_cols, want = _duck_rows(sql, {"k": 7})
+    assert want
+    assert rows_match(df.columns, [tuple(r) for r in df.collect()],
+                      want_cols, want) is None
+
+
+def test_hop2_key_reaches_orders_scan(tpch_db):
+    """hop2 joins LINE on the raw ``l_orderkey = o_orderkey``; the key
+    filter is pushed into the orders scan."""
+    from perfbench.oracles import rows_match
+    from perfbench.workloads import READ_SHAPES
+    from graphlite_spark.plans.inspect import summarize
+
+    text, sql = READ_SHAPES["hop2"]
+    df = tpch_db.query(text, {"k": 7})
+    s = summarize(df)
+    orders = [x for x in s.scans if "orders" in x["location"]]
+    assert len(orders) == 1 and len(s.scans) == 2, s.text
+    assert _pushes(orders[0], "EqualTo(o_custkey,7)"), s.text
+    want_cols, want = _duck_rows(sql, {"k": 7})
+    assert want
+    assert rows_match(df.columns, [tuple(r) for r in df.collect()],
+                      want_cols, want) is None
+
+
+def test_entity_read_from_edge_row_keeps_id_identity(tpch_db):
+    """``RETURN o`` of an Order read from its PLACED row still carries the
+    graph id, and joins another pattern's o on it (OPTIONAL MATCH joins
+    frames on ``_id``)."""
+    rows = tpch_db.query(
+        "MATCH (c:Customer)-[:PLACED]->(o:Order) WHERE c.c_custkey = 7 "
+        "RETURN DISTINCT o, id(o) AS i").collect()
+    assert rows
+    assert all(r.i == r.o._id == 6 * 10**12 + r.o.o_orderkey for r in rows)
+    _cols, want = _duck_rows(
+        "SELECT count(*) FROM orders WHERE o_custkey = $k", {"k": 7})
+    assert len(rows) == want[0][0]
+    got = tpch_db.query(
+        "MATCH (c:Customer)-[:PLACED]->(o:Order) WHERE c.c_custkey = 7 "
+        "OPTIONAL MATCH (o)-[:LINE]->(p:Part) "
+        "RETURN count(*) AS n, count(p) AS np").collect()[0]
+    _cols, want = _duck_rows(
+        "SELECT count(*), count(l.l_partkey) FROM orders o LEFT JOIN "
+        "lineitem l ON l.l_orderkey = o.o_orderkey WHERE o.o_custkey = $k",
+        {"k": 7})
+    assert (got.n, got.np) == tuple(want[0])
+
+
+def test_placed_shows_the_same_properties(tpch_db):
+    """PLACED shares the orders table with Order, but shows no property
+    beyond its endpoints, as when it was a projection of its own."""
+    rows = tpch_db.execute("CALL gql.describe_graph()").collect()
+    assert ("edge", "PLACED", "Customer->Order") in [tuple(r) for r in rows]
+    assert ("node", "Order", "o_orderkey,o_custkey,o_orderstatus,"
+            "o_totalprice,o_orderdate,o_orderpriority") in [
+        tuple(r) for r in rows]
+    assert tpch_db.execute(
+        "CALL gql.describe_edge_type('PLACED')").collect() == []
+    df = tpch_db.query(
+        "MATCH (c:Customer)-[e:PLACED]->(o:Order) WHERE c.c_custkey = 7 "
+        "RETURN e, keys(e) AS ks ORDER BY e._dst LIMIT 2")
+    assert df.dtypes[0] == ("e", "struct<_dst:bigint,_src:bigint>")
+    assert [tuple(r) for r in df.collect()] == [
+        ((6000000000011, 3000000000007), ["_dst", "_src"]),
+        ((6000000000022, 3000000000007), ["_dst", "_src"]),
+    ]
 
 
 def test_interior_shared_var_avoids_rescan(spark):
