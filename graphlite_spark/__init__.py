@@ -517,7 +517,8 @@ class GraphLiteSpark:
                 "DML is not allowed in a READ ONLY transaction"
             )
 
-    # -- transactions (optimistic copy-on-write; see dml.py docstring) ------
+    # -- transactions: a snapshot of every graph's views and delta-main
+    #    triples, restored whole on ROLLBACK (see dml.py docstring) --------
     def _txn(self, stmt):
         kind = stmt.kind
         if kind == "START":
@@ -528,13 +529,14 @@ class GraphLiteSpark:
             # access mode is enforced against DML.
             self._txn_isolation = stmt.isolation or "READ COMMITTED"
             self._txn_readonly = stmt.access_mode == "READ ONLY"
+            # the views and the delta-main triples behind them: restored
+            # together, the views are their triples' again, so the next
+            # write keeps appending to the same bases
             self._txn_snapshot = {
-                path: (
-                    dict(self.catalog.get_graph(path).nodes),
-                    {k: replace(v) for k, v in
-                     self.catalog.get_graph(path).edges.items()},
-                )
+                path: (dict(g.nodes), {k: replace(v) for k, v in g.edges.items()},
+                       dict(g.tables))
                 for path in self.catalog.list_graphs()
+                for g in [self.catalog.get_graph(path)]
             }
             return {
                 "status": f"transaction started ({self._txn_isolation}"
@@ -548,12 +550,11 @@ class GraphLiteSpark:
         if kind == "ROLLBACK":
             if self._txn_snapshot is None:
                 return {"status": "no transaction", "rows_affected": 0}
-            for path, (nodes, edges) in self._txn_snapshot.items():
+            for path, (nodes, edges, tables) in self._txn_snapshot.items():
                 if not self.catalog.has_graph(path):
                     continue
                 g = self.catalog.get_graph(path)
-                g.nodes = dict(nodes)
-                g.edges = dict(edges)
+                g.nodes, g.edges, g.tables = dict(nodes), dict(edges), dict(tables)
             self._txn_snapshot = None
             self._txn_readonly = False
             return {"status": "rolled back", "rows_affected": 0}

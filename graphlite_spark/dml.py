@@ -2,27 +2,47 @@
 
 Spark-first rendition of the reference write engine (GraphLite
 `graphlite/src/exec/write_engine/operations/{insert,match_set,
-match_delete,match_remove}.rs`), copy-on-write through one path: a
-statement stages the new DataFrame of each table it touches (INSERT
-union, SET/REMOVE rewrite, DELETE anti-join, DETACH's incident edge
-tables); ``commit`` checkpoints each once, cutting its lineage, and
-publishes them together only after all succeeded, so a statement that
-raises changes no table. What it reports (rows_affected, duplicates,
-the incident edges a plain DELETE refuses) are ``observe`` metrics
-riding those checkpoints. An INSERTed property whose value is NULL is
-absent, as everywhere else in the engine (REMOVE, reads, the duplicate
-match): it does not enter the content hash, the row or the table's
-columns, and a read returns NULL for it. A value no column type can
-hold (an empty list) is refused with the property's name. The rows an
-INSERT adds enter Spark as local relations (``local_frame``). START
-TRANSACTION snapshots the table dict, ROLLBACK restores it (optimistic,
-last-writer-wins; the reference's interactive isolation levels don't
-map 1:1, see README).
+match_delete,match_remove}.rs`), delta-main: each table is the base of
+its last fold plus the rows appended and the tombstones added since
+(``graph.Table``), and a statement stages, per table it touches, the
+keys to tombstone and the rows to append, on the driver:
+
+- INSERT probes the views of the tables it adds to for duplicates, all
+  in one Spark job, and appends the rows no stored row duplicates;
+- SET and REMOVE collect the matched nodes' rows, tombstone their ids
+  and append the rows changed;
+- DELETE tombstones the matched ids or ``(_src, _dst)`` pairs. DETACH
+  DELETE also tombstones ``(id, None)`` in each incident edge type,
+  masking every base edge of a deleted node; a plain DELETE instead
+  probes the incident edges in one job, refusing if there are any;
+- MATCH-INSERT collects the matched endpoint pairs and appends one edge
+  per distinct pair.
+
+A match is collected in one job, up to ``FOLD_AT`` rows. A larger one
+rewrites the tables it touches as DataFrames instead: the matched keys
+join the table with whatever join the planner picks, and counts are
+``observe`` metrics riding the fold (a plain DELETE's incident-edge
+probe is still one job, a semi join with the matched ids). Staging
+publishes nothing: ``commit`` publishes every touched table together,
+after the last fold, so a statement that raises changes no table. A
+table folds, one eager checkpoint of its view (``_ck_cut_stats``) that
+becomes its new base, only when a DataFrame rewrite staged it or its
+appended rows plus tombstones pass ``FOLD_AT``. Below that, its view is
+a filter on the base plus a local relation, and the base keeps its
+statistics.
+
+An INSERTed property whose value is NULL is absent, as everywhere else
+in the engine (REMOVE, reads, the duplicate match): it does not enter
+the content hash, the row or the table's columns, and a read returns
+NULL for it. A value no column type can hold (an empty list) is refused
+with the property's name. START TRANSACTION snapshots the tables and
+their triples, ROLLBACK restores them (optimistic, last-writer-wins; the
+reference's interactive isolation levels don't map 1:1, see README).
 """
 
 from __future__ import annotations
 
-from collections import ChainMap
+import functools
 from dataclasses import replace
 from typing import Any
 
@@ -32,14 +52,22 @@ from pyspark.sql import types as T
 from pyspark.sql.types import _has_nulltype, _infer_type
 
 from .catalog import content_hash_id
-from .graph import DST, ID, SRC, EdgeType, PropertyGraph
+from .graph import DST, ID, SRC, PropertyGraph, Table, keys_in
 from .gql import ast as A
 from .gql.compiler import (CompileError, ExprCompiler, Frame, QueryCompiler,
                            _ncol)
 from .gql.statements import InsertStmt, MatchMutateStmt
 from .operators.common import _ck_cut_stats, local_frame
 
-# helper columns of staged frames: matched node id and its SET value,
+# Rows a match may collect, and appended rows plus tombstones a table may
+# carry before it folds. Carrying costs each statement that touches the
+# table its view rebuilt, about 0.1 ms per key (the IN list parsed, the
+# local relation shipped), and every read a filter on the base; a fold
+# costs a full pass over the table (50-120 ms on the benchmark's 2,000
+# persons, seconds at 200,000). At 256 the carry stays near 25 ms.
+FOLD_AT = 256
+
+# helper columns of rewritten frames: matched node id and its SET value,
 # matched edge endpoints; none survives into a published table
 _TID, _VAL, _SRC, _DST = "__tid", "__val", "__src", "__dst"
 
@@ -49,16 +77,71 @@ class DmlError(ValueError):
 
 
 class Staged:
-    """One statement's new tables, not yet published: ``nodes``/``edges``
-    read through to the graph's, and a table staged twice composes both
-    rewrites. ``checks`` run on the metrics before anything publishes."""
+    """One statement's working triples (``tables``), not yet published:
+    those it ``touched`` on the driver and those a DataFrame rewrite
+    replaced (``folds``), and the endpoint labels of the edge types it
+    creates."""
 
     def __init__(self, graph: PropertyGraph):
         self.graph = graph
-        self.nodes = ChainMap({}, graph.nodes)
-        self.edges = ChainMap({}, graph.edges)
-        self.checks: list = []
+        self.tables: dict[tuple[bool, str], Table] = {}
+        self.touched: set[tuple[bool, str]] = set()
+        self.folds: set[tuple[bool, str]] = set()
+        self.ends: dict[str, tuple[str, str]] = {}
         self._observations: list[Observation] = []
+
+    def get(self, name: str, edge: bool) -> Table | None:
+        key = (edge, name)
+        if key not in self.tables:
+            t = self.graph.table(name, edge)
+            if t is None:
+                return None
+            self.tables[key] = t
+        return self.tables[key]
+
+    def view(self, name: str, edge: bool) -> DataFrame:
+        """Table ``name`` as this statement has staged it so far."""
+        t = self.tables[(edge, name)] = self.get(name, edge).composed(
+            self.graph.spark)
+        return t.view
+
+    def put(self, name: str, edge: bool, rows: list[dict],
+            types: dict | None = None):
+        """Append ``rows`` to table ``name`` (``Table.appended``), typed
+        ``types`` (default: inferred from the values). A value of a type
+        the delta's column can't hold leaves the coercion to Spark: the
+        table is rewritten as its view plus the rows, and folds. No rows
+        leave a stored table as it is, and create a new one with the
+        columns of ``types``."""
+        t = self.get(name, edge)
+        if t is None:
+            t = Table(edge, None, schema=T.StructType())
+        elif not rows:
+            return
+        schema = t.schema if t.schema is not None else T.StructType(
+            [T.StructField(f.name, f.dataType) for f in t.base.schema])
+        for ty in [types] if types is not None else map(_inferred, rows):
+            schema = None if schema is None else _merged(schema, ty)
+        if schema is None:
+            delta = local_frame(self.graph.spark, rows, types and T.StructType(
+                [T.StructField(c, dt) for c, dt in types.items()]))
+            self.rewrite(name, edge, self.view(name, edge).unionByName(
+                delta, allowMissingColumns=True))
+            return
+        self._stage(t.appended(rows, schema), name)
+
+    def drop(self, name: str, edge: bool, keys: set):
+        if keys:
+            self._stage(self.get(name, edge).dropped(keys), name)
+
+    def rewrite(self, name: str, edge: bool, df: DataFrame):
+        """Stage ``df`` as the whole of table ``name``; it folds."""
+        self.tables[(edge, name)] = Table(edge, df, df)
+        self.folds.add((edge, name))
+
+    def _stage(self, t: Table, name: str):
+        self.tables[(t.edge, name)] = t
+        self.touched.add((t.edge, name))
 
     def observe(self, df: DataFrame, metric) -> tuple[DataFrame, str]:
         """``df`` with ``metric`` attached, and its name in ``commit``'s
@@ -69,37 +152,63 @@ class Staged:
         return df.observe(self._observations[-1], metric.alias(name)), name
 
 
+def _inferred(row: dict) -> dict:
+    return {k: _infer_type(v) for k, v in row.items()}
+
+
+_INTEGRAL = {T.ByteType, T.ShortType, T.IntegerType, T.LongType}
+_NUMERIC = _INTEGRAL | {T.FloatType, T.DoubleType}
+
+
+def _merged(schema: T.StructType, types: dict) -> T.StructType | None:
+    """``schema`` with the columns ``types`` adds, and its columns widened
+    to hold values of ``types``; None when one can't."""
+    fields = {f.name: f.dataType for f in schema}
+    for c, dt in types.items():
+        old = fields.setdefault(c, dt)
+        kinds = {type(old), type(dt)}
+        if isinstance(dt, T.NullType) or old.simpleString() == dt.simpleString():
+            continue
+        if isinstance(old, T.NullType):
+            fields[c] = dt
+        elif kinds <= _NUMERIC:
+            fields[c] = T.LongType() if kinds <= _INTEGRAL else T.DoubleType()
+        else:
+            return None
+    return T.StructType([T.StructField(c, dt) for c, dt in fields.items()])
+
+
 def commit(graph: PropertyGraph, staged: Staged) -> dict:
-    """Publish every table ``staged`` holds, or none of them; return the
-    observed metrics by name.
+    """Publish every table ``staged`` changed; return the observed
+    metrics by name. Nothing publishes before every fold has run, so a
+    statement that raises changes no table.
 
-    Each staged table is checkpointed once, eagerly, with Catalyst's
-    size stats reset (``_ck_cut_stats``); the metrics ride those jobs.
-    Uncut, n mutations build an n-deep plan of the MUTATIONS' OWN PLANS
-    that every later statement re-executes while the non-CBO join-stats
-    product compounds per level (11 single-edge inserts once took 430 s;
-    a SET-only history doubled the Person plan with every SET). DML
-    frames are small: the cut costs milliseconds and keeps every
-    statement O(current data), not O(history)."""
-    nodes = {label: _cut(df, graph.nodes.get(label))
-             for label, df in staged.nodes.maps[0].items()}
-    edges = {name: replace(et, df=_cut(et.df, graph.edges[name].df
-                                       if name in graph.edges else None))
-             for name, et in staged.edges.maps[0].items()}
+    A table a DataFrame rewrite staged, or whose appended rows plus
+    tombstones pass ``FOLD_AT``, is folded: its view checkpointed once,
+    eagerly, with Catalyst's size stats reset (``_ck_cut_stats``), and the
+    metrics ride those jobs. Uncut, n rewrites build an n-deep plan of
+    the rewrites' own plans that every later statement re-executes while
+    the non-CBO join-stats product compounds per level (11 single-edge
+    inserts once took 430 s); the cap keeps a delta's view flat, and the
+    fold keeps every statement O(current data), not O(history)."""
+    spark = graph.spark
+    out = {}
+    for key in staged.touched | staged.folds:
+        t = staged.tables[key].composed(spark)
+        if key in staged.folds or len(t.rows) + len(t.dead) > FOLD_AT:
+            old = graph.table(key[1], key[0])
+            # an append adds partitions: hold the table at the count its
+            # base had (a truncated base has none), or a long history
+            # splits every scan into ever more tiny tasks
+            n = 1 if old is None or old.base is None \
+                else old.base.rdd.getNumPartitions()
+            df = _ck_cut_stats(t.view.coalesce(max(n, 1)))
+            t = Table(t.edge, df, df)
+        out[key] = t
     metrics = {k: v for o in staged._observations for k, v in o.get.items()}
-    for check in staged.checks:
-        check(metrics)
-    graph.nodes.update(nodes)
-    graph.edges.update(edges)
+    for (_edge, name), t in out.items():
+        graph.publish(name, t, staged.ends.get(name))
     return metrics
-
-
-def _cut(df: DataFrame, old: DataFrame | None) -> DataFrame:
-    # an append adds partitions: hold the table at the count it had, or
-    # a long insert history splits every scan into ever more tiny tasks
-    if old is not None:
-        df = df.coalesce(max(1, old.rdd.getNumPartitions()))
-    return _ck_cut_stats(df)
 
 
 def _literal_props(props: dict[str, A.Expr], params: dict,
@@ -152,7 +261,7 @@ def execute_insert(graph: PropertyGraph, stmt: InsertStmt,
     duplicate_insert_test.rs / duplicate_edge_warning_test.rs."""
     params = params or {}
     stage = Staged(graph)
-    inserted: list[tuple[str, str]] = []  # (metric, duplicate warning)
+    new: list[tuple] = []  # (table, is edge, row, duplicate warning)
     for pat in stmt.patterns:
         elems = pat.elements
         node_ids: list = []
@@ -161,11 +270,8 @@ def execute_insert(graph: PropertyGraph, stmt: InsertStmt,
         for el in elems[::2]:
             if not el.labels:
                 raise DmlError("INSERT node needs a label")
-            nid, n = _stage_node(stage, el, params)
-            node_ids.append(nid)
+            node_ids.append(_new_node(stage, el, params, new))
             node_labels.append(el.labels[0])
-            inserted.append((n, f"Duplicate node detected (content hash "
-                                f"{nid}); insert skipped"))
         # then edges
         for i, el in enumerate(elems[1::2]):
             etype = el.types[0] if el.types else None
@@ -176,47 +282,72 @@ def execute_insert(graph: PropertyGraph, stmt: InsertStmt,
             if graph.graph_type is not None:
                 graph.graph_type.validate_edge(
                     etype, node_labels[src_i], node_labels[dst_i], props)
-            et = stage.edges.get(etype) or EdgeType(
-                etype, None, node_labels[src_i], node_labels[dst_i])
-            row = {SRC: node_ids[src_i], DST: node_ids[dst_i], **props}
-            stage.edges[etype], n = _append(
-                stage, et, local_frame(graph.spark, [row]),
-                _stored_match(et.df, row))
-            inserted.append((n, f"Duplicate edge detected ({node_ids[src_i]})"
-                                f"-[:{etype}]->({node_ids[dst_i]}); "
-                                "insert skipped"))
-    metrics = commit(graph, stage)
+            stage.ends.setdefault(etype, (node_labels[src_i],
+                                          node_labels[dst_i]))
+            new.append((etype, True,
+                        {SRC: node_ids[src_i], DST: node_ids[dst_i], **props},
+                        f"Duplicate edge detected ({node_ids[src_i]})"
+                        f"-[:{etype}]->({node_ids[dst_i]}); insert skipped"))
+    added = _insert(stage, new)
+    commit(graph, stage)
     if warnings is not None:
-        warnings.extend(w for m, w in inserted if not metrics[m])
-    return sum(metrics[m] for m, _ in inserted)
+        warnings.extend(n[3] for n, ok in zip(new, added) if not ok)
+    return sum(added)
 
 
-def _stage_node(stage: Staged, el, params) -> tuple[Any, str]:
-    """Stage the literal node element ``el``; return its id and the name
-    of the metric counting it (0: a duplicate). On a table with a
-    natural numeric key the content hash folds into a positive long
-    (first 60 bits): a string id there is a latent ANSI cast failure."""
+def _new_node(stage: Staged, el, params, new: list) -> Any:
+    """Queue the literal node element ``el`` for ``_insert``; return its
+    id. On a table with a natural numeric key the content hash folds
+    into a positive long (first 60 bits): a string id there is a latent
+    ANSI cast failure."""
     graph = stage.graph
     props = _literal_props(el.props, params, graph.spark)
     if graph.graph_type is not None:
         graph.graph_type.validate_node(el.labels, props)
     nid = content_hash_id(el.labels, props)
-    old = stage.nodes.get(el.labels[0])
+    old = graph.nodes.get(el.labels[0])
     if old is not None and dict(old.dtypes).get(ID) != "string":
         nid = int(nid[:15], 16)
-    stage.nodes[el.labels[0]], n = _append(
-        stage, old, local_frame(graph.spark, [{ID: nid, **props}]),
-        F.col(ID) == F.lit(nid))
-    return nid, n
+    new.append((el.labels[0], False, {ID: nid, **props},
+                f"Duplicate node detected (content hash {nid}); "
+                "insert skipped"))
+    return nid
 
 
-def _stored_match(df: DataFrame | None, row: dict):
+def _insert(stage: Staged, new: list[tuple]) -> list[bool]:
+    """Append each row of ``new`` that no row of its table duplicates:
+    no stored row (one probe job over the views of every table) and no
+    row appended before it in the statement. Return which were added."""
+    probes = []
+    for i, (name, edge, row, _w) in enumerate(new):
+        t = stage.get(name, edge)
+        cond = None if t is None else _stored_match(t.view, row) if edge \
+            else F.col(ID) == F.lit(row[ID])
+        if cond is not None:
+            probes.append(t.view.where(cond).select(F.lit(i).alias("i")))
+    hits = {r[0] for r in functools.reduce(
+        DataFrame.unionAll, probes).collect()} if probes else set()
+    added, staged = [], {}
+    for i, (name, edge, row, _w) in enumerate(new):
+        mine = staged.setdefault((name, edge), [])
+        ok = i not in hits and not any(
+            r == row if edge else r[ID] == row[ID] for r in mine)
+        if ok:
+            mine.append(row)
+        added.append(ok)
+    for (name, edge), rows in staged.items():
+        if rows:
+            stage.put(name, edge, rows)
+    return added
+
+
+def _stored_match(df: DataFrame, row: dict):
     """Condition a stored row of ``df`` meets iff every column null-safe
     equals ``row``'s value (absent: NULL). None when no stored row can:
     ``row`` has a column ``df`` lacks (value.rs content identity covers
     all properties), or a value the column's type can't hold (comparing
     would be an ANSI cast error, not a match)."""
-    if df is None or set(row) - set(df.columns):
+    if set(row) - set(df.columns):
         return None
     fits = {str: T.StringType, bool: T.BooleanType,
             int: T.NumericType, float: T.NumericType}
@@ -230,19 +361,12 @@ def _stored_match(df: DataFrame | None, row: dict):
     return cond
 
 
-def _append(stage: Staged, old, new: DataFrame, dup=None):
-    """``old`` (node table, EdgeType or None) plus ``new`` (new props are
-    NULL on old rows), and the name of the metric counting the rows
-    appended. A one-row ``new`` is a duplicate, dropped, if a stored row
-    (the statement's own included; few: broadcast) meets ``dup``."""
-    df = old.df if isinstance(old, EdgeType) else old
-    if df is not None and dup is not None:
-        stored = F.broadcast(df.where(dup).select(F.lit(1).alias("__dup")))
-        new = new.join(stored, how="left_anti")
-    new, n = stage.observe(new, F.count(F.lit(1)))
-    if df is not None:
-        new = df.unionByName(new, allowMissingColumns=True)
-    return (replace(old, df=new) if isinstance(old, EdgeType) else new), n
+def _matched(frame, cols: list) -> tuple[list, T.StructType] | None:
+    """The frame's rows of ``cols`` and their types, collected in one job;
+    None when there are more than ``FOLD_AT``."""
+    df = frame.df.select(*[c.alias(f"c{i}") for i, c in enumerate(cols)])
+    rows = df.limit(FOLD_AT + 1).collect()
+    return None if len(rows) > FOLD_AT else (rows, df.schema)
 
 
 def execute_mutate(graph: PropertyGraph, stmt: MatchMutateStmt,
@@ -255,33 +379,23 @@ def execute_mutate(graph: PropertyGraph, stmt: MatchMutateStmt,
         frame = qc._compile_match(frame, m)
     if frame is None:
         raise DmlError("mutation requires a MATCH")
-    stage = Staged(graph)
-    if stmt.action == "SET":
-        counted = [_stage_set(stage, frame, stmt.matches, item, params)
-                   for item in stmt.set_items]
-    elif stmt.action == "REMOVE":
-        counted = [_stage_remove(stage, frame, stmt.matches, var, prop)
-                   for var, prop in stmt.remove_items]
-    elif stmt.action in ("DELETE", "DETACH_DELETE"):
-        counted = [_stage_delete(stage, frame, var,
-                                 detach=stmt.action == "DETACH_DELETE")
-                   for var in stmt.delete_vars]
-    elif stmt.action == "INSERT":
-        counted = _stage_match_insert(stage, frame, stmt.insert_patterns,
-                                      params)
-    else:
+    act = {"SET": _set, "REMOVE": _set, "DELETE": _delete,
+           "DETACH_DELETE": _delete, "INSERT": _match_insert}.get(stmt.action)
+    if act is None:
         raise DmlError(f"unknown action {stmt.action}")
+    stage = Staged(graph)
+    counted = act(stage, frame, stmt, params)
     metrics = commit(graph, stage)
-    return sum(metrics[m] for m in counted if m is not None)
+    return sum(metrics[c] if isinstance(c, str) else c for c in counted)
 
 
-def _stage_match_insert(stage: Staged, frame, patterns, params) -> list:
+def _match_insert(stage: Staged, frame, stmt, params) -> list:
     """MATCH ... INSERT (a)-[:T {..}]->(b): connect matched nodes
     (match_insert.rs). Node elements must be bound match variables or
-    literal-only new nodes, staged like INSERT's; edges append per
-    distinct endpoint pair. Returns the names of the counting metrics."""
-    counted = []
-    for pat in patterns:
+    literal-only new nodes, inserted like INSERT's; edges append per
+    distinct endpoint pair. Returns the counts (or metric names)."""
+    new, edges = [], []  # new nodes; (type, ends, src, dst, props)
+    for pat in stmt.insert_patterns:
         elems = pat.elements
         id_exprs = []
         labels = []
@@ -295,24 +409,40 @@ def _stage_match_insert(stage: Staged, frame, patterns, params) -> list:
             else:
                 if not el.labels:
                     raise DmlError("INSERT node needs a label or bound variable")
-                nid, n = _stage_node(stage, el, params)
-                counted.append(n)
-                id_exprs.append(F.lit(nid))
+                id_exprs.append(F.lit(_new_node(stage, el, params, new)))
                 labels.append(el.labels[0])
         for i, el in enumerate(elems[1::2]):
             if not el.types:
                 raise DmlError("INSERT edge needs a type")
-            etype = el.types[0]
             props = _literal_props(el.props, params, stage.graph.spark)
             src_i, dst_i = (i, i + 1) if el.direction != "in" else (i + 1, i)
-            et = stage.edges.get(etype) or EdgeType(
-                etype, None, labels[src_i], labels[dst_i])
-            stage.edges[etype], n = _append(stage, et, frame.df.select(
-                id_exprs[src_i].alias(SRC),
-                id_exprs[dst_i].alias(DST),
-                *[F.lit(v).alias(k) for k, v in props.items()],
-            ).dropDuplicates([SRC, DST]))
-            counted.append(n)
+            edges.append((el.types[0], (labels[src_i], labels[dst_i]),
+                          id_exprs[src_i], id_exprs[dst_i], props))
+    counted: list = _insert(stage, new)
+    matched = _matched(frame, [c for e in edges for c in e[2:4]]) \
+        if edges else ([], None)
+    for j, (etype, ends, src, dst, props) in enumerate(edges):
+        stage.ends.setdefault(etype, ends)
+        if matched is not None:
+            rows, schema = matched
+            pairs = dict.fromkeys((r[2 * j], r[2 * j + 1]) for r in rows
+                                  if None not in (r[2 * j], r[2 * j + 1]))
+            # typed, so a new edge type that matched nothing still has
+            # its endpoint and property columns
+            stage.put(etype, True, [{SRC: s, DST: d, **props} for s, d in pairs],
+                      {SRC: schema[2 * j].dataType,
+                       DST: schema[2 * j + 1].dataType,
+                       **_inferred(props)})
+            counted.append(len(pairs))
+            continue
+        df, n = stage.observe(frame.df.select(
+            src.alias(SRC), dst.alias(DST),
+            *[F.lit(v).alias(k) for k, v in props.items()],
+        ).dropDuplicates([SRC, DST]), F.count(F.lit(1)))
+        if stage.get(etype, True) is not None:
+            df = stage.view(etype, True).unionByName(df, allowMissingColumns=True)
+        stage.rewrite(etype, True, df)
+        counted.append(n)
     return counted
 
 
@@ -323,94 +453,181 @@ def _binding(frame, var):
     return b
 
 
-def _stage_set(stage: Staged, frame, matches, item, params) -> str:
-    b = _binding(frame, item.var)
-    if b.kind != "node":
-        raise DmlError("SET supports node properties (edge SET: planned)")
-    if item.label is not None:
-        raise DmlError("SET label is not supported yet")
-    if b.label is None:
-        raise DmlError("SET target must have a known label")
-    value = ExprCompiler(frame, params).compile(item.value)
-    return _rewrite_prop(stage, frame, matches, item.var, item.prop, value)
-
-
-def _stage_remove(stage: Staged, frame, matches, var, prop) -> str | None:
-    b = _binding(frame, var)
-    if b.kind != "node" or b.label is None:
-        raise DmlError("REMOVE supports labeled node properties")
-    if prop in stage.nodes[b.label].columns:
-        return _rewrite_prop(stage, frame, matches, var, prop, F.lit(None))
-    return None
+def _set(stage: Staged, frame, stmt, params) -> list:
+    """SET / REMOVE node properties: the matched nodes' rows, tombstoned
+    and appended changed. Returns the count of nodes each item matched."""
+    items = []  # (var, label, prop, value)
+    for it in stmt.set_items:
+        b = _binding(frame, it.var)
+        if b.kind != "node":
+            raise DmlError("SET supports node properties (edge SET: planned)")
+        if it.label is not None:
+            raise DmlError("SET label is not supported yet")
+        if b.label is None:
+            raise DmlError("SET target must have a known label")
+        items.append((it.var, b.label, it.prop,
+                      ExprCompiler(frame, params).compile(it.value)))
+    for var, prop in stmt.remove_items:
+        b = _binding(frame, var)
+        if b.kind != "node" or b.label is None:
+            raise DmlError("REMOVE supports labeled node properties")
+        if prop in stage.graph.nodes[b.label].columns:
+            items.append((var, b.label, prop, F.lit(None)))
+    if not items:
+        return []
+    # every var's whole row comes from the frame: one job, no join back
+    cols = {var: stage.graph.nodes[label].columns for var, label, *_ in items}
+    matched = None
+    if all(set(c) <= set(frame.bindings[v].props) for v, c in cols.items()):
+        matched = _matched(frame, [
+            *[F.col(_ncol(v, c)) for v, cs in cols.items() for c in cs],
+            *[value for *_, value in items]])
+    if matched is None:
+        return [_rewrite_prop(stage, frame, stmt.matches, var, prop, value)
+                for var, _label, prop, value in items]
+    rows, schema = matched
+    start, at = {}, 0
+    for v, cs in cols.items():
+        start[v], at = at, at + len(cs)
+    changed: dict[str, dict] = {}  # label -> id -> row
+    types: dict[str, dict] = {}
+    counted = []
+    for j, (var, label, prop, _value) in enumerate(items):
+        s, cs = start[var], cols[var]
+        mine = changed.setdefault(label, {})
+        ty = types.setdefault(label, {})
+        ty.update((c, schema[s + k].dataType) for k, c in enumerate(cs))
+        ty[prop] = schema[at + j].dataType
+        seen = set()
+        for r in rows:
+            i = r[s + cs.index(ID)]
+            if i is None or i in seen:
+                continue
+            seen.add(i)
+            row = mine.get(i) or dict(zip(cs, r[s:s + len(cs)]))
+            row[prop] = r[at + j]
+            mine[i] = row
+        counted.append(len(seen))
+    for label, by_id in changed.items():
+        stage.drop(label, False, set(by_id))
+        stage.put(label, False, list(by_id.values()), types[label])
+    return counted
 
 
 def _rewrite_prop(stage: Staged, frame, matches, var, prop, value) -> str:
-    """Stage ``var``'s node table with ``prop`` (new column if need be)
-    set to ``value`` on the matched nodes, whose ids are few (broadcast);
-    return the name of the metric counting them. A match of the lone
-    node ``var`` has one row per node (ids are unique per label), any
-    longer pattern can repeat ``var``: only then are the ids deduped."""
+    """Rewrite ``var``'s node table with ``prop`` (new column if need be)
+    set to ``value`` on the matched nodes; return the name of the metric
+    counting them. A match of the lone node ``var`` has one row per node
+    (ids are unique per label), any longer pattern can repeat ``var``:
+    only then are the ids deduped."""
     label = frame.bindings[var].label
-    nodes = stage.nodes[label]
+    nodes = stage.view(label, False)
     new_vals = frame.df.select(F.col(_ncol(var, ID)).alias(_TID),
                                value.alias(_VAL))
     if any(len(p.elements) > 1 or p.elements[0].var != var
            for m in matches for p in m.patterns):
         new_vals = new_vals.dropDuplicates([_TID])
-    joined, n = stage.observe(nodes.join(
-        F.broadcast(new_vals), nodes[ID] == F.col(_TID), "left"),
-        F.count(_TID))
+    joined, n = stage.observe(
+        nodes.join(new_vals, nodes[ID] == F.col(_TID), "left"), F.count(_TID))
     new = F.when(F.col(_TID).isNotNull(), F.col(_VAL))
     if prop in nodes.columns:
         new = new.otherwise(F.col(prop))
-    stage.nodes[label] = joined.withColumn(prop, new).drop(_TID, _VAL)
+    stage.rewrite(label, False, joined.withColumn(prop, new).drop(_TID, _VAL))
     return n
 
 
+def _incident(graph: PropertyGraph, label: str):
+    """(edge type, endpoint column) of every edge end at ``label``."""
+    return [(name, c) for name, et in graph.edges.items()
+            for c, end in ((SRC, et.src_label), (DST, et.dst_label))
+            if end == label]
+
+
+def _delete(stage: Staged, frame, stmt, _params) -> list:
+    """DELETE / DETACH DELETE the matched nodes and edges: tombstone their
+    keys. Returns the count of distinct keys each variable matched."""
+    detach = stmt.action == "DETACH_DELETE"
+    targets = []  # (var, table, is edge, key columns)
+    for var in stmt.delete_vars:
+        b = _binding(frame, var)
+        if b.kind == "edge" and b.label is None:
+            raise DmlError("DELETE edge requires a single edge type")
+        if b.kind != "edge" and b.label is None:
+            raise DmlError("DELETE target must have a known label")
+        edge = b.kind == "edge"
+        targets.append((var, b.label, edge, [SRC, DST] if edge else [ID]))
+    matched = _matched(frame, [F.col(_ncol(var, c))
+                               for var, _l, _e, cs in targets for c in cs])
+    if matched is None:
+        return [_drop_frame(stage, frame, var, detach) for var in stmt.delete_vars]
+    counted, at = [], 0
+    for var, label, edge, cs in targets:
+        keys = {r[at] if not edge else (r[at], r[at + 1])
+                for r in matched[0] if r[at] is not None}
+        at += len(cs)
+        if not edge and not detach:
+            _refuse_incident(stage, var, label, keys)
+        elif not edge:
+            for ename, c in _incident(stage.graph, label):
+                stage.drop(ename, True, {(i, None) if c == SRC else (None, i)
+                                         for i in keys})
+        stage.drop(label, edge, keys)
+        counted.append(len(keys))
+    return counted
+
+
+def _refuse_incident(stage: Staged, var, label: str, ids: set | DataFrame):
+    """Raise if an edge as staged so far ends at one of the ``label``
+    nodes ``ids`` (a set, or a DataFrame of ``_TID`` that may repeat):
+    one job over the incident edge types."""
+    if isinstance(ids, set) and not ids:
+        return
+    probes = []
+    for name, c in _incident(stage.graph, label):
+        view = stage.view(name, True)
+        hits = view.join(ids, F.col(c) == F.col(_TID), "left_semi") \
+            if isinstance(ids, DataFrame) \
+            else view.where(keys_in([c], [(i,) for i in ids]))
+        probes.append(hits.select(F.lit(name)).limit(1))
+    hit = sorted({r[0] for r in functools.reduce(
+        DataFrame.unionAll, probes).collect()}) if probes else []
+    if hit:
+        raise DmlError(f"cannot DELETE {var}: incident edges exist "
+                       f"({hit}); use DETACH DELETE")
+
+
 def _drop_matched(stage: Staged, df: DataFrame, keys: DataFrame, on):
-    """``df`` without its rows that join ``keys`` (broadcast, may repeat)
-    ``on``, and the name of the metric counting the distinct keys that
-    matched, taken before the filter drops the matched rows."""
-    joined = df.join(F.broadcast(keys), on, "left")
+    """``df`` without its rows that join ``keys`` (may repeat) ``on``,
+    and the name of the metric counting the distinct keys that matched,
+    taken before the filter drops the matched rows."""
+    joined = df.join(keys, on, "left")
     hit = F.col(keys.columns[0]).isNotNull()
     joined, n = stage.observe(joined, F.size(F.collect_set(
         F.when(hit, F.struct(*keys.columns)))))
     return joined.filter(~hit).drop(*keys.columns), n
 
 
-def _stage_delete(stage: Staged, frame, var, detach: bool) -> str:
-    b = _binding(frame, var)
+def _drop_frame(stage: Staged, frame, var, detach: bool) -> str:
+    """DELETE ``var`` for a match past ``FOLD_AT``: rewrite its table and,
+    for a DETACH DELETE of a node, its incident edge types without the
+    matched keys."""
+    b = frame.bindings[var]
     if b.kind == "edge":
-        # delete matched edges of this type by (src,dst) pair
-        if b.label is None:
-            raise DmlError("DELETE edge requires a single edge type")
-        et = stage.edges[b.label]
         pairs = frame.df.select(F.col(_ncol(var, SRC)).alias(_SRC),
                                 F.col(_ncol(var, DST)).alias(_DST))
         df, n = _drop_matched(
-            stage, et.df, pairs,
+            stage, stage.view(b.label, True), pairs,
             (F.col(SRC) == F.col(_SRC)) & (F.col(DST) == F.col(_DST)))
-        stage.edges[b.label] = replace(et, df=df)
+        stage.rewrite(b.label, True, df)
         return n
-    if b.label is None:
-        raise DmlError("DELETE target must have a known label")
     ids = frame.df.select(F.col(_ncol(var, ID)).alias(_TID))
-    incident = {}  # metric name -> edge type
-    for ename, et in list(stage.edges.items()):
-        df = et.df
-        for c, end in ((SRC, et.src_label), (DST, et.dst_label)):
-            if end == b.label:
-                df, m = _drop_matched(stage, df, ids, F.col(c) == F.col(_TID))
-                incident[m] = ename
-        if df is not et.df:
-            stage.edges[ename] = replace(et, df=df)
-
-    def refuse_incident(metrics):
-        if hit := sorted({e for m, e in incident.items() if metrics[m]}):
-            raise DmlError(f"cannot DELETE {var}: incident edges exist "
-                           f"({hit}); use DETACH DELETE")
     if not detach:
-        stage.checks.append(refuse_incident)
-    stage.nodes[b.label], n = _drop_matched(
-        stage, stage.nodes[b.label], ids, F.col(ID) == F.col(_TID))
+        _refuse_incident(stage, var, b.label, ids)
+    else:
+        for ename, c in _incident(stage.graph, b.label):
+            stage.rewrite(ename, True, stage.view(ename, True).join(
+                ids, F.col(c) == F.col(_TID), "left_anti"))
+    df, n = _drop_matched(stage, stage.view(b.label, False), ids,
+                          F.col(ID) == F.col(_TID))
+    stage.rewrite(b.label, False, df)
     return n

@@ -1343,9 +1343,13 @@ class QueryCompiler:
         eprops_parts: list[list[str]] = []
         aprops_parts: list[list[str]] = []
         nprops_all: Optional[list[str]] = None
+        tgt_labels: list[str] = []
+        # an alternation target narrows no candidate: the tgt_label check
+        # below keeps the edge types reaching any of its labels
+        tgt_hint = node.labels[0] if len(node.labels) == 1 else None
         for dirn in directions:
-            src_lbl = prev_b.label if dirn == "out" else (node.labels[0] if node.labels else None)
-            dst_lbl = (node.labels[0] if node.labels else None) if dirn == "out" else prev_b.label
+            src_lbl = prev_b.label if dirn == "out" else tgt_hint
+            dst_lbl = tgt_hint if dirn == "out" else prev_b.label
             try:
                 ets = self._edge_candidates(edge, src_lbl, dst_lbl)
             except CompileError:
@@ -1456,6 +1460,7 @@ class QueryCompiler:
                     joined = joined.join(_enter(ndf, nvar, nprops), cond, "inner")
                 parts.append(joined)
                 used_et.append(et)
+                tgt_labels.append(tgt_label)
                 eprops_parts.append(eprops)
                 aprops_parts.append(aprops)
                 nprops_all = nprops if nprops_all is None else sorted(
@@ -1466,31 +1471,34 @@ class QueryCompiler:
                 f"pattern edge {edge.types or '(any)'} does not connect "
                 f"{prev_b.label} to {node.labels or '(any)'}"
             )
+        eb_label = used_et[0].name if len({et.name for et in used_et}) == 1 else None
+        nb_label = tgt_labels[0] if len(set(tgt_labels)) == 1 else None
         if len(parts) == 1:
             df = parts[0]
-            eb_label = used_et[0].name
             eprops = eprops_parts[0]
             aprops = aprops_parts[0]
-            nb_label = (
-                used_et[0].dst_label if edge.direction != "in" else used_et[0].src_label
-            )
-            if node.labels:
-                nb_label = node.labels[0]
         else:
-            # align columns across unioned alternatives
+            # align columns across unioned alternatives; where they differ
+            # in edge type or target label, each carries its own (_label)
             common_cols = set(parts[0].columns)
             for p in parts[1:]:
                 common_cols &= set(p.columns)
             cols = [c for c in parts[0].columns if c in common_cols]
-            df = parts[0].select(*cols)
-            for p in parts[1:]:
-                df = df.unionByName(p.select(*cols))
-            eb_label = None
+            tags = [(evar, [et.name for et in used_et])] if eb_label is None else []
+            if nb_label is None and not rebound:
+                tags.append((nvar, tgt_labels))
+                nprops_all = sorted({*(nprops_all or []), "_label"})
+            df = None
+            for i, p in enumerate(parts):
+                p = p.select(*cols, *[F.lit(lbls[i]).alias(_ncol(v, "_label"))
+                                      for v, lbls in tags])
+                df = p if df is None else df.unionByName(p)
             eprops = sorted(set.intersection(*map(set, eprops_parts)))
+            if eb_label is None:
+                eprops.append("_label")
             # elided anchor: only the columns every alternative reads
             # from its edge row survive the union
             aprops = sorted(set.intersection(*map(set, aprops_parts)))
-            nb_label = node.labels[0] if node.labels else None
 
         if frame is None:
             bindings = {

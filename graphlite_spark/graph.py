@@ -30,12 +30,23 @@ predicate reaches the parquet scan, and where an edge is drawn from its
 endpoint's own table on that node's key (TPC-H's PLACED rows are the
 Order rows) it reads the node's properties from the edge row, no join.
 
+Writes, delta-main. Behind each label's and edge type's read view the
+graph holds a ``Table``: the ``base`` of its last fold, the rows
+appended since and the tombstone keys of base rows masked since. The
+view is ``base`` minus the masked rows plus the appended ones, so the
+compiler reads ``nodes[label]`` and ``EdgeType.df`` as it reads any
+table. A statement (``dml``) publishes new triples; only when a delta
+outgrows ``dml.FOLD_AT`` is a table folded into a new base. A view
+replaced outside ``dml`` (a registered graph, CLEAR GRAPH, an index
+layout) starts a fresh triple whose base is that view: ``table``
+compares the current view with its triple's by identity.
+
 A declaration holds only for the table it was declared on. A write
-that publishes a new table for the label or the edge (``dml.commit``)
-drops every raw-key and same-row use that depends on it, and reads fall
-back to ``_id`` joins: ``node_key``/``edge_keys`` compare the current
-table with the declared one by identity. A graph that declares no keys
-compiles on ``_id`` alone.
+that publishes a new view for the label or the edge drops every raw-key
+and same-row use that depends on it, and reads fall back to ``_id``
+joins: ``node_key``/``edge_keys`` compare the current view with the
+declared one by identity. A graph that declares no keys compiles on
+``_id`` alone.
 """
 
 from __future__ import annotations
@@ -44,6 +55,9 @@ from dataclasses import dataclass, field, replace
 
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql import types as T
+
+from .operators.common import local_frame
 
 ID = "_id"
 SRC = "_src"
@@ -101,6 +115,97 @@ class EdgeType:
         return [c for c in self.df.columns if c not in (SRC, DST)]
 
 
+@dataclass(frozen=True, eq=False)
+class Table:
+    """A node label's or edge type's rows since its last fold: ``base``
+    (None for a table a write created), the ``rows`` appended since (dicts
+    of ``schema``'s types, None: the base's) and the ``dead`` keys of base
+    rows masked since. A node tombstone is an ``_id``; an edge tombstone
+    is a ``(_src, _dst)`` pair in which None stands for any id, so
+    ``(id, None)`` masks every base edge leaving a deleted node. ``view``,
+    what reads see, is None until ``composed``, and so are its parts:
+    ``live``, the base rows no tombstone masks, and ``delta``, the local
+    relation of ``rows``, each None again when what it holds changes."""
+
+    edge: bool
+    base: DataFrame | None
+    view: DataFrame | None = None
+    rows: tuple = ()
+    dead: frozenset = frozenset()
+    schema: T.StructType | None = None
+    live: DataFrame | None = None
+    delta: DataFrame | None = None
+
+    def composed(self, spark: SparkSession) -> "Table":
+        """This triple with its view: the live base rows, plus the
+        appended rows as a local relation."""
+        if self.view is not None:
+            return self
+        live, delta = self.live, self.delta
+        if live is None and self.base is not None:
+            live = self.base.where(~_masked(self.dead, self.edge)) \
+                if self.dead else self.base
+        if delta is None and (self.rows or live is None):
+            delta = local_frame(spark, self.rows, self.schema)
+        df = live if delta is None else delta if live is None \
+            else live.unionByName(delta, allowMissingColumns=True)
+        return replace(self, view=df, live=live, delta=delta)
+
+    def appended(self, rows: list[dict], schema: T.StructType) -> "Table":
+        """``rows`` appended, ``schema`` their types; a node row replaces
+        the appended row with its id."""
+        ids = set() if self.edge else {r[ID] for r in rows}
+        kept = tuple(r for r in self.rows if self.edge or r[ID] not in ids)
+        return replace(self, view=None, rows=kept + tuple(rows),
+                       schema=schema, delta=None)
+
+    def dropped(self, keys: set) -> "Table":
+        """``keys`` tombstoned, and the appended rows they match dropped."""
+        if self.edge:
+            def alive(r):
+                s, d = r[SRC], r[DST]
+                return not {(s, d), (s, None), (None, d)} & keys
+        else:
+            def alive(r):
+                return r[ID] not in keys
+        rows = tuple(filter(alive, self.rows))
+        delta = self.delta if len(rows) == len(self.rows) else None
+        return replace(self, view=None, rows=rows, dead=self.dead | keys,
+                       live=None, delta=delta)
+
+
+def _masked(dead: frozenset, edge: bool) -> Column:
+    """Whether a base row's key is among the tombstones ``dead``."""
+    if not edge:
+        return keys_in([ID], [(k,) for k in dead])
+    return (keys_in([SRC], [(s,) for s, d in dead if d is None])
+            | keys_in([DST], [(d,) for s, d in dead if s is None])
+            | keys_in([SRC, DST], [k for k in dead if None not in k]))
+
+
+def keys_in(cols: list[str], keys: list[tuple]) -> Column:
+    """Whether ``cols`` hold one of ``keys``: one SQL expression, parsed
+    once, where ``Column.isin`` makes a JVM call per key (~0.3 ms each)."""
+    keys = set(keys)
+    if not keys:
+        return F.lit(False)
+    if not all(type(v) in (int, str) for k in keys for v in k):
+        if len(cols) == 1:
+            return F.col(cols[0]).isin([k[0] for k in keys])
+        return F.struct(*[F.col(c).alias(f"col{i + 1}") for i, c in enumerate(cols)]) \
+            .isin([F.struct(*map(F.lit, k)) for k in keys])
+    left = ", ".join(f"`{c}` AS col{i + 1}" for i, c in enumerate(cols))
+    left = f"`{cols[0]}`" if len(cols) == 1 else f"struct({left})"
+    return F.expr(f"{left} IN (" + ", ".join(
+        "(" + ", ".join(map(_sql_literal, k)) + ")" for k in keys) + ")")
+
+
+def _sql_literal(v: int | str) -> str:
+    if isinstance(v, int):
+        return str(v)
+    return "'" + v.replace("\\", "\\\\").replace("'", "\\'") + "'"
+
+
 @dataclass
 class PropertyGraph:
     """A graph = {label: nodes_df} + {edge_label: EdgeType}."""
@@ -111,6 +216,7 @@ class PropertyGraph:
     name: str = "graph"
     graph_type: object | None = None  # GraphTypeSpec when typed (ast.rs:749-812)
     node_keys: dict[str, NodeKey] = field(default_factory=dict)
+    tables: dict[tuple[bool, str], Table] = field(default_factory=dict)
 
     # -- construction -----------------------------------------------------
     def add_nodes(self, label: str, df: DataFrame, id_col: str | None = None,
@@ -184,6 +290,31 @@ class PropertyGraph:
         label, nk, col = ((et.src_label, k.source, k.src) if side == SRC
                           else (et.dst_label, k.destination, k.dst))
         return (nk, col) if self.node_key(label) is nk else None
+
+    # -- delta-main tables ------------------------------------------------
+    def table(self, name: str, edge: bool) -> Table | None:
+        """The triple behind a label's (an edge type's) view, None when
+        the graph has no such table. A view published by anything but
+        ``publish`` starts a triple of its own, with no delta."""
+        if edge:
+            view = self.edges[name].df if name in self.edges else None
+        else:
+            view = self.nodes.get(name)
+        if view is None:
+            return None
+        t = self.tables.get((edge, name))
+        return t if t is not None and t.view is view else Table(edge, view, view)
+
+    def publish(self, name: str, t: Table, ends: tuple[str, str] | None = None):
+        """Make the composed ``t`` the table of label (edge type) ``name``;
+        a new edge type runs between the labels ``ends``."""
+        self.tables[(t.edge, name)] = t
+        if not t.edge:
+            self.nodes[name] = t.view
+        elif name in self.edges:
+            self.edges[name] = replace(self.edges[name], df=t.view)
+        else:
+            self.edges[name] = EdgeType(name, t.view, *ends)
 
     # -- lookups used by the compiler -------------------------------------
     def node_labels(self) -> list[str]:

@@ -208,6 +208,20 @@ def test_match_insert_connects_matched_nodes(db):
     assert [(r.a, r.b, r.s) for r in got] == [("Ada", "Bob", 1840)]
 
 
+def test_match_insert_of_a_new_type_matching_nothing(db):
+    # the new edge type is created empty, with its endpoint and property
+    # columns: reads of it, and of every edge type, answer
+    db.execute("INSERT (:Person {name: 'Ada'})-[:KNOWS]->(:Person {name: 'Bob'})")
+    n = db.execute("MATCH (a:Person {name: 'Zed'}), (b:Person) "
+                   "INSERT (a)-[:LIKES {w: 1}]->(b)")
+    assert n["rows_affected"] == 0
+    assert sorted(db.graph().edge_type("LIKES").df.columns) == \
+        ["_dst", "_src", "w"]
+    assert db.query("MATCH ()-[e:LIKES]->() RETURN count(*) AS n"
+                    ).collect()[0].n == 0
+    assert db.query("MATCH ()-[e]->() RETURN count(*) AS n").collect()[0].n == 1
+
+
 def test_insert_null_property_is_absent(db):
     from graphlite_spark.catalog import content_hash_id
 
@@ -1038,3 +1052,29 @@ def test_call_katz_and_assortativity(db):
     assert sorted(kz.values()) == [1.0, 1.5, 1.75]
     r = db.execute("CALL gql.assortativity()").collect()[0]
     assert r.n_edges == 2 and r.assortativity is not None
+
+
+# The DML contract once more with FOLD_AT = 0: a match of one row or more
+# rewrites the tables it touches as DataFrames, and every staged table
+# folds, so the same assertions pin the path past the cap
+_PAST_THE_FOLD_CAP = [
+    test_insert_and_match, test_insert_edge_pattern, test_match_set_property,
+    test_match_set_new_property, test_match_remove, test_delete_requires_detach,
+    test_delete_edges_only, test_transaction_rollback,
+    test_match_insert_connects_matched_nodes,
+    test_match_insert_of_a_new_type_matching_nothing,
+    test_insert_null_property_is_absent,
+    test_insert_edge_and_match_insert_null_property,
+    test_truncate_and_clear_graph, test_duplicate_insert_dedup_and_warning,
+]
+
+
+@pytest.mark.parametrize("case", _PAST_THE_FOLD_CAP, ids=lambda f: f.__name__)
+def test_dml_past_the_fold_cap(case, request, monkeypatch):
+    import inspect
+
+    from graphlite_spark import dml
+
+    monkeypatch.setattr(dml, "FOLD_AT", 0)
+    case(*[request.getfixturevalue(p)
+           for p in inspect.signature(case).parameters])

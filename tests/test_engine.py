@@ -707,3 +707,41 @@ def test_unaliased_projection_dotted_names(simple_db):
         "MATCH (n:TestNode) WITH n.value WHERE n.value >= 150 "
         "RETURN count(*) AS c"))
     assert got == [(5,)]
+
+
+# --- expansions whose target rows come from several edge types -------------
+
+
+@pytest.fixture(scope="module")
+def tpch_db(spark):
+    from graphlite_spark import GraphLiteSpark
+    from graphlite_spark.datasets.tpch import tpch_graph
+
+    from tests.test_cli import DATA
+
+    db = GraphLiteSpark(spark)
+    db.register_graph(tpch_graph(spark, DATA))
+    return db
+
+
+# customer 7 placed 11 orders and lives in one nation
+_CUSTOMER_7 = [(["Nation"], 1), (["Order"], 11)]
+
+
+def test_label_alternation_target_reaches_every_label(tpch_db):
+    got = tpch_db.query(
+        "MATCH (c:Customer {c_custkey: 7})-[]->(x:Order|Nation) "
+        "RETURN labels(x) AS l, count(*) AS n").collect()
+    assert sorted((r.l, r.n) for r in got) == _CUSTOMER_7
+
+
+def test_union_target_carries_its_label_and_type_per_row(tpch_db):
+    got = tpch_db.query(
+        "MATCH (c:Customer {c_custkey: 7})-[]->(x) "
+        "RETURN labels(x) AS l, count(*) AS n").collect()
+    assert sorted((r.l, r.n) for r in got) == _CUSTOMER_7
+    got = tpch_db.query(
+        "MATCH (c:Customer {c_custkey: 7})-[e]->(x) "
+        "RETURN type(e) AS t, x IS :Nation AS nation, count(*) AS n").collect()
+    assert sorted(tuple(r) for r in got) == [("FROM_NATION", True, 1),
+                                             ("PLACED", False, 11)]
