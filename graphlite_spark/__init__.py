@@ -16,7 +16,6 @@ Queries compile to lazy DataFrames; Catalyst owns physical execution.
 
 from __future__ import annotations
 
-from dataclasses import replace
 from typing import Any, Optional
 
 from pyspark.sql import DataFrame, SparkSession
@@ -53,11 +52,12 @@ class GraphLiteSpark:
         self.spark = spark
         self.catalog = GraphCatalog(spark, catalog_root)
         self._current_graph: Optional[str] = None
-        self._txn_snapshot: Optional[dict] = None
+        self._txn_snapshot: Optional[dict] = None  # path -> held version
         self._txn_isolation: str = "READ COMMITTED"  # isolation.rs default
         self._txn_readonly: bool = False
         self._procedures: dict[str, str] = {}
         self._graph_types: dict[str, object] = {}
+        self._indexes: dict[str, dict] = {}
         # RBAC metadata (catalog-level, no enforcement on local mode —
         # the reference's security/ module gates sessions the same way)
         self._users: dict[str, dict] = {"admin": {"roles": ["admin"]}}
@@ -378,13 +378,7 @@ class GraphLiteSpark:
             g = self.catalog.get_graph(path)
             # keep every label/edge-type schema, drop the rows: limit(0)
             # is a metadata-only plan, no scan of the old data
-            g.nodes = {lbl: df.limit(0) for lbl, df in g.nodes.items()}
-            from .graph import EdgeType as ET
-
-            g.edges = {
-                k: ET(k, v.df.limit(0), v.src_label, v.dst_label)
-                for k, v in g.edges.items()
-            }
+            g.publish({k: t.over(t.view.limit(0)) for k, t in g.tables.items()})
             status = "truncated" if stmt.kind == "TRUNCATE" else "cleared"
             return {"status": status, "rows_affected": 0}
         if isinstance(stmt, S.SessionSetStmt):
@@ -477,7 +471,6 @@ class GraphLiteSpark:
         in-memory analogue of bucketing); ReachabilityIndex = materialize
         + cache the bounded BFS closure. PathIndex/PatternIndex record
         metadata only (roadmap-stubbed in the reference as well)."""
-        self._indexes = getattr(self, "_indexes", {})
         if stmt.action == "DROP":
             idx = self._indexes.pop(stmt.name.lower(), None)
             if idx and idx.get("df") is not None:
@@ -486,11 +479,12 @@ class GraphLiteSpark:
         g = self.graph()
         kind = stmt.kind.replace("_", "")
         entry = {"name": stmt.name, "kind": stmt.kind, "target": stmt.target, "df": None}
-        if stmt.target and stmt.target in g.edges:
-            et = g.edges[stmt.target]
+        et = g.tables.get((True, stmt.target))
+        if et is not None:
             if kind in ("ADJACENCYLIST", "ADJACENCY"):
-                et.df = et.df.repartition("_src").cache()
-                entry["df"] = et.df
+                et = et.over(et.view.repartition("_src").cache())
+                g.publish({(True, et.name): et})
+                entry["df"] = et.view
             elif kind in ("REACHABILITYINDEX", "REACHABILITY"):
                 from .operators.paths import bfs_distances
                 from pyspark.sql import functions as F
@@ -517,8 +511,8 @@ class GraphLiteSpark:
                 "DML is not allowed in a READ ONLY transaction"
             )
 
-    # -- transactions: a snapshot of every graph's views and delta-main
-    #    triples, restored whole on ROLLBACK (see dml.py docstring) --------
+    # -- transactions: a held version of every graph, assigned back on
+    #    ROLLBACK (see graph.py and dml.py docstrings) -------------------
     def _txn(self, stmt):
         kind = stmt.kind
         if kind == "START":
@@ -529,14 +523,10 @@ class GraphLiteSpark:
             # access mode is enforced against DML.
             self._txn_isolation = stmt.isolation or "READ COMMITTED"
             self._txn_readonly = stmt.access_mode == "READ ONLY"
-            # the views and the delta-main triples behind them: restored
-            # together, the views are their triples' again, so the next
-            # write keeps appending to the same bases
+            # a version is immutable: holding its mapping copies nothing
             self._txn_snapshot = {
-                path: (dict(g.nodes), {k: replace(v) for k, v in g.edges.items()},
-                       dict(g.tables))
+                path: self.catalog.get_graph(path).tables
                 for path in self.catalog.list_graphs()
-                for g in [self.catalog.get_graph(path)]
             }
             return {
                 "status": f"transaction started ({self._txn_isolation}"
@@ -550,11 +540,9 @@ class GraphLiteSpark:
         if kind == "ROLLBACK":
             if self._txn_snapshot is None:
                 return {"status": "no transaction", "rows_affected": 0}
-            for path, (nodes, edges, tables) in self._txn_snapshot.items():
-                if not self.catalog.has_graph(path):
-                    continue
-                g = self.catalog.get_graph(path)
-                g.nodes, g.edges, g.tables = dict(nodes), dict(edges), dict(tables)
+            for path, tables in self._txn_snapshot.items():
+                if self.catalog.has_graph(path):
+                    self.catalog.get_graph(path).tables = tables
             self._txn_snapshot = None
             self._txn_readonly = False
             return {"status": "rolled back", "rows_affected": 0}

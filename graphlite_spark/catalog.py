@@ -156,23 +156,16 @@ class GraphCatalog:
         storage_manager.rs:400): same-label node tables union by name with
         schema merge; same-type edge tables likewise."""
         out = PropertyGraph(self.spark, name=name)
+        merged = {}
         for path in paths:
-            g = self.get_graph(path)
-            for label, df in g.nodes.items():
-                if label in out.nodes:
-                    out.nodes[label] = out.nodes[label].unionByName(
-                        df, allowMissingColumns=True
-                    ).dropDuplicates(["_id"])
-                else:
-                    out.nodes[label] = df
-            for ename, et in g.edges.items():
-                if ename in out.edges:
-                    cur = out.edges[ename]
-                    cur.df = cur.df.unionByName(et.df, allowMissingColumns=True)
-                else:
-                    from .graph import EdgeType
-
-                    out.edges[ename] = EdgeType(ename, et.df, et.src_label, et.dst_label)
+            for key, t in self.get_graph(path).tables.items():
+                cur = merged.get(key)
+                if cur is None:
+                    merged[key] = t.over(t.view)
+                    continue
+                df = cur.view.unionByName(t.view, allowMissingColumns=True)
+                merged[key] = cur.over(df if key[0] else df.dropDuplicates(["_id"]))
+        out.publish(merged)
         return out
 
     # -- persistence --------------------------------------------------------

@@ -22,9 +22,11 @@ A match is collected in one job, up to ``FOLD_AT`` rows. A larger one
 rewrites the tables it touches as DataFrames instead: the matched keys
 join the table with whatever join the planner picks, and counts are
 ``observe`` metrics riding the fold (a plain DELETE's incident-edge
-probe is still one job, a semi join with the matched ids). Staging
-publishes nothing: ``commit`` publishes every touched table together,
-after the last fold, so a statement that raises changes no table. A
+probe is still one job, a semi join with the matched ids). A statement
+reads only the graph version it started on (``Staged.version``), and
+staging publishes nothing: ``commit`` publishes every touched table in
+one new version, one assignment after the last fold, so a statement
+that raises changes no table. A
 table folds, one eager checkpoint of its view (``_ck_cut_stats``) that
 becomes its new base, only when a DataFrame rewrite staged it or its
 appended rows plus tombstones pass ``FOLD_AT``. Below that, its view is
@@ -35,9 +37,10 @@ An INSERTed property whose value is NULL is absent, as everywhere else
 in the engine (REMOVE, reads, the duplicate match): it does not enter
 the content hash, the row or the table's columns, and a read returns
 NULL for it. A value no column type can hold (an empty list) is refused
-with the property's name. START TRANSACTION snapshots the tables and
-their triples, ROLLBACK restores them (optimistic, last-writer-wins; the
-reference's interactive isolation levels don't map 1:1, see README).
+with the property's name. A transaction holds versions: START keeps
+each graph's mapping as it is, ROLLBACK assigns it back, and COMMIT
+lets it go (optimistic, last-writer-wins; the reference's interactive
+isolation levels don't map 1:1, see README).
 """
 
 from __future__ import annotations
@@ -77,13 +80,15 @@ class DmlError(ValueError):
 
 
 class Staged:
-    """One statement's working triples (``tables``), not yet published:
+    """One statement's working records (``tables``) over the graph
+    ``version`` it started on, the only one it reads, not yet published:
     those it ``touched`` on the driver and those a DataFrame rewrite
     replaced (``folds``), and the endpoint labels of the edge types it
     creates."""
 
     def __init__(self, graph: PropertyGraph):
         self.graph = graph
+        self.version = graph.tables
         self.tables: dict[tuple[bool, str], Table] = {}
         self.touched: set[tuple[bool, str]] = set()
         self.folds: set[tuple[bool, str]] = set()
@@ -92,12 +97,13 @@ class Staged:
 
     def get(self, name: str, edge: bool) -> Table | None:
         key = (edge, name)
-        if key not in self.tables:
-            t = self.graph.table(name, edge)
-            if t is None:
-                return None
-            self.tables[key] = t
-        return self.tables[key]
+        return self.tables.get(key) or self.version.get(key)
+
+    def _new(self, name: str, edge: bool) -> Table:
+        """A table this statement creates; an edge type runs between
+        ``ends[name]``."""
+        return Table(name, edge, None, None,
+                     *(self.ends[name] if edge else (None, None)))
 
     def view(self, name: str, edge: bool) -> DataFrame:
         """Table ``name`` as this statement has staged it so far."""
@@ -115,7 +121,7 @@ class Staged:
         columns of ``types``."""
         t = self.get(name, edge)
         if t is None:
-            t = Table(edge, None, schema=T.StructType())
+            t = replace(self._new(name, edge), schema=T.StructType())
         elif not rows:
             return
         schema = t.schema if t.schema is not None else T.StructType(
@@ -128,20 +134,21 @@ class Staged:
             self.rewrite(name, edge, self.view(name, edge).unionByName(
                 delta, allowMissingColumns=True))
             return
-        self._stage(t.appended(rows, schema), name)
+        self._stage(t.appended(rows, schema))
 
     def drop(self, name: str, edge: bool, keys: set):
         if keys:
-            self._stage(self.get(name, edge).dropped(keys), name)
+            self._stage(self.get(name, edge).dropped(keys))
 
     def rewrite(self, name: str, edge: bool, df: DataFrame):
         """Stage ``df`` as the whole of table ``name``; it folds."""
-        self.tables[(edge, name)] = Table(edge, df, df)
+        t = self.get(name, edge) or self._new(name, edge)
+        self.tables[(edge, name)] = t.over(df)
         self.folds.add((edge, name))
 
-    def _stage(self, t: Table, name: str):
-        self.tables[(t.edge, name)] = t
-        self.touched.add((t.edge, name))
+    def _stage(self, t: Table):
+        self.tables[(t.edge, t.name)] = t
+        self.touched.add((t.edge, t.name))
 
     def observe(self, df: DataFrame, metric) -> tuple[DataFrame, str]:
         """``df`` with ``metric`` attached, and its name in ``commit``'s
@@ -179,9 +186,9 @@ def _merged(schema: T.StructType, types: dict) -> T.StructType | None:
 
 
 def commit(graph: PropertyGraph, staged: Staged) -> dict:
-    """Publish every table ``staged`` changed; return the observed
-    metrics by name. Nothing publishes before every fold has run, so a
-    statement that raises changes no table.
+    """Publish every table ``staged`` changed, in one new version of the
+    graph; return the observed metrics by name. Nothing publishes before
+    every fold has run, so a statement that raises changes no table.
 
     A table a DataFrame rewrite staged, or whose appended rows plus
     tombstones pass ``FOLD_AT``, is folded: its view checkpointed once,
@@ -196,18 +203,16 @@ def commit(graph: PropertyGraph, staged: Staged) -> dict:
     for key in staged.touched | staged.folds:
         t = staged.tables[key].composed(spark)
         if key in staged.folds or len(t.rows) + len(t.dead) > FOLD_AT:
-            old = graph.table(key[1], key[0])
+            old = staged.version.get(key)
             # an append adds partitions: hold the table at the count its
             # base had (a truncated base has none), or a long history
             # splits every scan into ever more tiny tasks
             n = 1 if old is None or old.base is None \
                 else old.base.rdd.getNumPartitions()
-            df = _ck_cut_stats(t.view.coalesce(max(n, 1)))
-            t = Table(t.edge, df, df)
+            t = t.over(_ck_cut_stats(t.view.coalesce(max(n, 1))))
         out[key] = t
     metrics = {k: v for o in staged._observations for k, v in o.get.items()}
-    for (_edge, name), t in out.items():
-        graph.publish(name, t, staged.ends.get(name))
+    graph.publish(out)
     return metrics
 
 
@@ -305,8 +310,8 @@ def _new_node(stage: Staged, el, params, new: list) -> Any:
     if graph.graph_type is not None:
         graph.graph_type.validate_node(el.labels, props)
     nid = content_hash_id(el.labels, props)
-    old = graph.nodes.get(el.labels[0])
-    if old is not None and dict(old.dtypes).get(ID) != "string":
+    old = stage.version.get((False, el.labels[0]))
+    if old is not None and dict(old.view.dtypes).get(ID) != "string":
         nid = int(nid[:15], 16)
     new.append((el.labels[0], False, {ID: nid, **props},
                 f"Duplicate node detected (content hash {nid}); "
@@ -471,12 +476,13 @@ def _set(stage: Staged, frame, stmt, params) -> list:
         b = _binding(frame, var)
         if b.kind != "node" or b.label is None:
             raise DmlError("REMOVE supports labeled node properties")
-        if prop in stage.graph.nodes[b.label].columns:
+        if prop in stage.version[(False, b.label)].view.columns:
             items.append((var, b.label, prop, F.lit(None)))
     if not items:
         return []
     # every var's whole row comes from the frame: one job, no join back
-    cols = {var: stage.graph.nodes[label].columns for var, label, *_ in items}
+    cols = {var: stage.version[(False, label)].view.columns
+            for var, label, *_ in items}
     matched = None
     if all(set(c) <= set(frame.bindings[v].props) for v, c in cols.items()):
         matched = _matched(frame, [
@@ -536,9 +542,9 @@ def _rewrite_prop(stage: Staged, frame, matches, var, prop, value) -> str:
     return n
 
 
-def _incident(graph: PropertyGraph, label: str):
+def _incident(stage: Staged, label: str):
     """(edge type, endpoint column) of every edge end at ``label``."""
-    return [(name, c) for name, et in graph.edges.items()
+    return [(name, c) for (edge, name), et in stage.version.items() if edge
             for c, end in ((SRC, et.src_label), (DST, et.dst_label))
             if end == label]
 
@@ -568,7 +574,7 @@ def _delete(stage: Staged, frame, stmt, _params) -> list:
         if not edge and not detach:
             _refuse_incident(stage, var, label, keys)
         elif not edge:
-            for ename, c in _incident(stage.graph, label):
+            for ename, c in _incident(stage, label):
                 stage.drop(ename, True, {(i, None) if c == SRC else (None, i)
                                          for i in keys})
         stage.drop(label, edge, keys)
@@ -583,7 +589,7 @@ def _refuse_incident(stage: Staged, var, label: str, ids: set | DataFrame):
     if isinstance(ids, set) and not ids:
         return
     probes = []
-    for name, c in _incident(stage.graph, label):
+    for name, c in _incident(stage, label):
         view = stage.view(name, True)
         hits = view.join(ids, F.col(c) == F.col(_TID), "left_semi") \
             if isinstance(ids, DataFrame) \
@@ -624,7 +630,7 @@ def _drop_frame(stage: Staged, frame, var, detach: bool) -> str:
     if not detach:
         _refuse_incident(stage, var, b.label, ids)
     else:
-        for ename, c in _incident(stage.graph, b.label):
+        for ename, c in _incident(stage, b.label):
             stage.rewrite(ename, True, stage.view(ename, True).join(
                 ids, F.col(c) == F.col(_TID), "left_anti"))
     df, n = _drop_matched(stage, stage.view(b.label, False), ids,

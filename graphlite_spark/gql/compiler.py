@@ -634,7 +634,7 @@ class QueryCompiler:
         if ep is None or (np.labels and np.labels != [label]):
             return None
         nk, col = ep
-        if nk.table is et.keys.table and col == nk.column:
+        if nk.table is et.key.table and col == nk.column:
             return "row"
         if self._refprops is None or np.var is None:
             return None
@@ -644,15 +644,15 @@ class QueryCompiler:
         return None
 
     def _from_edge_row(self, mode: Optional[str], var: str,
-                       np: A.NodePattern, ep, end: Column):
-        """What an endpoint read from its edge row (``_endpoint``'s
-        ``mode``) adds to the edge's select: the columns, the props they
-        bind ``var`` to, and the node table to read the edge rows from
-        when the node's properties are in them."""
+                       np: A.NodePattern, label: str, ep, end: Column):
+        """What an endpoint of ``label`` read from its edge row
+        (``_endpoint``'s ``mode``) adds to the edge's select: the columns,
+        the props they bind ``var`` to, and the node table to read the
+        edge rows from when the node's properties are in them."""
         if mode == "row":
-            nk = ep[0]
-            props = self._projected(np.var, nk.df.columns, np.props, nk.column)
-            return [F.col(p).alias(_ncol(var, p)) for p in props], props, nk.df
+            ndf = self.graph.nodes_for_label(label)
+            props = self._projected(np.var, ndf.columns, np.props, ep[0].column)
+            return [F.col(p).alias(_ncol(var, p)) for p in props], props, ndf
         cols = [end.alias(_ncol(var, ID))]
         if mode != "key":
             return cols, [ID], None
@@ -1367,7 +1367,7 @@ class QueryCompiler:
                 near_lbl = et.src_label if dirn == "out" else et.dst_label
                 # the rows the edge is read from, and its endpoint ids:
                 # encoded from the raw keys while its declaration stands
-                ek = self.graph.edge_keys(et)
+                ek = et.key
                 if ek is None:
                     table, ends = et.df, {SRC: F.col(SRC), DST: F.col(DST)}
                 else:
@@ -1386,17 +1386,19 @@ class QueryCompiler:
                 if frame is None:
                     amode = self._endpoint(prev_node, near_lbl, et, near)
                     cols, aprops, rows = self._from_edge_row(
-                        amode, prev_var, prev_node, near_key, ends[near])
+                        amode, prev_var, prev_node, near_lbl, near_key,
+                        ends[near])
                     derived += cols
                     table = rows if rows is not None else table
                 if not rebound:
                     tmode = self._endpoint(node, tgt_label, et, far)
                     if tmode == "row" and amode == "row" \
-                            and far_key[0].df is not table:
+                            and self.graph.nodes_for_label(tgt_label) \
+                            is not table:
                         tmode = None  # one row, two node tables: join one
                     if tmode is not None:
                         cols, nprops, rows = self._from_edge_row(
-                            tmode, nvar, node, far_key, ends[far])
+                            tmode, nvar, node, tgt_label, far_key, ends[far])
                         derived += cols
                         table = rows if rows is not None else table
                     elif far_key is not None:

@@ -30,28 +30,38 @@ predicate reaches the parquet scan, and where an edge is drawn from its
 endpoint's own table on that node's key (TPC-H's PLACED rows are the
 Order rows) it reads the node's properties from the edge row, no join.
 
-Writes, delta-main. Behind each label's and edge type's read view the
-graph holds a ``Table``: the ``base`` of its last fold, the rows
-appended since and the tombstone keys of base rows masked since. The
-view is ``base`` minus the masked rows plus the appended ones, so the
-compiler reads ``nodes[label]`` and ``EdgeType.df`` as it reads any
-table. A statement (``dml``) publishes new triples; only when a delta
-outgrows ``dml.FOLD_AT`` is a table folded into a new base. A view
-replaced outside ``dml`` (a registered graph, CLEAR GRAPH, an index
-layout) starts a fresh triple whose base is that view: ``table``
-compares the current view with its triple's by identity.
+Graph versions. A graph's whole state is one immutable mapping,
+``PropertyGraph.tables``, from ``(edge, name)`` to the frozen ``Table``
+record of each label and edge type: its read view, its delta-main
+triple, an edge's endpoint labels and its key declaration.
+``nodes``/``edges`` and the key lookups are reads of that mapping. Every
+change builds a new mapping and publishes it with one assignment
+(``publish``), so a reader holding a mapping sees one consistent
+version, and a transaction is a held mapping.
 
-A declaration holds only for the table it was declared on. A write
-that publishes a new view for the label or the edge drops every raw-key
-and same-row use that depends on it, and reads fall back to ``_id``
-joins: ``node_key``/``edge_keys`` compare the current view with the
-declared one by identity. A graph that declares no keys compiles on
-``_id`` alone.
+Writes, delta-main. A record's view is the ``base`` of its last fold
+minus the base rows whose keys were tombstoned since, plus the rows
+appended since, so the compiler reads ``nodes[label]`` and
+``EdgeType.df`` as it reads any table. A statement (``dml``) publishes
+new records; only when a delta outgrows ``dml.FOLD_AT`` is a table
+folded into a new base. A view replaced outside ``dml`` (CLEAR GRAPH, an
+index layout, a graph union) is published as a fresh record whose base
+is that view (``Table.over``).
+
+A declaration holds only for the view it was registered with: it lives
+on the record ``add_nodes``/``add_edges`` publish, and every record
+derived from that one (a write, a fold, a replaced view) carries none,
+so reads of that label or edge fall back to ``_id`` joins. An edge's
+raw-key and same-row uses also need its endpoint label's record to
+still carry the declaration the edge references (``endpoint_key``). A
+graph that declares no keys compiles on ``_id`` alone.
 """
 
 from __future__ import annotations
 
+from collections.abc import Mapping
 from dataclasses import dataclass, field, replace
+from types import MappingProxyType
 
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -68,14 +78,12 @@ NS = 10**12  # a keyed label's ids are ns * NS + key
 @dataclass(frozen=True, eq=False)
 class NodeKey:
     """``KEY (column)`` of a label whose ids encode it: ``_id = ns·NS +
-    column``. ``table`` is the table as declared; ``df``, the node table
-    (``table`` plus ``_id``) the declaration holds for."""
+    column``. ``table`` is the table as declared."""
 
     column: str
     ns: int
     dtype: str
     table: DataFrame
-    df: DataFrame | None = None
 
     def encode(self, key: Column) -> Column:
         return F.lit(self.ns * NS) + key.cast("long")
@@ -85,56 +93,59 @@ class NodeKey:
 class EdgeKeys:
     """``SOURCE KEY (src) REFERENCES source`` and ``DESTINATION KEY (dst)
     REFERENCES destination``: raw key columns of ``table``, from which
-    the edge table ``df`` the declaration holds for was encoded."""
+    the edge's ``_src``/``_dst`` were encoded."""
 
     table: DataFrame
     src: str
     dst: str
     source: NodeKey
     destination: NodeKey
-    df: DataFrame | None = None
-
-
-@dataclass
-class EdgeType:
-    """A typed edge table: ``df`` has ``_src``/``_dst`` plus property columns.
-
-    ``src_label``/``dst_label`` give the compiler the endpoint node tables
-    (GraphLite edges carry exactly one label, storage/types.rs:128-134).
-    ``keys`` is set when the edge was declared over raw key columns.
-    """
-
-    name: str
-    df: DataFrame
-    src_label: str
-    dst_label: str
-    keys: EdgeKeys | None = None
-
-    @property
-    def properties(self) -> list[str]:
-        return [c for c in self.df.columns if c not in (SRC, DST)]
 
 
 @dataclass(frozen=True, eq=False)
 class Table:
-    """A node label's or edge type's rows since its last fold: ``base``
-    (None for a table a write created), the ``rows`` appended since (dicts
-    of ``schema``'s types, None: the base's) and the ``dead`` keys of base
-    rows masked since. A node tombstone is an ``_id``; an edge tombstone
-    is a ``(_src, _dst)`` pair in which None stands for any id, so
-    ``(id, None)`` masks every base edge leaving a deleted node. ``view``,
-    what reads see, is None until ``composed``, and so are its parts:
-    ``live``, the base rows no tombstone masks, and ``delta``, the local
-    relation of ``rows``, each None again when what it holds changes."""
+    """The record of a node label or edge type ``name`` in a graph
+    version. ``view`` is what reads see; behind it, the rows since the
+    last fold: ``base`` (None for a table a write created), the ``rows``
+    appended since (dicts of ``schema``'s types, None: the base's) and
+    the ``dead`` keys of base rows masked since. A node tombstone is an
+    ``_id``; an edge tombstone is a ``(_src, _dst)`` pair in which None
+    stands for any id, so ``(id, None)`` masks every base edge leaving a
+    deleted node. An edge runs from ``src_label`` to ``dst_label`` nodes
+    (GraphLite edges carry exactly one label, storage/types.rs:128-134).
+    ``key`` is the declaration (``NodeKey``/``EdgeKeys``) the view was
+    registered with, None on every record derived from it.
 
+    ``view`` is None until ``composed``, and so are its parts: ``live``,
+    the base rows no tombstone masks, and ``delta``, the local relation
+    of ``rows``, each None again when what it holds changes."""
+
+    name: str
     edge: bool
-    base: DataFrame | None
+    base: DataFrame | None = None
     view: DataFrame | None = None
+    src_label: str | None = None
+    dst_label: str | None = None
+    key: NodeKey | EdgeKeys | None = None
     rows: tuple = ()
     dead: frozenset = frozenset()
     schema: T.StructType | None = None
     live: DataFrame | None = None
     delta: DataFrame | None = None
+
+    @property
+    def df(self) -> DataFrame:
+        return self.view
+
+    @property
+    def properties(self) -> list[str]:
+        return [c for c in self.view.columns if c not in (SRC, DST)]
+
+    def over(self, df: DataFrame) -> "Table":
+        """A fresh record of this table whose base and view are ``df``:
+        no delta, no declaration."""
+        return Table(self.name, self.edge, df, df, self.src_label,
+                     self.dst_label)
 
     def composed(self, spark: SparkSession) -> "Table":
         """This triple with its view: the live base rows, plus the
@@ -156,7 +167,7 @@ class Table:
         the appended row with its id."""
         ids = set() if self.edge else {r[ID] for r in rows}
         kept = tuple(r for r in self.rows if self.edge or r[ID] not in ids)
-        return replace(self, view=None, rows=kept + tuple(rows),
+        return replace(self, view=None, key=None, rows=kept + tuple(rows),
                        schema=schema, delta=None)
 
     def dropped(self, keys: set) -> "Table":
@@ -170,8 +181,13 @@ class Table:
                 return r[ID] not in keys
         rows = tuple(filter(alive, self.rows))
         delta = self.delta if len(rows) == len(self.rows) else None
-        return replace(self, view=None, rows=rows, dead=self.dead | keys,
-                       live=None, delta=delta)
+        return replace(self, view=None, key=None, rows=rows,
+                       dead=self.dead | keys, live=None, delta=delta)
+
+
+# an edge type is its table's record: ``name``, ``df``, ``src_label``,
+# ``dst_label`` and ``properties`` are what the compiler reads of it
+EdgeType = Table
 
 
 def _masked(dead: frozenset, edge: bool) -> Column:
@@ -208,15 +224,34 @@ def _sql_literal(v: int | str) -> str:
 
 @dataclass
 class PropertyGraph:
-    """A graph = {label: nodes_df} + {edge_label: EdgeType}."""
+    """A graph: its current version ``tables``, one immutable mapping from
+    ``(edge, name)`` to each label's and edge type's ``Table`` record.
+    Every change publishes a new mapping with one assignment; a reader
+    that holds a mapping holds that version."""
 
     spark: SparkSession
-    nodes: dict[str, DataFrame] = field(default_factory=dict)
-    edges: dict[str, EdgeType] = field(default_factory=dict)
     name: str = "graph"
     graph_type: object | None = None  # GraphTypeSpec when typed (ast.rs:749-812)
-    node_keys: dict[str, NodeKey] = field(default_factory=dict)
-    tables: dict[tuple[bool, str], Table] = field(default_factory=dict)
+    tables: Mapping[tuple[bool, str], Table] = field(
+        default_factory=lambda: MappingProxyType({}))
+
+    def publish(self, changes: dict[tuple[bool, str], Table]) -> None:
+        """Make ``changes`` part of the current version: one new mapping,
+        one assignment."""
+        self.tables = MappingProxyType({**self.tables, **changes})
+
+    @property
+    def nodes(self) -> dict[str, DataFrame]:
+        """Each label's view."""
+        return {n: t.view for (edge, n), t in self.tables.items() if not edge}
+
+    @property
+    def edges(self) -> dict[str, EdgeType]:
+        """Each edge type's record."""
+        return {n: t for (edge, n), t in self.tables.items() if edge}
+
+    def table(self, name: str, edge: bool) -> Table | None:
+        return self.tables.get((edge, name))
 
     # -- construction -----------------------------------------------------
     def add_nodes(self, label: str, df: DataFrame, id_col: str | None = None,
@@ -228,14 +263,13 @@ class PropertyGraph:
         then ``ns·NS + key``."""
         if (id_col is None) == (key is None) or (key is None) != (ns is None):
             raise ValueError("add_nodes takes id_col, or key and ns")
-        self.node_keys.pop(label, None)
+        nk = None
         if key is not None:
             nk = NodeKey(key, ns, dict(df.dtypes)[key], df)
             df = df.withColumn(ID, nk.encode(F.col(key)))
-            self.node_keys[label] = replace(nk, df=df)
         elif id_col != ID:
             df = df.withColumn(ID, F.col(id_col))
-        self.nodes[label] = df
+        self.publish({(False, label): Table(label, False, df, df, key=nk)})
         return self
 
     def add_edges(
@@ -256,65 +290,38 @@ class PropertyGraph:
         (default: every column of ``df``)."""
         keys = None
         if by_key:
-            keys = EdgeKeys(df, src_col, dst_col, self.node_keys[src_label],
-                            self.node_keys[dst_label])
+            source, dest = self.node_key(src_label), self.node_key(dst_label)
+            if source is None or dest is None:
+                raise ValueError(f"by_key needs declared keys on {src_label} "
+                                 f"and {dst_label}")
+            keys = EdgeKeys(df, src_col, dst_col, source, dest)
             df = df.select(
-                keys.source.encode(F.col(src_col)).alias(SRC),
-                keys.destination.encode(F.col(dst_col)).alias(DST),
+                source.encode(F.col(src_col)).alias(SRC),
+                dest.encode(F.col(dst_col)).alias(DST),
                 *(df.columns if properties is None else properties))
-            keys = replace(keys, df=df)
         else:
             if src_col != SRC:
                 df = df.withColumn(SRC, F.col(src_col))
             if dst_col != DST:
                 df = df.withColumn(DST, F.col(dst_col))
-        self.edges[name] = EdgeType(name, df, src_label, dst_label, keys)
+        self.publish({(True, name): Table(name, True, df, df, src_label,
+                                          dst_label, keys)})
         return self
 
-    # -- declared keys, while the tables they were declared on stand ------
+    # -- declared keys, on the records registered with them --------------
     def node_key(self, label: str | None) -> NodeKey | None:
-        k = self.node_keys.get(label)
-        return k if k is not None and self.nodes.get(label) is k.df else None
-
-    @staticmethod
-    def edge_keys(et: EdgeType) -> EdgeKeys | None:
-        k = et.keys
-        return k if k is not None and et.df is k.df else None
+        t = self.tables.get((False, label))
+        return None if t is None else t.key
 
     def endpoint_key(self, et: EdgeType, side: str) -> tuple[NodeKey, str] | None:
         """The ``side`` (``_src``/``_dst``) endpoint's key and the column of
         the edge's table that holds it, while both declarations stand."""
-        k = self.edge_keys(et)
+        k = et.key
         if k is None:
             return None
         label, nk, col = ((et.src_label, k.source, k.src) if side == SRC
                           else (et.dst_label, k.destination, k.dst))
         return (nk, col) if self.node_key(label) is nk else None
-
-    # -- delta-main tables ------------------------------------------------
-    def table(self, name: str, edge: bool) -> Table | None:
-        """The triple behind a label's (an edge type's) view, None when
-        the graph has no such table. A view published by anything but
-        ``publish`` starts a triple of its own, with no delta."""
-        if edge:
-            view = self.edges[name].df if name in self.edges else None
-        else:
-            view = self.nodes.get(name)
-        if view is None:
-            return None
-        t = self.tables.get((edge, name))
-        return t if t is not None and t.view is view else Table(edge, view, view)
-
-    def publish(self, name: str, t: Table, ends: tuple[str, str] | None = None):
-        """Make the composed ``t`` the table of label (edge type) ``name``;
-        a new edge type runs between the labels ``ends``."""
-        self.tables[(t.edge, name)] = t
-        if not t.edge:
-            self.nodes[name] = t.view
-        elif name in self.edges:
-            self.edges[name] = replace(self.edges[name], df=t.view)
-        else:
-            self.edges[name] = EdgeType(name, t.view, *ends)
 
     # -- lookups used by the compiler -------------------------------------
     def node_labels(self) -> list[str]:
@@ -324,14 +331,16 @@ class PropertyGraph:
         return sorted(self.edges)
 
     def nodes_for_label(self, label: str) -> DataFrame:
-        if label not in self.nodes:
+        t = self.tables.get((False, label))
+        if t is None:
             raise KeyError(f"unknown node label {label!r}; have {self.node_labels()}")
-        return self.nodes[label]
+        return t.view
 
     def edge_type(self, name: str) -> EdgeType:
-        if name not in self.edges:
+        t = self.tables.get((True, name))
+        if t is None:
             raise KeyError(f"unknown edge label {name!r}; have {self.edge_labels()}")
-        return self.edges[name]
+        return t
 
     def edge_types_between(
         self, src_label: str | None, dst_label: str | None

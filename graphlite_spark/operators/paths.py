@@ -1331,12 +1331,30 @@ def _oriented_triangle_triples(
             .distinct()
             .localCheckpoint(eager=False)
         )
-    # degree orientation (the power-law refinement, now actually done):
-    # orient every edge from its lower-(degree, id) endpoint to the
-    # higher one. Wedges then open only at a triangle's MINIMUM-degree
-    # corner, so per-vertex join fan-out is bounded by out-degree in
-    # the orientation (<= sqrt(2m) for any graph) instead of raw degree
-    # — the difference between a hub exploding the wedge join and not.
+    # The measured edge count drives the closure-join strategy. A
+    # caller that already knows it passes ``n_edges``, skipping the
+    # extra materialize+count jobs. The oriented frame is
+    # hash-distributed by its wedge corner BEFORE the lineage cut:
+    # plain localCheckpoint preserves outputPartitioning, so the wedge
+    # self-join needs NO exchange on either side (two shuffles of the
+    # edge set per call gone; one repartition added — guide §2.4).
+    oriented = _degree_oriented(und, n_edges) \
+        .repartition("u").localCheckpoint(eager=n_edges is None)
+    if n_edges is None:
+        n_edges = oriented.count()
+    return _wedge_closure(oriented, fits_broadcast(
+        n_edges, oriented.select("u", "v").schema,
+        max_rows=_WEDGE_BROADCAST_MAX_EDGES))
+
+
+def _degree_oriented(und: DataFrame, n_edges: int | None) -> DataFrame:
+    """(u, v, kv): each canonical edge (_lo, _hi) of ``und`` oriented from
+    its lower-(degree, id) endpoint u to the higher one v, whose (degree,
+    id) key is kv — the power-law refinement. Wedges then open only at a
+    triangle's MINIMUM-degree corner, so per-vertex join fan-out is
+    bounded by out-degree in the orientation (<= sqrt(2m) for any graph)
+    instead of raw degree — the difference between a hub exploding the
+    wedge join and not. Not checkpointed: each caller cuts it its way."""
     deg = (
         und.select(F.col("_lo").alias("_n"))
         .unionByName(und.select(F.col("_hi").alias("_n")))
@@ -1349,58 +1367,51 @@ def _oriented_triangle_triples(
     # rows per edge): when the measured edge count fits, broadcast it
     # to both orientation joins so the edge frame itself never hits an
     # exchange (r12; the iterative peelers pay these joins per round).
-    # First call (n_edges unknown) keeps the shuffle joins — the
-    # count is only measured after orientation.
+    # An unknown count (a first call) keeps the shuffle joins.
     if n_edges is not None and fits_broadcast(
             n_edges, deg.schema, max_rows=_WEDGE_BROADCAST_MAX_EDGES):
         dl, dh = F.broadcast(dl), F.broadcast(dh)
-    keyed = und.join(dl, "_lo").join(dh, "_hi")
     klo = F.struct(F.col("_dlo").alias("d"), F.col("_lo").alias("n"))
     khi = F.struct(F.col("_dhi").alias("d"), F.col("_hi").alias("n"))
-    # The measured edge count drives the closure-join strategy below.
-    # Iterative callers (the truss peelers) already track their edge
-    # count per round and pass ``n_edges``, skipping the extra
-    # materialize+count jobs a per-round call would pay. The oriented
-    # frame is hash-distributed by its wedge corner BEFORE the
-    # lineage cut: plain localCheckpoint preserves outputPartitioning,
-    # so the e1 ⋈ e2 wedge self-join below needs NO exchange on
-    # either side (two shuffles of the edge set per call/round gone;
-    # one repartition added — guide §2.4).
-    oriented = keyed.select(
+    return und.join(dl, "_lo").join(dh, "_hi").select(
         F.when(klo < khi, F.col("_lo")).otherwise(F.col("_hi")).alias("u"),
         F.when(klo < khi, F.col("_hi")).otherwise(F.col("_lo")).alias("v"),
         F.when(klo < khi, khi).otherwise(klo).alias("kv"),
-    ).repartition("u").localCheckpoint(eager=n_edges is None)
-    if n_edges is None:
-        n_edges = oriented.count()
+    )
+
+
+def _wedge_closure(oriented: DataFrame, small: bool,
+                   broadcast_wedges: bool = False) -> DataFrame:
+    """(a, b, c) — every triangle of the degree-oriented edge frame
+    ``oriented`` (``_degree_oriented``) once: a wedge opens at its min
+    corner a, its two tips ordered so the closing edge (b -> c) matches
+    its stored orientation exactly once.
+
+    The wedge set is Σ out-deg² rows — orders of magnitude bigger than
+    the edge set (41M wedges from 1.2M edges on the sf0.1 co-purchase
+    graph). Shuffling it by (b, c) for the closure join dominated, so
+    when the edge frame is ``small`` (its MEASURED count fits a
+    broadcast, fits_broadcast: row cap AND estimated bytes) the closing
+    edges ship to the wedge side and the wedges never hit an exchange
+    (guide §3.1; a checkpoint erases size stats, so auto-broadcast
+    cannot make this call); ``broadcast_wedges`` ships the wedge join's
+    second side too, so the whole enumeration is map-side. Otherwise
+    the closure is a SALTED shuffle join (guide §2.5): wedge rows
+    scatter over _WEDGE_SALT deterministic salts and the edge side
+    replicates, so a hot (b, c) pair — which AQE's skew split cannot
+    divide, it is a single key — is bounded at 1/salt of its rows per
+    task."""
     e1 = oriented.select(F.col("u").alias("a"), F.col("v").alias("b"),
                          F.col("kv").alias("kb"))
     e2 = oriented.select(F.col("u").alias("a"), F.col("v").alias("c"),
                          F.col("kv").alias("kc"))
-    # wedge at the min corner a; order the two tips so the closing edge
-    # (b -> c) matches its stored orientation exactly once
-    wedges = (
-        e1.join(e2, "a")
-        .filter(F.col("kb") < F.col("kc"))
-        .select("a", "b", "c")
-    )
     e3 = oriented.select(F.col("u").alias("b"), F.col("v").alias("c"))
-    # the wedge set is Σ out-deg² rows — orders of magnitude bigger
-    # than the edge set (41M wedges from 1.2M edges on the sf0.1
-    # co-purchase graph). Shuffling it by (b, c) for the closure join
-    # dominated the operator, so when the MEASURED edge count fits a
-    # broadcast (row cap AND estimated bytes — fits_broadcast) the
-    # closing edges ship to the wedge side and the wedges never hit an
-    # exchange (guide §3.1; the checkpoint erases size stats, so
-    # auto-broadcast cannot make this call). Above the cap the closure
-    # is a SALTED shuffle join (guide §2.5): wedge rows scatter over
-    # _WEDGE_SALT deterministic salts and the edge side replicates,
-    # so a hot (b, c) pair — which AQE's skew split cannot divide, it
-    # is a single key — is bounded at 1/salt of its rows per task.
-    if fits_broadcast(n_edges, e3.schema,
-                      max_rows=_WEDGE_BROADCAST_MAX_EDGES):
-        return wedges.join(F.broadcast(e3), ["b", "c"]) \
-            .select("a", "b", "c")
+    if small and broadcast_wedges:
+        e2 = F.broadcast(e2)
+    wedges = e1.join(e2, "a").filter(F.col("kb") < F.col("kc")) \
+        .select("a", "b", "c")
+    if small:
+        return wedges.join(F.broadcast(e3), ["b", "c"]).select("a", "b", "c")
     w_s = wedges.withColumn(
         "_salt", F.pmod(F.xxhash64("a", "b", "c"), F.lit(_WEDGE_SALT)))
     e3_s = e3.withColumn(
@@ -1805,63 +1816,15 @@ def _truss_peel_fixpoint(und: DataFrame, need: int, max_iters: int,
     _oriented_triangle_triples) paid (guide §2.4/§1.2)."""
     if n_cur == 0:
         return und, 0
-    deg = (
-        und.select(F.col("_lo").alias("_n"))
-        .unionByName(und.select(F.col("_hi").alias("_n")))
-        .groupBy("_n")
-        .agg(F.count(F.lit(1)).alias("_d"))
-    )
-    dl = deg.select(F.col("_n").alias("_lo"), F.col("_d").alias("_dlo"))
-    dh = deg.select(F.col("_n").alias("_hi"), F.col("_d").alias("_dhi"))
-    if fits_broadcast(n_cur, deg.schema,
-                      max_rows=_WEDGE_BROADCAST_MAX_EDGES):
-        dl, dh = F.broadcast(dl), F.broadcast(dh)
-    klo = F.struct(F.col("_dlo").alias("d"), F.col("_lo").alias("n"))
-    khi = F.struct(F.col("_dhi").alias("d"), F.col("_hi").alias("n"))
-    cur = _ck_cut_stats(
-        und.join(dl, "_lo").join(dh, "_hi").select(
-            F.when(klo < khi, F.col("_lo")).otherwise(F.col("_hi"))
-            .alias("u"),
-            F.when(klo < khi, F.col("_hi")).otherwise(F.col("_lo"))
-            .alias("v"),
-            F.when(klo < khi, khi).otherwise(klo).alias("kv"),
-        ))
+    cur = _ck_cut_stats(_degree_oriented(und, n_cur))
     for _ in range(max_iters):
         small = fits_broadcast(n_cur, cur.schema,
                                max_rows=_WEDGE_BROADCAST_MAX_EDGES)
+        # at scale, one hash pass by the wedge corner (the checkpoint
+        # preserves it for both self-join sides)
         src_frame = cur if small else \
             cur.repartition("u").localCheckpoint(eager=False)
-        e1 = src_frame.select(F.col("u").alias("a"),
-                              F.col("v").alias("b"),
-                              F.col("kv").alias("kb"))
-        e2 = src_frame.select(F.col("u").alias("a"),
-                              F.col("v").alias("c"),
-                              F.col("kv").alias("kc"))
-        e3 = src_frame.select(F.col("u").alias("b"), F.col("v").alias("c"))
-        if small:
-            # broadcast regime: wedge AND closure joins build on the
-            # (measured-small) edge frame — the whole enumeration is
-            # map-side off the checkpointed RDD, zero exchanges before
-            # the support aggregation
-            wedges = e1.join(F.broadcast(e2), "a") \
-                .filter(F.col("kb") < F.col("kc")).select("a", "b", "c")
-            tris = wedges.join(F.broadcast(e3), ["b", "c"]) \
-                .select("a", "b", "c")
-        else:
-            # at-scale regime: one hash pass by the wedge corner (the
-            # checkpoint preserves it for both self-join sides), salted
-            # closure so a hot (b, c) pair can't pin one reducer
-            wedges = e1.join(e2, "a") \
-                .filter(F.col("kb") < F.col("kc")).select("a", "b", "c")
-            w_s = wedges.withColumn(
-                "_salt",
-                F.pmod(F.xxhash64("a", "b", "c"), F.lit(_WEDGE_SALT)))
-            e3_s = e3.withColumn(
-                "_salt",
-                F.explode(F.array(*[F.lit(i)
-                                    for i in range(_WEDGE_SALT)])))
-            tris = w_s.join(e3_s, ["b", "c", "_salt"]) \
-                .select("a", "b", "c")
+        tris = _wedge_closure(src_frame, small, broadcast_wedges=True)
         tri_edges = tris.select(
             F.explode(F.array(
                 F.struct(F.least("a", "b").alias("_lo"),

@@ -130,10 +130,6 @@ def _current_schema(db) -> str:
     return db.catalog.split_path(db._current_graph or "/default/")[0]
 
 
-def _indexes(db) -> list[dict]:
-    return list(getattr(db, "_indexes", {}).values())
-
-
 def _opt_int(v):
     return None if v is None else int(v)
 
@@ -441,7 +437,7 @@ PROCEDURES: dict[str, Procedure] = {p.name: p for p in [
               _list_functions),
     Procedure("gql.list_indexes", [], _INDEX,
               lambda db: [(d["name"], d["kind"], str(d["target"]))
-                          for d in _indexes(db)]),
+                          for d in db._indexes.values()]),
     Procedure("gql.list_graph_types", [],
               "graph_type_name string, schema_name string",
               lambda db: [(n, "default") for n in sorted(db._graph_types)]),
@@ -509,11 +505,11 @@ PROCEDURES: dict[str, Procedure] = {p.name: p for p in [
               _sample_data),
     Procedure("gql.list_text_indexes", [], "name string, target string",
               lambda db: [(d["name"], str(d["target"]))
-                          for d in _indexes(db) if d["kind"] == "TEXT"]),
+                          for d in db._indexes.values() if d["kind"] == "TEXT"]),
     Procedure("gql.describe_text_index", [("name", "string", None)], _INDEX,
               lambda db, name: [
                   (d["name"], d["kind"], str(d["target"]))
-                  for d in _indexes(db)
+                  for d in db._indexes.values()
                   if d["kind"] == "TEXT" and name in (None, d["name"])]),
     # -- model registry -------------------------------------------------------
     Procedure("gql.register_model", _MODEL_ARG + [("uri", "string", "")],

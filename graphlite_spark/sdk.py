@@ -42,11 +42,14 @@ class Session:
     def execute(self, gql: str, params: dict[str, Any] | None = None):
         merged = {**self.parameters, **(params or {})}
         prev = self.db._current_graph
-        if self._graph is not None:
-            self.db._current_graph = self._graph
+        mine = self.db._current_graph = self._graph or prev
         try:
             return self.db.execute(gql, params=merged or None)
         finally:
+            # a statement that set the graph (SESSION SET GRAPH, DROP
+            # GRAPH of it) sets this session's, not the engine's
+            if self.db._current_graph != mine:
+                self._graph = self.db._current_graph
             self.db._current_graph = prev
 
     def transaction(self) -> "Transaction":

@@ -197,6 +197,67 @@ def test_a_value_only_spark_can_widen_folds_the_table(spark):
     assert db.graph().nodes["Q"] is view
 
 
+def test_a_held_version_is_never_changed(spark):
+    # a version is one immutable mapping of frozen records: a statement
+    # publishes a new mapping, and one that fails publishes none
+    from graphlite_spark.dml import DmlError
+
+    db, _, edges = _social_db(spark, 11)
+    g = db.graph()
+    held = g.tables
+    records = dict(held)
+    views = {k: t.view for k, t in held.items()}
+    with pytest.raises(TypeError):
+        held[(False, "Person")] = None
+    assert db.execute("INSERT " + _PAIR)["rows_affected"] == 3
+    assert g.tables is not held
+    assert dict(held) == records
+    assert {k: t.view for k, t in held.items()} == views
+    assert all(not t.rows and not t.dead for t in held.values())
+    held = g.tables
+    with pytest.raises(DmlError, match="incident edges exist"):
+        db.execute(f"MATCH (p:Person {{pid: {edges[0][0]}}}) DELETE p")
+    assert g.tables is held
+
+
+@pytest.mark.parametrize("stmt", [
+    "TRUNCATE GRAPH /default/social",
+    "CREATE INDEX knows_adj ON KNOWS TYPE AdjacencyList",
+], ids=["truncate", "adjacency_index"])
+def test_rollback_restores_views_replaced_outside_dml(spark, stmt):
+    db, model, _ = _social_db(spark, 12)
+    g = db.graph()
+    views = {k: t.view for k, t in g.tables.items()}
+    db.execute("START TRANSACTION")
+    held = g.tables
+    db.execute(stmt)
+    assert g.tables[(True, "KNOWS")].view is not views[(True, "KNOWS")]
+    db.execute("ROLLBACK")
+    assert g.tables is held
+    assert {k: t.view for k, t in g.tables.items()} == views
+    _check_state(db, model)
+
+
+def test_keyed_label_compiles_on_raw_keys_after_an_unrelated_write(spark):
+    # a write publishes records for the tables it touches only: every
+    # other record keeps its declaration, so hop1 still reads Order from
+    # the PLACED row with the customer key pushed into the orders scan
+    from graphlite_spark.plans.inspect import summarize
+    from perfbench.workloads import READ_SHAPES
+
+    db = _tpch_db(spark)
+    g = db.graph()
+    order, placed = g.table("Order", False), g.table("PLACED", True)
+    db.execute("INSERT (:Region {r_regionkey: 77, r_name: 'NEW'})")
+    assert g.table("Region", False).key is None
+    assert g.table("Order", False) is order and order.key is not None
+    assert g.table("PLACED", True) is placed and placed.key is not None
+    s = summarize(db.query(READ_SHAPES["hop1"][0], {"k": 7}))
+    assert len(s.scans) == 1 and "orders" in s.scans[0]["location"], s.text
+    assert "EqualTo(o_custkey,7)" in ",".join(s.scans[0]["pushed_filters"])
+    assert s.joins == 0, s.text
+
+
 @pytest.mark.parametrize("case", [
     test_failing_statement_changes_no_table,
     test_a_value_only_spark_can_widen_folds_the_table,

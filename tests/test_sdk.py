@@ -34,6 +34,22 @@ def test_session_graph_isolation(db):
     assert db.query("MATCH (c:City) RETURN count(*) AS n").collect()[0].n == 2
 
 
+def test_session_set_graph_sets_the_sessions_graph(db):
+    # SESSION SET GRAPH through a session moves that session, not the
+    # engine's current graph
+    db.execute("CREATE GRAPH /default/g2")
+    db.execute("INSERT (:P {k: 1})")
+    db.execute("SESSION SET GRAPH /default/g2")
+    db.execute("INSERT (:P {k: 1}), (:P {k: 2})")
+    db.execute("SESSION SET GRAPH /default/sdk")
+    s = db.session()
+    s.execute("SESSION SET GRAPH /default/g2")
+    assert s.query("MATCH (p:P) RETURN count(*) AS n").collect()[0].n == 2
+    assert s.execute("MATCH (p:P) RETURN count(*) AS n").collect()[0].n == 2
+    assert db.query("MATCH (p:P) RETURN count(*) AS n").collect()[0].n == 1
+    assert db._current_graph == "/default/sdk"
+
+
 def test_transaction_context_manager_rollback(db):
     s = db.session()
     with pytest.raises(RuntimeError):
