@@ -126,9 +126,15 @@ class Staged:
             return
         schema = t.schema if t.schema is not None else T.StructType(
             [T.StructField(f.name, f.dataType) for f in t.base.schema])
-        for ty in [types] if types is not None else map(_inferred, rows):
-            schema = None if schema is None else _merged(schema, ty)
-        if schema is None:
+        tys = [types] if types is not None else [_inferred(r) for r in rows]
+        try:
+            for ty in tys:
+                schema = _merged(schema, ty)
+        except TypeError as clash:
+            if self.get(name, edge) is None:
+                raise DmlError(
+                    f"INSERT {name}: the values of property {clash.args[0]!r} "
+                    "share no column type") from None
             delta = local_frame(self.graph.spark, rows, types and T.StructType(
                 [T.StructField(c, dt) for c, dt in types.items()]))
             self.rewrite(name, edge, self.view(name, edge).unionByName(
@@ -167,9 +173,10 @@ _INTEGRAL = {T.ByteType, T.ShortType, T.IntegerType, T.LongType}
 _NUMERIC = _INTEGRAL | {T.FloatType, T.DoubleType}
 
 
-def _merged(schema: T.StructType, types: dict) -> T.StructType | None:
+def _merged(schema: T.StructType, types: dict) -> T.StructType:
     """``schema`` with the columns ``types`` adds, and its columns widened
-    to hold values of ``types``; None when one can't."""
+    to hold values of ``types``; a TypeError naming the first column
+    that can't be."""
     fields = {f.name: f.dataType for f in schema}
     for c, dt in types.items():
         old = fields.setdefault(c, dt)
@@ -181,7 +188,7 @@ def _merged(schema: T.StructType, types: dict) -> T.StructType | None:
         elif kinds <= _NUMERIC:
             fields[c] = T.LongType() if kinds <= _INTEGRAL else T.DoubleType()
         else:
-            return None
+            raise TypeError(c)
     return T.StructType([T.StructField(c, dt) for c, dt in fields.items()])
 
 

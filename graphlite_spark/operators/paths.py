@@ -9,13 +9,19 @@ Implemented as iterative DataFrame joins: each hop is one equi-join on
 the edge table, frontier deduped per iteration, lineage cut with
 localCheckpoint so plans stay bounded at high iteration counts — the
 standard Pregel-without-Pregel pattern that scales with the shuffle
-machinery (AQE handles frontier skew).
+machinery (AQE handles frontier skew). The point query
+``shortest_path_pair`` has a second regime: an edge table the session
+would broadcast anyway (``_broadcast_row_cap``) is brought to the
+driver once and searched there with vectorised levels, as the
+reference answers ShortestPath from its in-memory adjacency list: two
+Spark jobs per call instead of one or two per level.
 """
 
 from __future__ import annotations
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
+from pyspark.sql import types as T
 
 from ..graph import DST, SRC, PropertyGraph
 from .common import (_ck_cut_stats, _ck_observe, _ck_observe_keep_stats,
@@ -36,19 +42,24 @@ _WEDGE_SALT = 16
 _WEDGE_BROADCAST_MAX_EDGES = 4_000_000
 
 
-def _fits_auto_broadcast(df: DataFrame, n_rows: int) -> bool:
-    """True when a frame with a MEASURED row count is within the
-    session's autoBroadcastJoinThreshold by the column-width estimate
-    (mirrors the planner's own size gate, so callers can predict which
-    join regime their per-level joins will run in)."""
+def _broadcast_row_cap(df: DataFrame) -> int:
+    """Rows of ``df``'s schema that the session's
+    autoBroadcastJoinThreshold admits by the column-width estimate (0
+    when broadcasting is off): 655,360 two-long rows at the default
+    10 MB. Mirrors the planner's own size gate, so callers can predict
+    which join regime their per-level joins will run in."""
     try:
         thr = _parse_bytes(df.sparkSession.conf.get(
             "spark.sql.autoBroadcastJoinThreshold", "10485760"))
     except Exception:
         thr = 10 * 1024 * 1024
-    if thr <= 0:
-        return False
-    return n_rows * est_row_bytes(df.schema) <= thr
+    return max(thr, 0) // est_row_bytes(df.schema)
+
+
+def _fits_auto_broadcast(df: DataFrame, n_rows: int) -> bool:
+    """True when a frame with a MEASURED row count is within the
+    broadcast row cap."""
+    return n_rows <= _broadcast_row_cap(df)
 
 
 def _sorted_adjacency_if_big(e: DataFrame, n_rows: int) -> DataFrame:
@@ -223,42 +234,60 @@ def shortest_path_pair(
     anti-join), so the returned value is exact, batch size
     notwithstanding.
 
-    source/target: python ints or single-column one-row DataFrames
-    (frame form avoids a driver round-trip when endpoints come from a
-    query). Driver probes are O(1) counters per round, the repo
-    discipline for iterative operators.
+    Two regimes, switched on the measured edge count. When the edges
+    fit the session's broadcast row cap (``_broadcast_row_cap``: the
+    planner would ship them through the driver for a broadcast
+    anyway), the checkpointed adjacency is collected and
+    ``_driver_search`` runs the same level-synchronous search there:
+    two Spark jobs per call, the counting checkpoint and the collect.
+    Past the cap the search is a loop of DataFrame joins, batched
+    levels per round, whose driver probes are O(1) counters per round,
+    the repo discipline for iterative operators. The ``batch_hops`` to
+    ``grow_threshold`` knobs shape that loop only.
+
+    source/target: id values of the edges' id type, or single-column
+    DataFrames whose first row is the endpoint (the loop joins them
+    without a driver round-trip; the driver regime reads each with one
+    ``limit(1)`` collect).
     """
     spark = edges.sparkSession
+    # a join never matches a NULL endpoint; dropping them also keeps a
+    # long column int64 on its way to the driver (NULLs would widen it)
+    edges = edges.filter(F.col(SRC).isNotNull() & F.col(DST).isNotNull())
     e = edges.select(F.col(SRC).alias("_a"), F.col(DST).alias("_b"))
     if not directed:
         e = e.unionByName(
             edges.select(F.col(DST).alias("_a"), F.col(SRC).alias("_b"))
         ).distinct()
-    # cache the adjacency once (the bfs_distances discipline): every
-    # level of every batch joins e, and the deep-chain entry derives
-    # edges from a window lead() that would re-execute per level. Past
-    # the broadcast cap, both directions additionally get their own
-    # key-sorted layout before the cut so per-level SMJs never re-sort
-    # the edge side (see bfs_distances, r12).
+    # cache the adjacency once, counted (the bfs_distances discipline).
+    # Under the cap the cut is what the driver reads: counting first
+    # keeps a graph past the cap from paying a collect it throws away.
     e, _est = _ck_observe_keep_stats(e, F.count(F.lit(1)).alias("n"))
     _n_e = int(_est["n"] or 0)
+    if _fits_auto_broadcast(e, _n_e):
+        d = _driver_search(e.toArrow(), _endpoint(source),
+                           _endpoint(target), max_hops)
+        return local_frame(spark, [] if d is None else [(d,)], "dist: long")
+    # every level of every batch joins the adjacency, and the deep-chain
+    # entry derives edges from a window lead() that would re-execute
+    # per level; past the cap both directions get their own key-sorted
+    # layout before the cut so per-level SMJs never re-sort the edge
+    # side (see bfs_distances, r12). The backward ball walks edges
+    # REVERSED so dist_b is distance TO target.
     e = _sorted_adjacency_if_big(e, _n_e)
-    # backward ball walks edges REVERSED so dist_b is distance TO target
-    e_rev = e.select(F.col("_b").alias("_a"), F.col("_a").alias("_b"))
-    if not _fits_auto_broadcast(e, _n_e):
-        e_rev = e_rev.repartition("_a").sortWithinPartitions("_a") \
-            .localCheckpoint(eager=True)
+    e_rev = _sorted_adjacency_if_big(
+        e.select(F.col("_b").alias("_a"), F.col("_a").alias("_b")), _n_e)
 
     def _one(v) -> DataFrame:
-        if isinstance(v, DataFrame):
-            c = v.columns[0]
-            # materialize the endpoint once: it seeds the visited set,
-            # whose union lineage is re-read by EVERY probe and meet
-            # check — an un-cut endpoint plan (often an orderBy+limit
-            # over a full table) would re-execute each time
-            return v.select(F.col(c).alias("node")).limit(1) \
-                .localCheckpoint(eager=False)
-        return local_frame(spark, [(v,)], "node: long")
+        if not isinstance(v, DataFrame):
+            v = local_frame(spark, [(v,)], T.StructType(
+                [T.StructField("node", e.schema["_a"].dataType)]))
+        # materialize the endpoint once: it seeds the visited set, whose
+        # union lineage is re-read by EVERY probe and meet check — an
+        # un-cut endpoint plan (often an orderBy+limit over a full
+        # table) would re-execute each time
+        return v.select(F.col(v.columns[0]).alias("node")).limit(1) \
+            .localCheckpoint(eager=False)
 
     sides = {
         "f": {"visited": _one(source).withColumn("dist", F.lit(0)),
@@ -351,6 +380,75 @@ def shortest_path_pair(
     if best > max_hops:
         return local_frame(spark, [], "dist: long")
     return local_frame(spark, [(best,)], "dist: long")
+
+
+def _endpoint(v):
+    """An endpoint's id value: a DataFrame's first value (None when it
+    has no row), else ``v``."""
+    if isinstance(v, DataFrame):
+        rows = v.limit(1).collect()
+        return rows[0][0] if rows else None
+    return v
+
+
+def _driver_search(adj, source, target, max_hops: int) -> int | None:
+    """``shortest_path_pair``'s search on an Arrow ``(_a, _b)`` edge
+    table held by the driver: the hop count source -> target, None when
+    unreachable within ``max_hops``.
+
+    Ids are dictionary-encoded to 0..n-1 (a hash pass, any id type), so
+    each ball is a dist array and each level one vectorised step over
+    the edge arrays: a boolean mask of the frontier gathered at the
+    ``from`` codes (``isin`` over dense codes), deduped, minus the
+    visited. The schedule is the loop's, one level at a time: the
+    smaller frontier grows, the first level that meets ends the
+    search, and radii never sum past ``max_hops``. Every meeting at
+    that first level has the same sum (the exactness argument in
+    ``shortest_path_pair``), so its minimum is the distance."""
+    import numpy as np
+    import pyarrow as pa
+    import pyarrow.compute as pc
+
+    if source is None or target is None:
+        return None
+    if source == target:
+        return 0
+    m = adj.num_rows
+    id_t = adj.schema.field("_a").type
+    ids = pa.chunked_array(
+        adj.column("_a").chunks + adj.column("_b").cast(id_t).chunks,
+        type=id_t).combine_chunks().dictionary_encode()
+    codes = ids.indices.to_numpy(zero_copy_only=False).astype(np.int64)
+    ends = pc.index_in(pa.array([source, target], type=id_t),
+                       value_set=ids.dictionary).to_pylist()
+    if None in ends:
+        return None
+    src, dst = codes[:m], codes[m:]
+    n = len(ids.dictionary)
+    # the backward ball walks edges reversed: its dist is the distance TO
+    # the target
+    sides = [{"from": src, "to": dst}, {"from": dst, "to": src}]
+    for side, end in zip(sides, ends):
+        side["dist"] = np.full(n, -1, dtype=np.int64)
+        side["dist"][end] = 0
+        side["frontier"] = np.array([end])
+        side["radius"] = 0
+    while sides[0]["radius"] + sides[1]["radius"] < max_hops:
+        side = min(sides, key=lambda s: len(s["frontier"]))
+        other = sides[1] if side is sides[0] else sides[0]
+        on = np.zeros(n, dtype=bool)
+        on[side["frontier"]] = True
+        reached = np.unique(side["to"][on[side["from"]]])
+        new = reached[side["dist"][reached] < 0]
+        if not len(new):
+            return None  # an exhausted ball with no meeting
+        side["radius"] += 1
+        side["dist"][new] = side["radius"]
+        side["frontier"] = new
+        meet = other["dist"][new]
+        if (meet >= 0).any():
+            return side["radius"] + int(meet[meet >= 0].min())
+    return None
 
 
 def closeness_centrality(

@@ -177,13 +177,9 @@ def _graph_op(fn: str, nodes: Optional[str] = "_id", **fixed):
 def _shortest_path_pair(db, src, dst, max_hops):
     e, _ = _graph_frames(db)
     # endpoints in the edge union's id domain
-    if dict(e.dtypes)["_src"] == "string":
-        src, dst, id_t = str(src), str(dst), "string"
-    else:
-        src, dst, id_t = int(src), int(dst), "long"
+    to_id = str if dict(e.dtypes)["_src"] == "string" else int
     return _op("paths").shortest_path_pair(
-        e, local_frame(db.spark, [(src,)], f"node: {id_t}"),
-        local_frame(db.spark, [(dst,)], f"node: {id_t}"), max_hops=max_hops)
+        e, to_id(src), to_id(dst), max_hops=max_hops)
 
 
 def _list_functions(db):

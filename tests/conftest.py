@@ -26,6 +26,20 @@ def spark():
     yield s
 
 
+@pytest.fixture(params=["default", "1"], ids=["driver", "spark_loop"])
+def path_regime(request, spark):
+    """Runs a test in both regimes of ``operators.paths.shortest_path_pair``:
+    at the session's autoBroadcastJoinThreshold the edges fit the
+    broadcast row cap and the search runs on the driver; at 1 byte the
+    cap is 0 and the loop of DataFrame joins runs."""
+    key = "spark.sql.autoBroadcastJoinThreshold"
+    old = spark.conf.get(key)
+    if request.param != "default":
+        spark.conf.set(key, request.param)
+    yield request.param
+    spark.conf.set(key, old)
+
+
 # ---------------------------------------------------------------------------
 # Two-tier suite (round-12; VERDICT r11 ask #1b): the full suite takes
 # ~52 min solo, which outlives the round driver's verify window — round

@@ -572,7 +572,7 @@ def test_shortest_path_pair_bidirectional(spark):
         assert got == ref.get(t), (t, got, ref.get(t))
 
 
-def test_shortest_path_pair_chain_branch(spark):
+def test_shortest_path_pair_chain_branch(spark, path_regime):
     """Default-tier slice of the bidirectional test's chain-plus-branch
     cases: directed, undirected, beyond the horizon, and s == t."""
     from graphlite_spark.operators.paths import shortest_path_pair
@@ -588,6 +588,45 @@ def test_shortest_path_pair_chain_branch(spark):
     assert d(21, 9, directed=False) == 8       # 21-20-3-4..9
     assert d(0, 11, max_hops=5) is None        # beyond horizon
     assert d(5, 5) == 0
+
+
+def test_shortest_path_pair_matches_bfs(spark, path_regime):
+    """Seeded parity with perfbench's queue BFS on 30-node random graphs, directed
+    and undirected, long and string ids: a reachable pair, an
+    unreachable one, one past the horizon and s == t."""
+    import random
+
+    from graphlite_spark.operators.common import local_frame
+    from graphlite_spark.operators.paths import shortest_path_pair
+    from perfbench.oracles import bfs_distance
+
+    rng = random.Random(11)
+    # nodes 0..24 wired at random; 25..29 a chain of their own, so some
+    # pairs are unreachable whatever the direction
+    edges = sorted({(rng.randrange(25), rng.randrange(25)) for _ in range(40)}
+                   | {(i, i + 1) for i in range(25, 29)})
+    for directed in (True, False):
+        walked = edges if directed else edges + [(b, a) for a, b in edges]
+        dist = {(s, t): bfs_distance(walked, s, t, 30)
+                for s in range(30) for t in range(30)}
+        far = max((p for p, d in dist.items() if d is not None), key=dist.get)
+        assert dist[far] >= 3
+        cases = {"reachable": far + (30,), "horizon": far + (dist[far] - 1,),
+                 "unreachable": min(p for p, d in dist.items() if d is None)
+                 + (6,),
+                 "same": (7, 7, 6)}
+        for to_id, ddl in ((int, "_src long, _dst long"),
+                           (str, "_src string, _dst string")):
+            e = local_frame(spark, [(to_id(a), to_id(b)) for a, b in edges],
+                            ddl)
+            for kind, (s, t, h) in cases.items():
+                want = bfs_distance(walked, s, t, h)
+                got = [r.dist for r in shortest_path_pair(
+                    e, to_id(s), to_id(t), max_hops=h,
+                    directed=directed).collect()]
+                assert got == ([] if want is None else [want]), \
+                    (kind, directed, to_id, s, t, h)
+                assert (want is None) == (kind in ("unreachable", "horizon"))
 
 
 def test_maximal_independent_set(spark):

@@ -942,7 +942,7 @@ def test_call_sketch_procedures(db):
         db.execute("CALL gql.hll_distinct('Person', 'nope')")
 
 
-def test_call_shortest_path_pair(db):
+def test_call_shortest_path_pair(db, path_regime):
     # directed chain A -> B -> C -> D plus a shortcut A -> C
     for n in ["A", "B", "C", "D"]:
         db.execute(f"INSERT (:Person {{name: '{n}'}})")

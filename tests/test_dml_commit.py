@@ -367,6 +367,21 @@ _PAIR = ("(:Person {pid: 97001, name: 'n97001', age: 30})"
          "(:Person {pid: 97002, name: 'n97002', age: 31})")
 
 
+def test_insert_of_a_new_label_with_clashing_values_is_refused(spark):
+    # the rows of a label the graph doesn't have yet share no type for
+    # v: there is no stored table for Spark to coerce them into
+    from graphlite_spark import GraphLiteSpark
+    from graphlite_spark.dml import DmlError
+
+    db = GraphLiteSpark(spark)
+    db.execute("CREATE GRAPH /default/clash")
+    db.execute("SESSION SET GRAPH /default/clash")
+    before = db.graph().tables
+    with pytest.raises(DmlError, match=r"New\b.*'v'"):
+        db.execute("INSERT (:New {v: 1}), (:New {v: 'x'})")
+    assert db.graph().tables is before
+
+
 def test_duplicate_insert_sees_delta_rows_and_not_tombstoned_ones(
         spark, monkeypatch):
     from graphlite_spark import dml
@@ -455,4 +470,74 @@ def test_write_kinds_job_budget(spark, monkeypatch):
             jobs[unit.kind] = len(sc.statusTracker().getJobIdsForGroup(group))
     assert {k: jobs[k] for k in WRITE_JOBS} == WRITE_JOBS
     assert cuts == []
+    _check_state(db, model)
+
+
+def _bfs_path(pairs, a, b) -> list[int]:
+    """One shortest directed path a .. b over ``pairs``."""
+    out: dict[int, list[int]] = {}
+    for s, d in pairs:
+        out.setdefault(s, []).append(d)
+    parent, frontier = {a: None}, [a]
+    while b not in parent:
+        nxt = []
+        for x in frontier:
+            for y in out.get(x, ()):
+                if y not in parent:
+                    parent[y] = x
+                    nxt.append(y)
+        frontier = nxt
+    path = [b]
+    while path[-1] != a:
+        path.append(parent[path[-1]])
+    return path[::-1]
+
+
+def test_shortest_path_pair_reads_its_writes(spark):
+    # through the delta-main view: the DETACH DELETE of a path's middle
+    # node masks its rows with tombstones, the shortcut and the new
+    # person are appended rows; the new person's id is its content hash
+    from perfbench.oracles import bfs_distance
+
+    db, model, _ = _social_db(spark, 12, local=True)
+
+    def hops(a, b):
+        return [r.dist for r in db.execute(
+            f"CALL gql.shortest_path_pair({a}, {b}, 20)").collect()]
+
+    def want(a, b):
+        d = bfs_distance(model.edge_pairs(), a, b, 20)
+        return [] if d is None else [d]
+
+    a = model.alive_pids()[5]
+    dist = {b: bfs_distance(model.edge_pairs(), a, b, 20)
+            for b in model.alive_pids()}
+    far = max((b for b, d in dist.items() if d is not None), key=dist.get)
+    path = _bfs_path(model.edge_pairs(), a, far)
+    assert len(path) >= 5 and hops(a, far) == [len(path) - 1]
+    mid = path[len(path) // 2]
+    db.execute(f"MATCH (p:Person {{pid: {mid}}}) DETACH DELETE p")
+    model.detach_delete(mid)
+    db.execute(f"MATCH (x:Person {{pid: {a}}}), (y:Person {{pid: {path[-2]}}}) "
+               "INSERT (x)-[:KNOWS {since: 2001}]->(y)")
+    model.insert_edge(a, path[-2], 2001)
+    assert hops(a, far) == want(a, far) == [2]
+    assert hops(a, mid) == want(a, mid) == []
+    db.execute("INSERT (:Person {pid: 97001, name: 'n97001', age: 30})")
+    db.execute(f"MATCH (x:Person {{pid: {far}}}), (y:Person {{pid: 97001}}) "
+               "INSERT (x)-[:KNOWS {since: 2002}]->(y)")
+    model.insert_person(97001, 30)
+    model.insert_edge(far, 97001, 2002)
+    new_id = db.query("MATCH (p:Person {pid: 97001}) RETURN id(p) AS i"
+                      ).collect()[0].i
+    assert abs(new_id) > 2 ** 53  # a double would round it
+    sc = spark.sparkContext
+    sc.setJobGroup("spp-jobs", "spp-jobs")
+    try:
+        got = hops(a, new_id)
+    finally:
+        sc.setJobGroup("spp-idle", "")
+    assert got == want(a, 97001) == [3]
+    # the adjacency's counting checkpoint, then its collect
+    assert len(sc.statusTracker().getJobIdsForGroup("spp-jobs")) == 2
     _check_state(db, model)

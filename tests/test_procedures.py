@@ -32,7 +32,7 @@ def _rows(df):
 
 
 # -- $param arguments ------------------------------------------------------
-def test_param_arguments_bind_like_literals(db):
+def test_param_arguments_bind_like_literals(db, path_regime):
     df = db.execute("CALL gql.shortest_path_pair(1, 3)")
     lit = _rows(df)
     assert [r.dist for r in df.collect()] == [2]

@@ -7,8 +7,10 @@ persons and four KNOWS edges per person, stored as parquet, and prints
 for each kind the median latency of its statements, the median number
 of Spark jobs they ran, and the median latency of the read-your-write
 query after them, collected. ``shortest_path_pair`` is timed over its
-CALL, which is its own read. Every answer is checked against
-``perfbench.oracles.WriteModel``; the run fails if one differs.
+CALL, which is its own read; its endpoints are named by the persons'
+node ids, looked up by pid before the clock starts (an INSERTed
+person's id is its content hash, not its pid). Every answer is checked
+against ``perfbench.oracles.WriteModel``; the run fails if one differs.
 
 The first round settles the JVM and is not reported. The session is
 ``local[1]`` with one shuffle partition, as in perfbench.
@@ -21,6 +23,7 @@ from __future__ import annotations
 
 import argparse
 import os
+import re
 import statistics
 import sys
 import tempfile
@@ -29,6 +32,16 @@ import time
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 EDGES_PER_PERSON = 4
+
+
+def by_node_id(db, call: str) -> str:
+    """``call``, a ``CALL gql.shortest_path_pair(a, b, hops)`` naming
+    persons by pid, with each pid replaced by that person's node id."""
+    a, b, hops = re.fullmatch(
+        r"CALL gql\.shortest_path_pair\((\d+), (\d+), (\d+)\)", call).groups()
+    ids = [db.query(f"MATCH (p:Person {{pid: {pid}}}) RETURN id(p) AS i")
+           .collect()[0].i for pid in (a, b)]
+    return f"CALL gql.shortest_path_pair({ids[0]}, {ids[1]}, {hops})"
 
 
 def main() -> None:
@@ -67,6 +80,9 @@ def main() -> None:
         failures = []
         for r in range(args.rounds):
             for unit in W.write_round(args.seed, r, model):
+                sc.setJobGroup("write_scaling-check", "endpoint lookups")
+                call = (by_node_id(db, unit.check_gql)
+                        if unit.kind == "shortest_path_pair" else None)
                 group = f"write_scaling-{r}-{unit.kind}"
                 sc.setJobGroup(group, group)
                 t0 = time.perf_counter()
@@ -74,7 +90,7 @@ def main() -> None:
                     got = [db.execute(s) for s in unit.statements]
                     rows = None
                 else:
-                    rows = [tuple(x) for x in db.execute(unit.check_gql).collect()]
+                    rows = [tuple(x) for x in db.execute(call).collect()]
                     got = []
                 ms = 1e3 * (time.perf_counter() - t0)
                 jobs = len(sc.statusTracker().getJobIdsForGroup(group))
