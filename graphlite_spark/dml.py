@@ -26,10 +26,10 @@ probe is still one job, a semi join with the matched ids). A statement
 reads only the graph version it started on (``Staged.version``), and
 staging publishes nothing: ``commit`` publishes every touched table in
 one new version, one assignment after the last fold, so a statement
-that raises changes no table. A
-table folds, one eager checkpoint of its view (``_ck_cut_stats``) that
-becomes its new base, only when a DataFrame rewrite staged it or its
-appended rows plus tombstones pass ``FOLD_AT``. Below that, its view is
+that raises changes no table. A table folds, one eager checkpoint of
+its view (``checkpoint_reset_stats``) that becomes its new base, only
+when a DataFrame rewrite staged it or its appended rows plus tombstones
+pass ``FOLD_AT``. Below that, its view is
 a filter on the base plus a local relation, and the base keeps its
 statistics.
 
@@ -60,7 +60,7 @@ from .gql import ast as A
 from .gql.compiler import (CompileError, ExprCompiler, Frame, QueryCompiler,
                            _ncol)
 from .gql.statements import InsertStmt, MatchMutateStmt
-from .operators.common import _ck_cut_stats, local_frame
+from .operators.common import checkpoint_reset_stats, local_frame
 
 # Rows a match may collect, and appended rows plus tombstones a table may
 # carry before it folds. Carrying costs each statement that touches the
@@ -199,8 +199,8 @@ def commit(graph: PropertyGraph, staged: Staged) -> dict:
 
     A table a DataFrame rewrite staged, or whose appended rows plus
     tombstones pass ``FOLD_AT``, is folded: its view checkpointed once,
-    eagerly, with Catalyst's size stats reset (``_ck_cut_stats``), and the
-    metrics ride those jobs. Uncut, n rewrites build an n-deep plan of
+    eagerly, with Catalyst's size stats reset
+    (``checkpoint_reset_stats``), and the metrics ride those jobs. Uncut, n rewrites build an n-deep plan of
     the rewrites' own plans that every later statement re-executes while
     the non-CBO join-stats product compounds per level (11 single-edge
     inserts once took 430 s); the cap keeps a delta's view flat, and the
@@ -216,7 +216,7 @@ def commit(graph: PropertyGraph, staged: Staged) -> dict:
             # splits every scan into ever more tiny tasks
             n = 1 if old is None or old.base is None \
                 else old.base.rdd.getNumPartitions()
-            t = t.over(_ck_cut_stats(t.view.coalesce(max(n, 1))))
+            t = t.over(checkpoint_reset_stats(t.view.coalesce(max(n, 1))))
         out[key] = t
     metrics = {k: v for o in staged._observations for k, v in o.get.items()}
     graph.publish(out)

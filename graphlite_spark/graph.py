@@ -102,6 +102,19 @@ class EdgeKeys:
     destination: NodeKey
 
 
+@dataclass(eq=False)
+class BaseEdges:
+    """An edge base's non-NULL ``(_src, _dst)`` on the driver, read at
+    most once while the base lives (``operators.paths``): ``pairs``, an
+    Arrow table once read, or else ``past``, a row count the base is
+    known to reach (0 before any read), so a base too big to hold is
+    never read twice for the same bound. Two calls racing on the first
+    read both read it, to the same result."""
+
+    pairs: object = None
+    past: int = 0
+
+
 @dataclass(frozen=True, eq=False)
 class Table:
     """The record of a node label or edge type ``name`` in a graph
@@ -118,7 +131,10 @@ class Table:
 
     ``view`` is None until ``composed``, and so are its parts: ``live``,
     the base rows no tombstone masks, and ``delta``, the local relation
-    of ``rows``, each None again when what it holds changes."""
+    of ``rows``, each None again when what it holds changes.
+    ``base_edges`` holds an edge base's pairs on the driver; the records
+    derived through ``appended`` and ``dropped`` share it, and a record
+    with a new base (``over``, a fold) starts without it."""
 
     name: str
     edge: bool
@@ -132,6 +148,7 @@ class Table:
     schema: T.StructType | None = None
     live: DataFrame | None = None
     delta: DataFrame | None = None
+    base_edges: BaseEdges = field(default_factory=BaseEdges)
 
     @property
     def df(self) -> DataFrame:

@@ -79,7 +79,7 @@ def local_frame(spark, rows, schema=None) -> DataFrame:
     return spark.createDataFrame(table, schema)
 
 
-def _ck_cut_stats(df: DataFrame) -> DataFrame:
+def checkpoint_reset_stats(df: DataFrame) -> DataFrame:
     """Eager localCheckpoint that also RESETS Catalyst's size stats.
 
     ``localCheckpoint`` truncates lineage but PRESERVES the optimized
@@ -130,7 +130,7 @@ def _ck_observe(df: DataFrame, *metrics):
     from pyspark.sql import Observation
 
     obs = Observation()
-    ck = _ck_cut_stats(df.observe(obs, *metrics))
+    ck = checkpoint_reset_stats(df.observe(obs, *metrics))
     return ck, obs.get
 
 
@@ -138,12 +138,12 @@ def _ck_observe_keep_stats(df: DataFrame, *metrics):
     """Like _ck_observe but a PLAIN eager localCheckpoint: Catalyst's
     size estimate (originStats) survives the cut. For frames that are
     (a) materialized once per call — so the compounding-stats disease
-    _ck_cut_stats exists for cannot start — and (b) deliberately left
-    visible to the join planner so it can pick the broadcast regime
-    (the BFS adjacency: every per-level join broadcasts it when it
-    fits). _ck_cut_stats here would reset the leaf to the scalar
-    default (Long.Max), silently flipping every per-level join to
-    sort-merge at ANY scale."""
+    checkpoint_reset_stats exists for cannot start — and (b)
+    deliberately left visible to the join planner so it can pick the
+    broadcast regime (the BFS adjacency: every per-level join
+    broadcasts it when it fits). checkpoint_reset_stats here would
+    reset the leaf to the scalar default (Long.Max), silently flipping
+    every per-level join to sort-merge at ANY scale."""
     from pyspark.sql import Observation
 
     obs = Observation()

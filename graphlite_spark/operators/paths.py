@@ -10,22 +10,26 @@ the edge table, frontier deduped per iteration, lineage cut with
 localCheckpoint so plans stay bounded at high iteration counts — the
 standard Pregel-without-Pregel pattern that scales with the shuffle
 machinery (AQE handles frontier skew). The point query
-``shortest_path_pair`` has a second regime: an edge table the session
-would broadcast anyway (``_broadcast_row_cap``) is brought to the
-driver once and searched there with vectorised levels, as the
-reference answers ShortestPath from its in-memory adjacency list: two
-Spark jobs per call instead of one or two per level.
+``shortest_path_pair`` has a second regime: edges the session would
+broadcast anyway (``_broadcast_row_cap``) are searched on the driver
+with vectorised levels, as the reference answers ShortestPath from its
+in-memory adjacency list. On a graph version the driver keeps each
+edge base's pairs for as long as the base lives, so a call runs no
+Spark job once its bases have been read; a bare frame is checkpointed
+and collected, two jobs per call instead of one or two per level.
 """
 
 from __future__ import annotations
+
+from functools import reduce
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
-from ..graph import DST, SRC, PropertyGraph
-from .common import (_ck_cut_stats, _ck_observe, _ck_observe_keep_stats,
-                     _parse_bytes, est_row_bytes, fits_broadcast,
+from ..graph import DST, ID, SRC, PropertyGraph
+from .common import (_ck_observe, _ck_observe_keep_stats, _parse_bytes,
+                     checkpoint_reset_stats, est_row_bytes, fits_broadcast,
                      local_frame)
 
 _CHECKPOINT_EVERY = 4
@@ -42,24 +46,24 @@ _WEDGE_SALT = 16
 _WEDGE_BROADCAST_MAX_EDGES = 4_000_000
 
 
-def _broadcast_row_cap(df: DataFrame) -> int:
-    """Rows of ``df``'s schema that the session's
-    autoBroadcastJoinThreshold admits by the column-width estimate (0
-    when broadcasting is off): 655,360 two-long rows at the default
-    10 MB. Mirrors the planner's own size gate, so callers can predict
-    which join regime their per-level joins will run in."""
+def _broadcast_row_cap(spark, schema: T.StructType) -> int:
+    """Rows of ``schema`` that the session's autoBroadcastJoinThreshold
+    admits by the column-width estimate (0 when broadcasting is off):
+    655,360 two-long rows at the default 10 MB. Mirrors the planner's
+    own size gate, so callers can predict which join regime their
+    per-level joins will run in."""
     try:
-        thr = _parse_bytes(df.sparkSession.conf.get(
+        thr = _parse_bytes(spark.conf.get(
             "spark.sql.autoBroadcastJoinThreshold", "10485760"))
     except Exception:
         thr = 10 * 1024 * 1024
-    return max(thr, 0) // est_row_bytes(df.schema)
+    return max(thr, 0) // est_row_bytes(schema)
 
 
 def _fits_auto_broadcast(df: DataFrame, n_rows: int) -> bool:
     """True when a frame with a MEASURED row count is within the
     broadcast row cap."""
-    return n_rows <= _broadcast_row_cap(df)
+    return n_rows <= _broadcast_row_cap(df.sparkSession, df.schema)
 
 
 def _sorted_adjacency_if_big(e: DataFrame, n_rows: int) -> DataFrame:
@@ -205,7 +209,7 @@ def bfs_distances(
 
 
 def shortest_path_pair(
-    edges: DataFrame,
+    edges,
     source,
     target,
     max_hops: int = 20,
@@ -214,9 +218,9 @@ def shortest_path_pair(
     dedup_every: int = 4,
     max_batch_hops: int = 64,
     grow_threshold: int = 1024,
-) -> DataFrame:
-    """One-row (dist) frame: the shortest hop count source -> target
-    (empty if unreachable within max_hops).
+) -> DataFrame | list[tuple]:
+    """The shortest hop count source -> target, as one row (dist), none
+    if unreachable within max_hops.
 
     Bidirectional BFS — the point-query companion to bfs_distances:
     two balls grow from both endpoints, ALTERNATING on the smaller
@@ -234,22 +238,49 @@ def shortest_path_pair(
     anti-join), so the returned value is exact, batch size
     notwithstanding.
 
-    Two regimes, switched on the measured edge count. When the edges
-    fit the session's broadcast row cap (``_broadcast_row_cap``: the
-    planner would ship them through the driver for a broadcast
-    anyway), the checkpointed adjacency is collected and
-    ``_driver_search`` runs the same level-synchronous search there:
-    two Spark jobs per call, the counting checkpoint and the collect.
-    Past the cap the search is a loop of DataFrame joins, batched
+    ``edges`` is an ``(_src, _dst)`` frame, answered by a one-row frame,
+    or a graph version (``PropertyGraph.tables``), whose edge types are
+    searched together in their id domain (``_string_ids``), the endpoints
+    cast to it, and which is answered by driver rows, ``[(dist,)]`` or
+    ``[]``, for its caller to frame.
+
+    Two regimes, switched on the edge count. When the edges fit the
+    session's broadcast row cap (``_broadcast_row_cap``: the planner
+    would ship them through the driver for a broadcast anyway),
+    ``_driver_search`` runs the level-synchronous search on the driver.
+    A version's adjacency is then built there from arrays the driver
+    already holds (``_version_adjacency``): each edge base is read once
+    while it lives, so only the first call on a base runs a Spark job.
+    A frame is checkpointed with its count and collected: two jobs per
+    call. Past the cap the search is a loop of DataFrame joins, batched
     levels per round, whose driver probes are O(1) counters per round,
     the repo discipline for iterative operators. The ``batch_hops`` to
     ``grow_threshold`` knobs shape that loop only.
 
-    source/target: id values of the edges' id type, or single-column
-    DataFrames whose first row is the endpoint (the loop joins them
-    without a driver round-trip; the driver regime reads each with one
-    ``limit(1)`` collect).
+    source/target: id values, or single-column DataFrames whose first
+    row is the endpoint (the loop joins them without a driver
+    round-trip; the driver regime reads each with one ``limit(1)``
+    collect).
     """
+    loop = (max_hops, directed, batch_hops, dedup_every, max_batch_hops,
+            grow_threshold)
+    if isinstance(edges, DataFrame):
+        d = _pair_distance(edges, source, target, *loop)
+        return local_frame(edges.sparkSession, [] if d is None else [(d,)],
+                           "dist: long")
+    strings = _string_ids(edges)
+    to_id = str if strings else int
+    source, target = to_id(source), to_id(target)
+    adj = _version_adjacency(edges, strings, directed)
+    d = (_driver_search(adj, source, target, max_hops) if adj is not None
+         else _pair_distance(edge_union(edges), source, target, *loop))
+    return [] if d is None else [(d,)]
+
+
+def _pair_distance(edges: DataFrame, source, target, max_hops, directed,
+                   batch_hops, dedup_every, max_batch_hops,
+                   grow_threshold) -> int | None:
+    """``shortest_path_pair`` over a frame: the distance, or None."""
     spark = edges.sparkSession
     # a join never matches a NULL endpoint; dropping them also keeps a
     # long column int64 on its way to the driver (NULLs would widen it)
@@ -265,9 +296,8 @@ def shortest_path_pair(
     e, _est = _ck_observe_keep_stats(e, F.count(F.lit(1)).alias("n"))
     _n_e = int(_est["n"] or 0)
     if _fits_auto_broadcast(e, _n_e):
-        d = _driver_search(e.toArrow(), _endpoint(source),
-                           _endpoint(target), max_hops)
-        return local_frame(spark, [] if d is None else [(d,)], "dist: long")
+        return _driver_search(e.toArrow(), _endpoint(source),
+                              _endpoint(target), max_hops)
     # every level of every batch joins the adjacency, and the deep-chain
     # entry derives edges from a window lead() that would re-execute
     # per level; past the cap both directions get their own key-sorted
@@ -314,11 +344,11 @@ def shortest_path_pair(
     while best is None:
         live = [s for s in sides.values() if s["alive"]]
         if not live:
-            return local_frame(spark, [], "dist: long")
+            return None
         side = min(live, key=lambda s: s["n"])
         other = sides["b"] if side is sides["f"] else sides["f"]
         if side["radius"] + other["radius"] >= max_hops:
-            return local_frame(spark, [], "dist: long")
+            return None
         lvl = side["frontier"]
         levels = []
         steps = min(side["batch"],
@@ -367,7 +397,7 @@ def shortest_path_pair(
         if side["n"] == 0:
             side["alive"] = False
             # an exhausted ball with no meeting means unreachable
-            return local_frame(spark, [], "dist: long")
+            return None
         side["visited"] = side["visited"].unionByName(nxt)
         side["frontier"] = nxt
         # sparse frontier = round-count-bound regime (long chains):
@@ -377,9 +407,7 @@ def shortest_path_pair(
             side["batch"] = min(side["batch"] * 2, max_batch_hops)
         if probe["meet"] is not None:
             best = int(probe["meet"])
-    if best > max_hops:
-        return local_frame(spark, [], "dist: long")
-    return local_frame(spark, [(best,)], "dist: long")
+    return best if best <= max_hops else None
 
 
 def _endpoint(v):
@@ -389,6 +417,138 @@ def _endpoint(v):
         rows = v.limit(1).collect()
         return rows[0][0] if rows else None
     return v
+
+
+def _id_types(version) -> set[str]:
+    """The Spark types of a graph version's id columns: every edge
+    type's ``_src``/``_dst`` and every label's ``_id``."""
+    return {t.view.schema[c].dataType.simpleString()
+            for (edge, _), t in version.items()
+            for c in ((SRC, DST) if edge else (ID,))}
+
+
+def _string_ids(version) -> bool:
+    """Whether a graph version's procedures compare ids as strings. A
+    graph can mix long-keyed registered tables with string content-hash
+    ids from pure-GQL inserts; under ANSI union coercion the string side
+    would be CAST to BIGINT and blow up mid-stage, so when id types
+    disagree anywhere the operators here, which join and compare ids
+    only, run on the string domain (random_walks folds non-numeric ids
+    through xxhash64)."""
+    types = _id_types(version)
+    return len(types) > 1 or "string" in types
+
+
+def edge_union(version, spark=None) -> DataFrame:
+    """A graph version's edges: every edge type's ``(_src, _dst)``, in
+    its id domain (``_string_ids``). ``spark`` frames a version without
+    edge types."""
+    return _union(version, spark, True, (SRC, DST), (SRC, DST))
+
+
+def node_union(version, spark, node_col: str = ID) -> DataFrame:
+    """A graph version's nodes: every label's ``_id`` as ``node_col``, in
+    its id domain (``_string_ids``)."""
+    return _union(version, spark, False, (ID,), (node_col,))
+
+
+def _union(version, spark, edge: bool, cols, names) -> DataFrame:
+    """``cols`` of every edge type (or label) of ``version``, named
+    ``names``, cast to strings where id types disagree."""
+    mixed = len(_id_types(version)) > 1
+    parts = [t.view.select(*(F.col(c).cast("string").alias(n) if mixed
+                             else F.col(c).alias(n)
+                             for c, n in zip(cols, names)))
+             for (e, _), t in sorted(version.items()) if e == edge]
+    if parts:
+        return reduce(DataFrame.unionByName, parts)
+    id_t = "string" if _string_ids(version) else "long"
+    return local_frame(spark, [], ", ".join(f"{n} {id_t}" for n in names))
+
+
+def _version_adjacency(version, strings: bool, directed: bool):
+    """A graph version's ``(_a, _b)`` edges as an Arrow table built on
+    the driver with no Spark job, or None when they are past the
+    broadcast row cap: per edge type, its base's pairs
+    (``_base_pairs``) minus the tombstones in ``dead``, plus the
+    appended ``rows``, in the version's id domain (strings when
+    ``strings``); undirected, both directions."""
+    import pyarrow as pa
+    from pyspark.sql.pandas.types import to_arrow_type
+
+    tables = [t for (edge, _), t in version.items() if edge]
+    id_t = T.StringType() if strings else \
+        tables[0].view.schema[SRC].dataType if tables else T.LongType()
+    cap = _broadcast_row_cap(tables[0].view.sparkSession, T.StructType(
+        [T.StructField("_a", id_t), T.StructField("_b", id_t)])) \
+        if tables else 0
+    to = to_arrow_type(id_t)
+    srcs, dsts = [pa.array([], to)], [pa.array([], to)]
+    for t in tables:
+        if t.base is not None:
+            pairs = _base_pairs(t, cap)
+            if pairs is None:
+                return None
+            src, dst = (pairs.column(c).combine_chunks() for c in (SRC, DST))
+            if t.dead:
+                keep = pa.array(_alive(src, dst, t.dead))
+                src, dst = src.filter(keep), dst.filter(keep)
+            srcs.append(src.cast(to))
+            dsts.append(dst.cast(to))
+        own = to_arrow_type(t.view.schema[SRC].dataType)
+        live = [(r[SRC], r[DST]) for r in t.rows
+                if r[SRC] is not None and r[DST] is not None]
+        srcs.append(pa.array([s for s, _ in live], own).cast(to))
+        dsts.append(pa.array([d for _, d in live], own).cast(to))
+    a, b = pa.concat_arrays(srcs), pa.concat_arrays(dsts)
+    if not directed:
+        a, b = pa.concat_arrays([a, b]), pa.concat_arrays([b, a])
+    return pa.table({"_a": a, "_b": b}) if len(a) <= cap else None
+
+
+def _base_pairs(t, cap: int):
+    """Edge table ``t``'s base ``(_src, _dst)`` without NULLs, as an
+    Arrow table, or None when the base has more than ``cap`` rows. The
+    base is read at most once per bound (``graph.BaseEdges``), in one
+    Spark job that collects no more than ``cap + 1`` rows."""
+    held = t.base_edges
+    if held.pairs is None and held.past <= cap:
+        got = (t.base.where(F.col(SRC).isNotNull() & F.col(DST).isNotNull())
+               .select(SRC, DST).limit(cap + 1).toArrow())
+        if got.num_rows > cap:
+            held.past = got.num_rows
+        else:
+            held.pairs = got
+    pairs = held.pairs
+    return pairs if pairs is not None and pairs.num_rows <= cap else None
+
+
+def _alive(src, dst, dead: frozenset):
+    """Which base pairs no edge tombstone in ``dead`` masks, a numpy
+    mask: ``(id, None)`` masks every edge leaving ``id``, ``(None, id)``
+    every edge entering it, and an exact pair that pair."""
+    import numpy as np
+    import pyarrow as pa
+    import pyarrow.compute as pc
+
+    def hit(col, values):
+        return pc.is_in(col, value_set=pa.array(list(values), col.type)) \
+            .to_numpy(zero_copy_only=False)
+
+    keep = np.ones(len(src), dtype=bool)
+    leaving = {s for s, d in dead if d is None}
+    entering = {d for s, d in dead if s is None}
+    exact = {k for k in dead if None not in k}
+    if leaving:
+        keep &= ~hit(src, leaving)
+    if entering:
+        keep &= ~hit(dst, entering)
+    if exact:
+        at = np.flatnonzero(hit(src, {s for s, _ in exact}))
+        keep[[i for i, s, d in zip(at, src.take(at).to_pylist(),
+                                   dst.take(at).to_pylist())
+              if (s, d) in exact]] = False
+    return keep
 
 
 def _driver_search(adj, source, target, max_hops: int) -> int | None:
@@ -783,11 +943,11 @@ def betweenness_centrality(
     # AND the DAG join, and a derived edge lineage (the chains entries
     # build edges with a window lead() over the event table) would
     # re-execute that window + its exchange once per level. Plain
-    # localCheckpoint (not _ck_cut_stats) on purpose: e is checkpointed
-    # once, so there is no round-compounding stats blowup, and keeping
-    # its size estimate lets the per-level frontier⋈edges join go
-    # broadcast when the edge set fits (guide §3.1) while staying a
-    # shuffle join at scale.
+    # localCheckpoint (not checkpoint_reset_stats) on purpose: e is
+    # checkpointed once, so there is no round-compounding stats blowup,
+    # and keeping its size estimate lets the per-level frontier⋈edges
+    # join go broadcast when the edge set fits (guide §3.1) while
+    # staying a shuffle join at scale.
     e = e.localCheckpoint(eager=True)
     vis, dmax = _bfs_sigma(e, sources, max_hops)
 
@@ -1031,7 +1191,7 @@ def weighted_sssp(
         )
         if int(st["n"] or 0) == 0:
             break
-        dist = _ck_cut_stats(
+        dist = checkpoint_reset_stats(
             dist.unionByName(improved)
             .groupBy("node")
             .agg(F.min("dist").alias("dist"))
@@ -1145,7 +1305,7 @@ def connected_components(
         )
         # checkpoint every round, with the convergence count computed
         # IN the materialization pass (_ck_observe — one action per
-        # round; the separate probe job is gone). _ck_cut_stats is
+        # round; the separate probe job is gone). checkpoint_reset_stats is
         # still load-bearing underneath: the round references labels
         # through THREE multiplicative joins, so a preserved
         # originStats estimate compounds as prev^3 per round (529k-
@@ -1301,7 +1461,7 @@ def k_core(
         if int(st["n_below"] or 0) == 0:
             break
         keep = deg.filter(F.col("deg") >= k).select("_a")
-        und = _ck_cut_stats(
+        und = checkpoint_reset_stats(
             und.join(keep, "_a", "left_semi")
             .join(keep.withColumnRenamed("_a", "_b"), "_b", "left_semi")
         )
@@ -1882,7 +2042,7 @@ def node2vec_walks(
 def _canon_simple_edges(edges: DataFrame, src: str, dst: str) -> DataFrame:
     """Canonical (_lo < _hi) distinct simple edges, lineage-cut."""
     a, b = F.col(src), F.col(dst)
-    return _ck_cut_stats(
+    return checkpoint_reset_stats(
         edges.select(F.least(a, b).alias("_lo"),
                      F.greatest(a, b).alias("_hi"))
         .filter(F.col("_lo") != F.col("_hi"))
@@ -1914,7 +2074,7 @@ def _truss_peel_fixpoint(und: DataFrame, need: int, max_iters: int,
     _oriented_triangle_triples) paid (guide §2.4/§1.2)."""
     if n_cur == 0:
         return und, 0
-    cur = _ck_cut_stats(_degree_oriented(und, n_cur))
+    cur = checkpoint_reset_stats(_degree_oriented(und, n_cur))
     for _ in range(max_iters):
         small = fits_broadcast(n_cur, cur.schema,
                                max_rows=_WEDGE_BROADCAST_MAX_EDGES)
@@ -1987,7 +2147,7 @@ def k_truss(
     edge can break other edges' triangles, so iterate to the fixpoint;
     rounds are bounded and non-convergence RAISES (house contract).
     Per-round lineage is cut with the stats-resetting checkpoint
-    (_ck_cut_stats) so driver stats stay O(1) per round. 2-truss = the
+    (checkpoint_reset_stats) so driver stats stay O(1) per round. 2-truss = the
     whole simple graph (support >= 0 always holds): returns it after
     one verification round.
     """
@@ -2619,7 +2779,7 @@ def label_propagation(
             # — so each broadcast frame is size-CHECKED first and the
             # round falls back to the full vote when the neighborhood
             # outgrows broadcastability (r7 review fix).
-            cand = _ck_cut_stats(
+            cand = checkpoint_reset_stats(
                 und.join(F.broadcast(
                     changed.select(F.col("node").alias("_b"))),
                     "_b", "left_semi")
@@ -2630,7 +2790,7 @@ def label_propagation(
                 vote_labels = labels
             else:
                 cand_edges = und.join(F.broadcast(cand), "_a", "left_semi")
-                needed = _ck_cut_stats(
+                needed = checkpoint_reset_stats(
                     cand_edges.select(F.col("_b").alias("node")).distinct())
                 if needed.count() > 2_000_000:
                     cand_edges = und
@@ -2960,7 +3120,7 @@ def _modularity_local_moves(
             # VERDICT r9 #4. The hash breaks the adversarial id
             # order; the round salt breaks repeats across rounds.)
             # The mover count is KNOWN from the probe: small mover
-            # sets broadcast explicitly (guide §3.1 — _ck_cut_stats
+            # sets broadcast explicitly (guide §3.1 — checkpoint_reset_stats
             # resets size stats, so auto-broadcast cannot see how
             # tiny these frames are), keeping the full edge frame
             # unshuffled in the fallback; big mover sets keep the
@@ -2991,7 +3151,7 @@ def _modularity_local_moves(
                            < F.col("_nm")))
                 .select("node", "_new")
             )
-            comm = _ck_cut_stats(
+            comm = checkpoint_reset_stats(
                 nxt.select("node", F.col("_cur").alias("c"), "k")
                 .join(applied, "node", "left")
                 .select("node", F.coalesce("_new", "c").alias("c"), "k")
@@ -3069,7 +3229,7 @@ def louvain_communities(
         # seed every plan of the next level; lazy checkpoints embed the
         # whole multi-level lineage into each plan build, and plain
         # eager ones carry the compounded sizeInBytes estimate across
-        # levels (see _ck_cut_stats). The NEXT level's totals ride
+        # levels (see checkpoint_reset_stats). The NEXT level's totals ride
         # these checkpoints' materialization jobs (_ck_observe).
         selfw, sst = _ck_observe(
             selfw.join(lab.select(F.col("_n").alias("node"),
@@ -3105,7 +3265,7 @@ def louvain_communities(
     if maps:
         # materialized once: the canonical groupBy AND the final join
         # both read the fold (two consumers of one composed plan)
-        mapping = _ck_cut_stats(mapping)
+        mapping = checkpoint_reset_stats(mapping)
     canonical = mapping.groupBy("cur").agg(F.min("node").alias("community"))
     return mapping.join(canonical, "cur").select("node", "community")
 
@@ -3216,7 +3376,7 @@ def leiden_communities(
         if not moved:
             break
         # ---- the Leiden step: refine BEFORE aggregating ----
-        comm = _ck_cut_stats(_refine_connected(canon, comm))
+        comm = checkpoint_reset_stats(_refine_connected(canon, comm))
         maps.append(comm)
         lab = comm.select(F.col("node").alias("_n"), F.col("c").alias("_c"))
         tagged = (
@@ -3262,7 +3422,7 @@ def leiden_communities(
             cm.select(F.col("node").alias("cur"), F.col("c").alias("_nc")),
             "cur").select("node", F.col("_nc").alias("cur"))
     if maps:
-        mapping = _ck_cut_stats(mapping)
+        mapping = checkpoint_reset_stats(mapping)
     canonical = mapping.groupBy("cur").agg(F.min("node").alias("community"))
     return mapping.join(canonical, "cur").select("node", "community")
 
@@ -3979,7 +4139,7 @@ def feature_propagation(
                 F.transform("_pv", lambda s: s.getField("_m"))
                 .alias("_v2"))
         )
-        feat = _ck_cut_stats(
+        feat = checkpoint_reset_stats(
             feat.join(mixed, "_n", "left")
             .select("_n", F.coalesce("_v2", "_v").alias("_v"))
         ).localCheckpoint(eager=False)
@@ -4023,7 +4183,7 @@ def katz_centrality(
             .groupBy(F.col("_b").alias("_n"))
             .agg(F.sum("_x").alias("_in"))
         )
-        x = _ck_cut_stats(
+        x = checkpoint_reset_stats(
             x.select("_n").join(contrib, "_n", "left")
             .select("_n",
                     (F.lit(float(beta))

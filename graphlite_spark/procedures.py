@@ -134,52 +134,27 @@ def _opt_int(v):
     return None if v is None else int(v)
 
 
-def _graph_frames(db, node_col: str = "_id"):
-    """The session graph's full edge union ``(_src, _dst)`` and node
-    union ``(node_col)`` (GraphIndexScan companions, operators/paths.py)."""
-    g = db.graph()
-    e_parts = [et.df.select("_src", "_dst") for et in g.edges.values()]
-    n_parts = [g.nodes_for_label(lbl).select("_id")
-               for lbl in g.node_labels()]
-    # a graph can mix long-keyed registered tables with string
-    # content-hash ids from pure-GQL inserts; under ANSI union coercion
-    # the string side would be CAST to BIGINT and blow up mid-stage —
-    # when id dtypes disagree anywhere, run the analytics on the STRING
-    # id domain (every operator here joins/compares ids only;
-    # random_walks folds non-numeric ids through xxhash64)
-    id_types = {t for p in e_parts + n_parts for _, t in p.dtypes}
-    id_t = "string" if len(id_types) > 1 or "string" in id_types else "long"
-    if len(id_types) > 1:
-        e_parts = [p.select(F.col("_src").cast("string").alias("_src"),
-                            F.col("_dst").cast("string").alias("_dst"))
-                   for p in e_parts]
-        n_parts = [p.select(F.col("_id").cast("string").alias("_id"))
-                   for p in n_parts]
-    e = (reduce(DataFrame.unionByName, e_parts) if e_parts
-         else local_frame(db.spark, [], f"_src {id_t}, _dst {id_t}"))
-    n = (reduce(DataFrame.unionByName, n_parts) if n_parts
-         else local_frame(db.spark, [], f"_id {id_t}"))
-    return e, n if node_col == "_id" else n.withColumnRenamed("_id", node_col)
-
-
 def _graph_op(fn: str, nodes: Optional[str] = "_id", **fixed):
-    """An entry running ``operators.paths.<fn>`` on the edge union and,
-    unless ``nodes`` is None, the node union with its id column named
-    ``nodes``; the CALL's arguments go in as keywords."""
+    """An entry running ``operators.paths.<fn>`` on the session graph's
+    edge union and, unless ``nodes`` is None, its node union with the id
+    column named ``nodes`` (GraphIndexScan companions); the CALL's
+    arguments go in as keywords."""
     def run(db, **kw):
-        e, n = _graph_frames(db, nodes or "_id")
-        frames = (e,) if nodes is None else (e, n)
-        return getattr(_op("paths"), fn)(*frames, **kw, **fixed)
+        version = db.graph().tables
+        paths = _op("paths")
+        frames = [paths.edge_union(version, db.spark)]
+        if nodes is not None:
+            frames.append(paths.node_union(version, db.spark, nodes))
+        return getattr(paths, fn)(*frames, **kw, **fixed)
 
     return run
 
 
 def _shortest_path_pair(db, src, dst, max_hops):
-    e, _ = _graph_frames(db)
-    # endpoints in the edge union's id domain
-    to_id = str if dict(e.dtypes)["_src"] == "string" else int
-    return _op("paths").shortest_path_pair(
-        e, to_id(src), to_id(dst), max_hops=max_hops)
+    # the graph's version: the operator searches its edges on the driver
+    # while they fit a broadcast, and answers driver rows
+    return _op("paths").shortest_path_pair(db.graph().tables, src, dst,
+                                           max_hops=max_hops)
 
 
 def _list_functions(db):
@@ -599,7 +574,7 @@ PROCEDURES: dict[str, Procedure] = {p.name: p for p in [
     Procedure("gql.shortest_path_pair",
               [("src", "any", REQUIRED), ("dst", "any", REQUIRED),
                ("max_hops", "long", 20)],
-              None, _shortest_path_pair),
+              "dist long", _shortest_path_pair),
     Procedure("gql.pagerank", [("num_iter", "long", 10)], None,
               _graph_op("pagerank")),
     Procedure("gql.connected_components", [], None,

@@ -5,6 +5,7 @@ statement atomicity, on the write_mix base graph of the benchmark
 from __future__ import annotations
 
 import functools
+import itertools
 
 import numpy as np
 import pytest
@@ -453,7 +454,7 @@ def test_write_kinds_job_budget(spark, monkeypatch):
     from perfbench import workloads as W
 
     cuts = []
-    monkeypatch.setattr(dml, "_ck_cut_stats",
+    monkeypatch.setattr(dml, "checkpoint_reset_stats",
                         lambda df: cuts.append(df) or df.localCheckpoint())
     db, model, _ = _social_db(spark, 10, local=True)
     sc = spark.sparkContext
@@ -493,21 +494,45 @@ def _bfs_path(pairs, a, b) -> list[int]:
     return path[::-1]
 
 
-def test_shortest_path_pair_reads_its_writes(spark):
-    # through the delta-main view: the DETACH DELETE of a path's middle
-    # node masks its rows with tombstones, the shortcut and the new
-    # person are appended rows; the new person's id is its content hash
+def _knows(db):
+    return db.graph().table("KNOWS", True)
+
+
+def _call_jobs(spark, db, gql: str) -> tuple[list, int]:
+    """A CALL's answer and the Spark jobs it ran."""
+    sc = spark.sparkContext
+    group = f"spp-jobs-{next(_CALLS)}"
+    sc.setJobGroup(group, group)
+    try:
+        rows = [r.dist for r in db.execute(gql).collect()]
+        return rows, len(sc.statusTracker().getJobIdsForGroup(group))
+    finally:
+        sc.setJobGroup("spp-idle", "")
+
+
+_CALLS = itertools.count()
+
+
+def _spp_write_history(spark) -> list:
+    """The DETACH DELETE of a path's middle node, a shortcut INSERT and
+    a new person, with ``CALL gql.shortest_path_pair`` checked against
+    the write model's BFS after each; returns the KNOWS base each call
+    read. A call on a base no call read before runs at most its one
+    collect, a later call on the same base no Spark job."""
     from perfbench.oracles import bfs_distance
 
     db, model, _ = _social_db(spark, 12, local=True)
+    bases = []
 
-    def hops(a, b):
-        return [r.dist for r in db.execute(
-            f"CALL gql.shortest_path_pair({a}, {b}, 20)").collect()]
-
-    def want(a, b):
-        d = bfs_distance(model.edge_pairs(), a, b, 20)
-        return [] if d is None else [d]
+    def hops(a, b, want_pid=None):
+        got, jobs = _call_jobs(
+            spark, db, f"CALL gql.shortest_path_pair({a}, {b}, 20)")
+        base = _knows(db).base
+        assert jobs <= (0 if any(base is x for x in bases) else 1)
+        bases.append(base)
+        d = bfs_distance(model.edge_pairs(), a, want_pid or b, 20)
+        assert got == ([] if d is None else [d])
+        return got
 
     a = model.alive_pids()[5]
     dist = {b: bfs_distance(model.edge_pairs(), a, b, 20)
@@ -521,8 +546,8 @@ def test_shortest_path_pair_reads_its_writes(spark):
     db.execute(f"MATCH (x:Person {{pid: {a}}}), (y:Person {{pid: {path[-2]}}}) "
                "INSERT (x)-[:KNOWS {since: 2001}]->(y)")
     model.insert_edge(a, path[-2], 2001)
-    assert hops(a, far) == want(a, far) == [2]
-    assert hops(a, mid) == want(a, mid) == []
+    assert hops(a, far) == [2]
+    assert hops(a, mid) == []
     db.execute("INSERT (:Person {pid: 97001, name: 'n97001', age: 30})")
     db.execute(f"MATCH (x:Person {{pid: {far}}}), (y:Person {{pid: 97001}}) "
                "INSERT (x)-[:KNOWS {since: 2002}]->(y)")
@@ -531,13 +556,109 @@ def test_shortest_path_pair_reads_its_writes(spark):
     new_id = db.query("MATCH (p:Person {pid: 97001}) RETURN id(p) AS i"
                       ).collect()[0].i
     assert abs(new_id) > 2 ** 53  # a double would round it
-    sc = spark.sparkContext
-    sc.setJobGroup("spp-jobs", "spp-jobs")
-    try:
-        got = hops(a, new_id)
-    finally:
-        sc.setJobGroup("spp-idle", "")
-    assert got == want(a, 97001) == [3]
-    # the adjacency's counting checkpoint, then its collect
-    assert len(sc.statusTracker().getJobIdsForGroup("spp-jobs")) == 2
+    assert hops(a, new_id, 97001) == [3]
     _check_state(db, model)
+    return bases
+
+
+def test_shortest_path_pair_reads_its_writes(spark):
+    # through the delta-main view: the DETACH DELETE of a path's middle
+    # node masks its rows with tombstones, the shortcut and the new
+    # person are appended rows; the new person's id is its content hash.
+    # No write folds KNOWS, so every call reads the one base
+    bases = _spp_write_history(spark)
+    assert all(b is bases[0] for b in bases)
+
+
+def test_shortest_path_pair_reads_its_writes_across_folds(
+        spark, monkeypatch):
+    # the same history with KNOWS folding mid-history: a call after a
+    # fold reads the new base once, and answers from it
+    from graphlite_spark import dml
+
+    monkeypatch.setattr(dml, "FOLD_AT", 2)
+    bases = _spp_write_history(spark)
+    assert len({id(b) for b in bases}) >= 2
+
+
+def test_rollback_answers_from_the_held_base(spark, monkeypatch):
+    # a fold inside a transaction gives KNOWS a new base; ROLLBACK puts
+    # back the held version's record, whose base the driver still holds
+    from graphlite_spark import dml
+    from perfbench.oracles import bfs_distance
+
+    monkeypatch.setattr(dml, "FOLD_AT", 0)
+    db, model, _ = _social_db(spark, 12, local=True)
+    a = model.alive_pids()[5]
+    dist = {b: bfs_distance(model.edge_pairs(), a, b, 20)
+            for b in model.alive_pids()}
+    far = max((b for b, d in dist.items() if d is not None), key=dist.get)
+    path = _bfs_path(model.edge_pairs(), a, far)
+    call = f"CALL gql.shortest_path_pair({a}, {far}, 20)"
+    before, _ = _call_jobs(spark, db, call)
+    assert before == [len(path) - 1]
+    held = _knows(db)
+    db.execute("START TRANSACTION")
+    db.execute(f"MATCH (x:Person {{pid: {a}}}), (y:Person {{pid: {path[-2]}}}) "
+               "INSERT (x)-[:KNOWS {since: 2001}]->(y)")
+    assert _knows(db).base is not held.base
+    assert _call_jobs(spark, db, call)[0] == [2]
+    db.execute("ROLLBACK")
+    assert _knows(db) is held
+    assert _call_jobs(spark, db, call) == (before, 0)
+
+
+def test_shortest_path_pair_on_mixed_long_and_string_ids(spark, path_regime):
+    # a label a pure-GQL INSERT creates has string content-hash ids, so
+    # the graph's ids mix types: the search runs on their string domain,
+    # and a long endpoint is named by its digits
+    db, model, _ = _social_db(spark, 12, local=True)
+    db.execute("INSERT (:Tag {name: 't1'})-[:TAGGED]->(:Tag {name: 't2'})")
+    db.execute("INSERT (:Tag {name: 't3'})")
+    t1, t2, t3 = [db.query(f"MATCH (t:Tag {{name: '{n}'}}) RETURN id(t) AS i"
+                           ).collect()[0].i for n in ("t1", "t2", "t3")]
+    assert all(isinstance(t, str) for t in (t1, t2, t3))
+    a, b = next(iter(model.edges.elements()))[:2]
+
+    def hops(x, y):
+        return [r.dist for r in db.execute(
+            f"CALL gql.shortest_path_pair({x}, {y}, 5)").collect()]
+
+    assert hops(f"'{t1}'", f"'{t2}'") == [1]
+    assert hops(f"'{t2}'", f"'{t1}'") == []
+    assert hops(f"'{t3}'", f"'{t3}'") == [0]
+    assert hops(a, b) == hops(f"'{a}'", f"'{b}'") == [1]
+    assert hops(a, f"'{t1}'") == []
+    assert db.execute("CALL gql.shortest_path_pair(1, 2) YIELD dist"
+                      ).columns == ["dist"]
+
+
+def test_version_adjacency_matches_the_view(spark):
+    # the driver's adjacency of a written version (base pairs minus
+    # tombstones, plus appended rows) answers as the edge view does,
+    # directed and undirected
+    from graphlite_spark.operators import paths
+    from perfbench import workloads as W
+
+    db, model, _ = _social_db(spark, 7, local=True)
+    for r in range(2):
+        for unit in W.write_round(7, r, model):
+            for s in unit.statements:
+                db.execute(s)
+    version = db.graph().tables
+    knows = version[(True, "KNOWS")]
+    assert knows.dead and knows.rows
+    view = paths.edge_union(version)
+    rng = np.random.default_rng(7)
+    alive = model.alive_pids()
+    found = 0
+    for directed in (True, False):
+        for _ in range(4):
+            a, b = (alive[int(i)] for i in rng.integers(len(alive), size=2))
+            got = paths.shortest_path_pair(version, a, b, max_hops=6,
+                                           directed=directed)
+            want = paths.shortest_path_pair(view, a, b, max_hops=6,
+                                            directed=directed)
+            assert got == [tuple(r) for r in want.collect()]
+            found += bool(got)
+    assert found >= 4

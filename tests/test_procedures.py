@@ -218,6 +218,7 @@ def test_list_procedures_lists_the_table_and_user_procedures(db):
     assert got["gql.k_truss"].parameters == "k long = 3"
     assert got["gql.list_graphs"].result == \
         "graph_name string, schema_name string, graph_path string"
+    assert got["gql.shortest_path_pair"].result == "dist long"
     db.execute("CREATE PROCEDURE app.my_proc() MATCH (p:Person) RETURN p.pid")
     assert set(listed()) == set(PROCEDURES) | {"app.my_proc"}
     db.execute("DROP PROCEDURE app.my_proc")

@@ -3,7 +3,11 @@
 Runs every __spark_entry__.queries() entry and its oracle_sql() twin,
 compares row count, column names, and order-insensitive values.
 
-Usage: python tools/oracle_check.py [sf_dir] [only_query ...]
+Usage: python tools/oracle_check.py [sf_dir=/root/testdata/sf0.01]
+       [only_query ...]
+
+The default is the scale 0.01 TPC-H data (TESTDATA.md), which every
+recorded check reads.
 """
 
 from __future__ import annotations
@@ -53,7 +57,7 @@ def _rows_to_set(cols, rows):
 
 
 def main():
-    sf_dir = sys.argv[1] if len(sys.argv) > 1 else "/root/testdata/sf0.001"
+    sf_dir = sys.argv[1] if len(sys.argv) > 1 else "/root/testdata/sf0.01"
     only = set(sys.argv[2:])
 
     import __spark_entry__ as entrymod
